@@ -29,15 +29,12 @@ import random
 import shutil
 import subprocess
 import sys
-import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORKLOADS = ("tpch-sf0.1", "pipeline-htap")
 BATCH_ROWS, BATCH_MALFORMED = 25_000, 50
 SMOKE_BATCH_ROWS, SMOKE_BATCH_MALFORMED = 2_000, 10
-# tables of the TPC-H warm-up pass
-WARMUP_SF = 0.001
 
 
 def parse_args(argv):
@@ -49,20 +46,6 @@ def parse_args(argv):
     p.add_argument("--smoke", action="store_true", help="sf0.001 inputs, small batches")
     p.add_argument("--prepare", metavar="RUN_DIR", help=argparse.SUPPRESS)
     return p.parse_args(argv)
-
-
-def wait_for_idle() -> float:
-    """bench.py's idle gate: wait until the 1-minute load average drops
-    below SPARK_GRAFT_IDLE_MAX (default 0.5), for at most
-    SPARK_GRAFT_IDLE_WAIT_SEC, then go on regardless.  The default wait
-    here is 1 s, not 240 s: a run has to end within its time limit, and
-    the load average is recorded in the report either way."""
-    limit = float(os.environ.get("SPARK_GRAFT_IDLE_MAX", "0.5"))
-    budget = float(os.environ.get("SPARK_GRAFT_IDLE_WAIT_SEC", "1"))
-    t0 = time.perf_counter()
-    while os.getloadavg()[0] >= limit and time.perf_counter() - t0 < budget:
-        time.sleep(1.0)
-    return time.perf_counter() - t0
 
 
 def prepare(args, cache: str, run_dir: str) -> dict:
@@ -79,29 +62,25 @@ def prepare(args, cache: str, run_dir: str) -> dict:
 
     sf = 0.001 if args.smoke else 0.1
     sf_dir, digest = datagen.ensure_tables(cache, sf)
-    warmup_dir, warmup_digest = datagen.ensure_tables(cache, WARMUP_SF)
-    manifest = {"sf": sf, "sf_dir": sf_dir, "warmup_dir": warmup_dir, "data_digest": digest,
-                "oracle": {sf_dir: {}, warmup_dir: {}}, "batches": []}
+    manifest = {"sf": sf, "sf_dir": sf_dir, "data_digest": digest, "oracle": {}, "batches": []}
 
     oracle_dir = os.path.join(cache, "oracle")
     os.makedirs(oracle_dir, exist_ok=True)
-    queries = workloads._registry(workloads.query_names(args.workload))
-    for tables, tables_digest in {sf_dir: digest, warmup_dir: warmup_digest}.items():
-        con = None
-        for q in queries:
-            if q.oracle is None:
-                continue
-            key = hashlib.sha256(f"{tables_digest}\0{q.name}\0{q.oracle}".encode()).hexdigest()[:24]
-            path = os.path.join(oracle_dir, f"{q.name}-{key}.pkl")
-            if not os.path.exists(path):
-                if con is None:
-                    from stonedb_spark.testing import duckdb_connection
+    con = None
+    for q in workloads._registry(workloads.query_names(args.workload)):
+        if q.oracle is None:
+            continue
+        key = hashlib.sha256(f"{digest}\0{q.name}\0{q.oracle}".encode()).hexdigest()[:24]
+        path = os.path.join(oracle_dir, f"{q.name}-{key}.pkl")
+        if not os.path.exists(path):
+            if con is None:
+                from stonedb_spark.testing import duckdb_connection
 
-                    con = duckdb_connection(tables)
-                with open(path + ".tmp", "wb") as f:
-                    pickle.dump(con.execute(q.oracle).df(), f)
-                os.replace(path + ".tmp", path)
-            manifest["oracle"][tables][q.name] = path
+                con = duckdb_connection(sf_dir)
+            with open(path + ".tmp", "wb") as f:
+                pickle.dump(con.execute(q.oracle).df(), f)
+            os.replace(path + ".tmp", path)
+        manifest["oracle"][q.name] = path
 
     if args.workload == "pipeline-htap":
         rows, malformed = (SMOKE_BATCH_ROWS, SMOKE_BATCH_MALFORMED) if args.smoke else (BATCH_ROWS, BATCH_MALFORMED)
@@ -113,7 +92,7 @@ def prepare(args, cache: str, run_dir: str) -> dict:
         batch_dir = os.path.join(run_dir, "htap", "batches")
         os.makedirs(batch_dir)
         # one batch for the warm-up, then enough for a pass every 3 s
-        passes = max(workloads.MIN_HTAP_PASSES, -(-int(args.seconds) // 3))
+        passes = max(workloads.MIN_PASSES, -(-int(args.seconds) // 3))
         n_batches = 1 + workloads.INGESTS_PER_PASS * passes
         first_key = orders.num_rows
         for i in range(n_batches):
@@ -137,10 +116,10 @@ def measure(args, manifest: dict, run_dir: str, trace_path: str) -> tuple[dict, 
     from tracing import Tracer
 
     tracer = Tracer(f"{args.workload}-seed{args.seed}-{os.getpid()}", enabled=bool(args.trace))
-    engine = workloads.Engine(manifest["sf_dir"], manifest["warmup_dir"], os.path.join(run_dir, "tmp"), tracer)
+    engine = workloads.Engine(manifest["sf_dir"], os.path.join(run_dir, "tmp"), tracer)
     rng = random.Random(args.seed)
     try:
-        cycles = engine.setup()
+        start_s, load_s = engine.start()
         runner = workloads.Runner(engine, tracer, manifest)
         ingest = None
         if args.workload == "tpch-sf0.1":
@@ -150,11 +129,12 @@ def measure(args, manifest: dict, run_dir: str, trace_path: str) -> tuple[dict, 
             ingest = workloads.Ingest(runner, h["table_dir"], manifest["batches"], h["malformed"],
                                       h["initial_rows"], h["initial_sum"])
             passes = workloads.run_pipeline_htap(runner, ingest, rng, args.seconds)
+        setup = (start_s, load_s, runner.warmup_s)
         if args.trace:
-            metrics = workloads.per_layer(runner, cycles, passes, ingest)
+            metrics = workloads.per_layer(runner, setup, passes, ingest, engine.peak_rss_mb())
             tracer.dump(trace_path)
         else:
-            metrics = workloads.end_to_end(runner.samples, cycles, engine.peak_rss_mb())
+            metrics = workloads.end_to_end(runner.samples, setup, engine.retained_heap_mb())
     finally:
         engine.close()
     units = workloads.PER_LAYER if args.trace else workloads.END_TO_END
@@ -174,7 +154,7 @@ def measure(args, manifest: dict, run_dir: str, trace_path: str) -> tuple[dict, 
         "data_digest": manifest["data_digest"],
         "batch_digests": [b["digest"] for b in manifest["batches"]],
         "timed_passes": passes,
-        "setup_cycles_s": [a + b for a, b in cycles],
+        "setup_s": {"session_start": start_s, "load_tables": load_s, "warmup": runner.warmup_s},
         "samples": [[s.kind, round(s.seconds, 4), s.ok, s.timed] for s in samples],
         "query_modules": sorted(m for m in sys.modules if m.startswith("stonedb_spark.queries.")),
         "trace_file": trace_path if args.trace else None,
@@ -208,7 +188,6 @@ def main(argv=None) -> int:
         SPARK_GRAFT_CPUS=str(len(os.sched_getaffinity(0))),
     )
     try:
-        idle_waited = wait_for_idle()
         loadavg_start = os.getloadavg()
         child = subprocess.run(
             [sys.executable, os.path.abspath(__file__), *(argv if argv is not None else sys.argv[1:]),
@@ -218,7 +197,7 @@ def main(argv=None) -> int:
         manifest = json.loads(child.stdout.strip().splitlines()[-1])
         trace_path = os.path.join(work, "traces", f"{args.workload}-seed{args.seed}-{os.getpid()}.json")
         report, result = measure(args, manifest, run_dir, trace_path)
-        report.update(idle_waited_s=idle_waited, loadavg_start=loadavg_start, loadavg_end=os.getloadavg())
+        report.update(loadavg_start=loadavg_start, loadavg_end=os.getloadavg())
     finally:
         shutil.rmtree(run_dir, ignore_errors=True)
     print(json.dumps(report))

@@ -23,7 +23,7 @@ ROOT = os.path.dirname(HERE)
 sys.path.insert(0, HERE)
 
 import datagen  # noqa: E402
-from tracing import Tracer  # noqa: E402
+from tracing import Tracer, parse_metric  # noqa: E402
 
 
 def _spec():
@@ -113,3 +113,13 @@ def test_disabled_tracer_records_nothing():
     with t.span("x") as s:
         assert s is None
     assert t.spans == []
+
+
+def test_parse_metric_reads_status_store_strings():
+    summary = "total (min, med, max (stageId: taskId))\n"
+    assert parse_metric("1,204") == 1204
+    assert parse_metric("350 ms") == pytest.approx(0.35)
+    assert parse_metric(summary + "2.5 s (0 ms, 1.2 s, 1.3 s (stage 3.0: task 9))") == pytest.approx(2.5)
+    assert parse_metric(summary + "1.5 m (1.0 s, 2.0 s, 3.0 s (stage 1.0: task 2))") == pytest.approx(90.0)
+    assert parse_metric(summary + "12.0 MiB (1.0 MiB, 4.0 MiB, 7.0 MiB (stage 1.0: task 3))") == 12 * 2**20
+    assert parse_metric(None) == 0.0

@@ -7,9 +7,9 @@ and are written out once, when the run ends.  With tracing off every
 
 ``SparkProfiler`` reads what an operation did from Spark's status
 stores: jobs, stages and task metrics per job group (one group per phase
-of an operation), and SQL metrics from the plan graph of every SQL
-execution the operation started.  The time spent reading them is
-counted as tracing overhead.
+of an operation), and the SQL metrics of every SQL execution the
+operation started.  The time spent reading them is counted as tracing
+overhead.
 """
 
 from __future__ import annotations
@@ -109,8 +109,9 @@ _PYTHON_METRICS = {
 }
 _SCAN_METRICS = {"number of files read": "scan_files"}
 _PYTHON_NODE = re.compile(r"Python|Pandas|Arrow")
+# units of the status store's metric strings, scaled to bytes and seconds
 _UNIT_SCALE = {"B": 1, "KiB": 1 << 10, "MiB": 1 << 20, "GiB": 1 << 30, "TiB": 1 << 40,
-               "ns": 1e-9, "ms": 1e-3, "s": 1.0, "m": 60.0, "h": 3600.0}
+               "ms": 1e-3, "s": 1.0, "m": 60.0, "h": 3600.0}
 
 
 class SparkProfiler:
@@ -118,11 +119,10 @@ class SparkProfiler:
 
     Status-store records are fetched as JSON, with the Jackson mapper
     Spark's REST API uses, so that one record costs one call into the JVM.
-    Create the profiler after the last session restart: stage and SQL
-    execution ids start again at 0 with every new SparkContext.
-    Operations run one at a time, so stages and SQL executions that
-    appear between two ``collect`` calls belong to the operation in
-    between.
+    The status stores are filled from Spark's listener bus, so every read
+    first waits until the bus has delivered all events.  Operations run
+    one at a time, so stages and SQL executions that appear between two
+    ``collect`` calls belong to the operation in between.
     """
 
     def __init__(self, spark):
@@ -130,7 +130,7 @@ class SparkProfiler:
         jvm = spark._jvm
         self._store = self._sc._jsc.sc().statusStore()
         self._sql = spark._jsparkSession.sharedState().statusStore()
-        self._acc = jvm.org.apache.spark.util.AccumulatorContext
+        self._bus = self._sc._jsc.sc().listenerBus()
         self._conv = jvm.scala.jdk.javaapi.CollectionConverters
         self._tracker = self._sc.statusTracker()
         scala_module = getattr(getattr(jvm.com.fasterxml.jackson.module.scala, "DefaultScalaModule$"), "MODULE$")
@@ -147,11 +147,13 @@ class SparkProfiler:
         self._sc.setJobGroup(group, group)
         self.overhead_s += time.perf_counter() - t0
 
-    def persisted_rdds(self) -> int:
+    def persisted(self) -> tuple[int, int]:
+        """Persisted RDDs, and the bytes their cached blocks hold."""
         t0 = time.perf_counter()
         n = self._sc._jsc.getPersistentRDDs().size()
+        cached = sum(info.memSize() + info.diskSize() for info in self._sc._jsc.sc().getRDDStorageInfo())
         self.overhead_s += time.perf_counter() - t0
-        return n
+        return n, cached
 
     def collect(self, groups: dict[str, str], detail: bool = True) -> dict[str, float]:
         """Counters of the operation that ran since the previous call.
@@ -161,6 +163,7 @@ class SparkProfiler:
         Without ``detail`` the call only moves past the operation.
         """
         t0 = time.perf_counter()
+        self._bus.waitUntilEmpty()
         out: dict[str, float] = defaultdict(float)
         stage_ids: set[int] = set()
         for phase, group in groups.items():
@@ -186,14 +189,14 @@ class SparkProfiler:
                     out[name] += stage[field] * scale
             out["spill_bytes"] += out.pop("disk_spill_bytes", 0.0)
             if n_exec > first_exec:
-                # execution ids run on across session restarts; list positions do not
+                # executionsList takes positions in the store, not execution ids
                 for execution in self._conv.asJava(self._sql.executionsList(first_exec, n_exec - first_exec)):
                     self._sql_metrics(execution.executionId(), out)
         self.overhead_s += time.perf_counter() - t0
         return dict(out)
 
     def _sql_metrics(self, eid: int, out: dict[str, float]) -> None:
-        strings = None
+        values = None
         seen: set[int] = set()
         for node in self._get(self._sql.planGraph(eid).allNodes()):
             if node["id"] in seen:
@@ -209,30 +212,15 @@ class SparkProfiler:
                 key = wanted.get(metric["name"])
                 if key is None:
                     continue
-                value = self._metric_value(metric)
-                if value is None:
-                    if strings is None:
-                        strings = self._get(self._sql.executionMetrics(eid))
-                    value = _parse_metric(strings.get(str(metric["accumulatorId"])))
-                out[key] += value
-
-    def _metric_value(self, metric: dict) -> float | None:
-        """Exact value from the live accumulator, in seconds for times."""
-        acc = self._acc.get(metric["accumulatorId"])
-        if acc.isEmpty():
-            return None
-        raw = max(0, acc.get().value())
-        kind = metric["metricType"]
-        if kind == "timing":
-            return raw * 1e-3
-        if kind == "nsTiming":
-            return raw * 1e-9
-        return float(raw)
+                if values is None:
+                    values = self._get(self._sql.executionMetrics(eid))
+                out[key] += parse_metric(values.get(str(metric["accumulatorId"])))
 
 
-def _parse_metric(text) -> float:
-    """Fallback: the total from a status-store metric string such as
-    ``"1,204"`` or ``"total (min, med, max)\n12.3 MiB (…)"``."""
+def parse_metric(text: str | None) -> float:
+    """The total of a status-store metric string, in bytes, seconds or
+    units: ``"1,204"``, ``"350 ms"``, or a per-task summary such as
+    ``"total (min, med, max (stageId: taskId))\n12.3 MiB (…)"``."""
     if text is None:
         return 0.0
     line = text.split("\n", 1)[1] if "\n" in text else text

@@ -4,25 +4,20 @@ Every workload runs in one process with one client on
 ``local[<cores>]``, closed loop: the next operation starts when the
 previous one has returned.  A run is
 
-1. set-up: ``SETUP_CYCLES`` cycles of session start
-   (``session.get_spark``) and catalog registration
-   (``catalog.load_tables``); ``setup_s`` is their median.  The first
-   cycle also launches the JVM.
-2. warm-up pass: every operation once, untimed.  The TPC-H queries run
-   on the sf0.001 tables there, which compiles their plans in two thirds
-   of the time; the pipeline operators run on the measured tables, where
-   a small-table warm-up leaves ``graph_pagerank`` a third slower on its
-   first timed run.
-3. timed passes, until ``seconds`` have gone by (at least one, and at
-   least ``MIN_HTAP_PASSES`` for ``pipeline-htap``).  The seed sets the
-   order of the operations in every pass.
+1. set-up: session start (``session.get_spark``, which launches the
+   JVM), catalog registration (``catalog.load_tables``) and a warm-up
+   pass of every operation, untimed, on the measured tables.
+   ``setup_s`` is the sum of the three.
+2. timed passes, until ``seconds`` have gone by and at least
+   ``MIN_PASSES`` have run.  The seed sets the order of the operations
+   in every pass.
 
-A query's first result on a set of tables is compared with its DuckDB
-oracle result; every later result with that first one.
+A query's first result is compared with its DuckDB oracle result; every
+later result with that first one.
 
 Workloads:
 
-* ``tpch-sf0.1``: the 11 odd-numbered ``tpch_*`` registry entries.
+* ``tpch-sf0.1``: five ``tpch_*`` registry entries (``tpch_names``).
 * ``pipeline-htap``: two pipeline operators (``multimodal_wav_decode``:
   a ``mapInPandas`` codec round trip in Python workers;
   ``graph_pagerank``: an iterative multi-job loop with checkpoints) and
@@ -47,19 +42,18 @@ from dataclasses import dataclass, field
 
 from tracing import SparkProfiler, Tracer
 
-SETUP_CYCLES = 3
 PIPELINE_OPS = ("multimodal_wav_decode", "graph_pagerank")
 INGESTS_PER_PASS = 2
-# The operators keep speeding up over their first timed runs; three
-# passes let each per-kind median drop the first, and keep the number of
-# samples per run the same on hosts where a pass takes a little more or
-# less than half the window.
-MIN_HTAP_PASSES = 3
+# Operations keep speeding up over their first timed runs, as the JIT
+# compiles more of the engine.  The median of four passes leaves out the
+# slow first one, and a fixed minimum keeps the number of samples per run
+# the same whatever the host's speed.
+MIN_PASSES = 4
 
 END_TO_END = {
     "total_s": "s",
     "geomean_s": "s",
-    "peak_rss_mb": "MB",
+    "retained_heap_mb": "MB",
     "setup_s": "s",
 }
 
@@ -70,7 +64,6 @@ PER_LAYER = {
     "catalog.scan_bytes": "bytes",
     "catalog.scan_rows": "count",
     "catalog.rows_scanned_per_result_row": "ratio",
-    "queries.warmup_s": "s",
     "queries.build_s": "s",
     "queries.build_jobs": "count",
     "queries.action_s": "s",
@@ -86,6 +79,7 @@ PER_LAYER = {
     "queries.spill_bytes": "bytes",
     "queries.result_rows": "count",
     "queries.persisted_rdds_leaked": "count",
+    "queries.cached_bytes_leaked": "bytes",
     "operators.python_total_s": "s",
     "operators.python_boot_s": "s",
     "operators.python_bytes_sent": "bytes",
@@ -107,6 +101,9 @@ PER_LAYER = {
     "sources.bytes_per_row": "bytes",
     "sources.write_amp": "ratio",
     "sources.persisted_rdds_leaked": "count",
+    "sources.cached_bytes_leaked": "bytes",
+    "bench.warmup_s": "s",
+    "bench.peak_rss_mb": "MB",
     "bench.latency_p50_s": "s",
     "bench.latency_p90_s": "s",
     "bench.self_s": "s",
@@ -154,57 +151,65 @@ class Sample:
 
 
 class Engine:
-    """The engine's session, restarted ``SETUP_CYCLES`` times in set-up."""
+    """The engine's session, started once per run."""
 
-    def __init__(self, sf_dir: str, warmup_dir: str, tmp_dir: str, tracer: Tracer):
+    def __init__(self, sf_dir: str, tmp_dir: str, tracer: Tracer):
         self.sf_dir = sf_dir
-        self.warmup_dir = warmup_dir
         self.tmp_dir = tmp_dir
         self.tracer = tracer
         self.spark = None
-        # stopped sessions stay referenced: catalog.load_tables keys its
-        # cache on id(session), which must not be reused by a new one
-        self._stopped: list = []
         self.jvm_pid = None
 
-    def setup(self) -> list[tuple[float, float]]:
+    def start(self) -> tuple[float, float]:
+        """Start the session and register the catalog; return the
+        seconds each took."""
         from stonedb_spark import get_spark, load_tables
 
-        cycles = []
-        for _ in range(SETUP_CYCLES):
-            if self.spark is not None:
-                self.spark.stop()
-                self._stopped.append(self.spark)
-            with self.tracer.span("bench.setup"):
-                t0 = time.perf_counter()
-                with self.tracer.span("session.get_spark"):
-                    self.spark = get_spark(
-                        "perfbench",
-                        extra_conf={
-                            # the engine's default driver heap (24g) is
-                            # sized for a 128 GiB host.  The heap is
-                            # committed and touched up front, so peak RSS
-                            # does not depend on when the collector
-                            # chose to grow it.
-                            "spark.driver.memory": "2g",
-                            "spark.driver.extraJavaOptions": (
-                                f"-Xms2g -XX:+AlwaysPreTouch -Djava.io.tmpdir={self.tmp_dir}"
-                            ),
-                            "spark.ui.showConsoleProgress": "false",
-                        },
-                    )
-                t1 = time.perf_counter()
-                with self.tracer.span("catalog.load_tables"):
-                    load_tables(self.spark, self.sf_dir)
-                t2 = time.perf_counter()
-            cycles.append((t1 - t0, t2 - t1))
-            self.spark.sparkContext.setLogLevel("ERROR")
-        if self.jvm_pid is None:
-            self.jvm_pid = int(self.spark._jvm.java.lang.ProcessHandle.current().pid())
-        return cycles
+        with self.tracer.span("bench.setup"):
+            t0 = time.perf_counter()
+            with self.tracer.span("session.get_spark"):
+                self.spark = get_spark(
+                    "perfbench",
+                    extra_conf={
+                        # the engine's default driver heap (24g) is sized
+                        # for a 128 GiB host
+                        "spark.driver.memory": "2g",
+                        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={self.tmp_dir}",
+                        "spark.ui.showConsoleProgress": "false",
+                    },
+                )
+            t1 = time.perf_counter()
+            with self.tracer.span("catalog.load_tables"):
+                load_tables(self.spark, self.sf_dir)
+            t2 = time.perf_counter()
+        self.spark.sparkContext.setLogLevel("ERROR")
+        self.jvm_pid = int(self.spark._jvm.java.lang.ProcessHandle.current().pid())
+        return t1 - t0, t2 - t1
 
     def peak_rss_mb(self) -> float:
+        """Peak resident set of the driver JVM plus this process.  The
+        heap starts at the JVM's default size and the collector grows it
+        as it sees fit, up to 2 GiB."""
         return (_vm_hwm_kb(self.jvm_pid) + _vm_hwm_kb("self")) / 1024.0
+
+    def retained_heap_mb(self) -> float:
+        """Heap still in use once the run's objects are released.  This
+        process's references to JVM objects are dropped first; then full
+        collections alternate with pauses in which Spark's ContextCleaner
+        removes the blocks, broadcasts and shuffles of collected RDDs,
+        until three readings agree within 1 MB.  What stays is what the
+        engine holds on to: cached blocks, catalog and status state."""
+        import gc
+
+        gc.collect()
+        jvm = self.spark._jvm
+        heap = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+        readings: list[float] = []
+        while len(readings) < 20 and (len(readings) < 3 or max(readings[-3:]) - min(readings[-3:]) > 1.0):
+            jvm.java.lang.System.gc()
+            readings.append(heap.getHeapMemoryUsage().getUsed() / 2**20)
+            time.sleep(0.3)
+        return readings[-1]
 
     def close(self) -> None:
         """Stop the session and the JVM, and wait for the JVM to exit."""
@@ -253,7 +258,7 @@ class Runner:
         self.samples: list[Sample] = []
         self.profiler = SparkProfiler(engine.spark) if tracer.enabled else None
         self.leaked = defaultdict(int)
-        self._checked: dict[tuple[str, str], object] = {}
+        self._checked: dict[str, object] = {}
         self._seq = 0
         self.warmup_s = 0.0
 
@@ -273,7 +278,7 @@ class Runner:
                 groups[name] = f"pb{self._seq}:{kind}:{name}"
                 self.profiler.set_group(groups[name])
 
-        before = self.profiler.persisted_rdds() if self.profiler else 0
+        before = self.profiler.persisted() if self.profiler else (0, 0)
         with self.tracer.span("bench.op", op=kind, timed=timed) as op_span:
             t0 = time.perf_counter()
             try:
@@ -287,16 +292,18 @@ class Runner:
                 sample.counters["raised"] = 1
         if self.profiler is not None:
             sample.counters.update(self.profiler.collect(groups, detail=timed))
-            self.leaked[layer] += self.profiler.persisted_rdds() - before
+            rdds, cached = self.profiler.persisted()
+            self.leaked[f"{layer}.persisted_rdds_leaked"] += rdds - before[0]
+            self.leaked[f"{layer}.cached_bytes_leaked"] += cached - before[1]
             for name in ("queries.build", "queries.action"):
                 sample.counters[name.split(".")[1] + "_s"] = self.tracer.total(name, op_span["id"])
         self.samples.append(sample)
         return sample
 
     # -- registry queries -------------------------------------------------
-    def query(self, q, timed: bool, sf_dir: str | None = None) -> Sample:
+    def query(self, q, timed: bool) -> Sample:
         spark = self.engine.spark
-        sf_dir = sf_dir or self.engine.sf_dir
+        sf_dir = self.engine.sf_dir
 
         def body(sample, phase):
             phase("build")
@@ -306,28 +313,26 @@ class Runner:
             with self.tracer.span("queries.action", query=q.name):
                 rows = df.collect()
             sample.counters["result_rows"] = len(rows)
-            return lambda: self._check(q.name, sf_dir, _rows_frame(rows, df.columns))
+            return lambda: self._check(q.name, _rows_frame(rows, df.columns))
 
         return self._run(q.name, "queries", timed, body)
 
-    def _check(self, name: str, sf_dir: str, got) -> bool:
-        """The first result of a query on a set of tables is checked
-        against its DuckDB oracle result (entries without an oracle only
-        have to run); every later one against that first result,
-        order-insensitively."""
+    def _check(self, name: str, got) -> bool:
+        """The first result of a query is checked against its DuckDB
+        oracle result (entries without an oracle only have to run); every
+        later one against that first result, order-insensitively."""
         from stonedb_spark.testing import compare_frames
 
-        key = (name, sf_dir)
-        if key not in self._checked:
-            expected = self.inputs["oracle"][sf_dir].get(name)
+        if name not in self._checked:
+            expected = self.inputs["oracle"].get(name)
             problems = [] if expected is None else compare_frames(got, _load(expected))
-            self._checked[key] = None if problems else got
-        elif self._checked[key] is None:
+            self._checked[name] = None if problems else got
+        elif self._checked[name] is None:
             problems = ["the first result failed its oracle check"]
         else:
-            problems = compare_frames(got, self._checked[key])
+            problems = compare_frames(got, self._checked[name])
         if problems:
-            print(f"perfbench: {name} on {sf_dir}: {problems[:3]}", file=sys.stderr)
+            print(f"perfbench: {name}: {problems[:3]}", file=sys.stderr)
         return not problems
 
 
@@ -468,60 +473,67 @@ def _registry(names):
 
 
 def tpch_names() -> list[str]:
-    # the odd-numbered half of the 22: a run of all 22 (a cold warm-up plus
-    # a timed pass, about 65 s) leaves too little of an hour for the ~50
-    # runs a full evaluation makes
-    return [f"tpch_q{i}" for i in range(1, 23, 2)]
+    # Five of the 22, so that a run fits a cold warm-up pass and four
+    # warm passes over the measured tables.  They are a scan-heavy
+    # aggregate (q1), a broadcast-hinted join (q5), a query that
+    # checkpoints during build() (q11), a correlated subquery (q17) and
+    # EXISTS / NOT EXISTS (q21).
+    return [f"tpch_q{i}" for i in (1, 5, 11, 17, 21)]
 
 
 def query_names(workload: str) -> list[str]:
     return tpch_names() if workload == "tpch-sf0.1" else list(PIPELINE_OPS)
 
 
-def run_tpch(runner: Runner, rng: random.Random, seconds: float) -> int:
-    queries = _registry(tpch_names())
-    order = list(queries)
-    rng.shuffle(order)
-    # warm up on the small tables: the plans compile there at two thirds
-    # of the cost of a pass over the measured tables
-    with runner.tracer.span("bench.warmup"):
-        for q in order:
-            runner.warmup_s += runner.query(q, timed=False, sf_dir=runner.engine.warmup_dir).seconds
+def _timed_passes(runner: Runner, rng: random.Random, seconds: float, items: list, run_item,
+                  after_pass=None, more=lambda: True) -> int:
     passes, t0 = 0, time.perf_counter()
-    while passes == 0 or time.perf_counter() - t0 < seconds:
-        rng.shuffle(order)
+    while (passes < MIN_PASSES or time.perf_counter() - t0 < seconds) and more():
+        rng.shuffle(items)
         with runner.tracer.span("bench.pass", n=passes):
-            for q in order:
-                runner.query(q, timed=True)
+            for item in items:
+                run_item(item)
+            if after_pass is not None:
+                after_pass()
         passes += 1
     return passes
 
 
+def run_tpch(runner: Runner, rng: random.Random, seconds: float) -> int:
+    order = _registry(tpch_names())
+    rng.shuffle(order)
+    with runner.tracer.span("bench.warmup"):
+        t0 = time.perf_counter()
+        for q in order:
+            runner.query(q, timed=False)
+        runner.warmup_s = time.perf_counter() - t0
+    return _timed_passes(runner, rng, seconds, order, lambda q: runner.query(q, timed=True))
+
+
 def run_pipeline_htap(runner: Runner, ingest: Ingest, rng: random.Random, seconds: float) -> int:
     ops = _registry(PIPELINE_OPS)
-    # on the measured tables: pagerank's plans differ with the table size
     with runner.tracer.span("bench.warmup"):
+        t0 = time.perf_counter()
         for q in ops:
-            runner.warmup_s += runner.query(q, timed=False).seconds
+            runner.query(q, timed=False)
         ingest.load(timed=False)
         ingest.fresh_read(timed=False)
         ingest.compact(timed=False)
         ingest.fresh_read(timed=False)
-    passes, t0 = 0, time.perf_counter()
-    while passes < MIN_HTAP_PASSES or time.perf_counter() - t0 < seconds:
-        if ingest.next_batch + INGESTS_PER_PASS > len(ingest.batches):
-            break
-        items = list(ops) + [None] * INGESTS_PER_PASS
-        rng.shuffle(items)
-        with runner.tracer.span("bench.pass", n=passes):
-            for item in items:
-                if item is None:
-                    ingest.load(timed=True)
-                    ingest.fresh_read(timed=True)
-                else:
-                    runner.query(item, timed=True)
-            ingest.compact(timed=True)
-        passes += 1
+        runner.warmup_s = time.perf_counter() - t0
+
+    def run_item(item):
+        if item is None:
+            ingest.load(timed=True)
+            ingest.fresh_read(timed=True)
+        else:
+            runner.query(item, timed=True)
+
+    passes = _timed_passes(
+        runner, rng, seconds, list(ops) + [None] * INGESTS_PER_PASS, run_item,
+        after_pass=lambda: ingest.compact(timed=True),
+        more=lambda: ingest.next_batch + INGESTS_PER_PASS <= len(ingest.batches),
+    )
     # the last compaction is checked like every other one
     ingest.fresh_read(timed=False)
     return passes
@@ -542,24 +554,27 @@ def _kind_medians(samples: list[Sample]) -> dict[str, float]:
     return {k: statistics.median(v) for k, v in by_kind.items()}
 
 
-def end_to_end(samples: list[Sample], cycles, peak_rss_mb: float) -> dict[str, float]:
+def end_to_end(samples: list[Sample], setup: tuple[float, float, float],
+               retained_heap_mb: float) -> dict[str, float]:
+    """``setup`` is (session start, catalog registration, warm-up pass)."""
     timed = [s for s in samples if s.timed and "raised" not in s.counters]
     medians = _kind_medians(timed)
     return {
         "total_s": sum(medians.values()),
         "geomean_s": math.exp(statistics.fmean(math.log(v) for v in medians.values())),
-        "peak_rss_mb": peak_rss_mb,
-        "setup_s": statistics.median(a + b for a, b in cycles),
+        "retained_heap_mb": retained_heap_mb,
+        "setup_s": sum(setup),
     }
 
 
-def per_layer(runner: Runner, cycles, passes: int, ingest: Ingest | None) -> dict[str, float]:
+def per_layer(runner: Runner, setup: tuple[float, float, float], passes: int,
+              ingest: Ingest | None, peak_rss_mb: float) -> dict[str, float]:
     """The per-layer metrics of a traced run."""
     samples = runner.samples
     timed = [s for s in samples if s.timed and "raised" not in s.counters]
     out = {name: 0.0 for name in PER_LAYER}
-    out["session.start_s"] = statistics.median(a for a, _ in cycles)
-    out["catalog.load_tables_s"] = statistics.median(b for _, b in cycles)
+    out["session.start_s"], out["catalog.load_tables_s"], out["bench.warmup_s"] = setup
+    out["bench.peak_rss_mb"] = peak_rss_mb
 
     # query layer: per-kind medians, summed over kinds (one pass's worth)
     by_kind = defaultdict(list)
@@ -570,9 +585,7 @@ def per_layer(runner: Runner, cycles, passes: int, ingest: Ingest | None) -> dic
         for key, name in _QUERY_COUNTERS.items():
             out[name] += statistics.median(c.get(key, 0.0) for c in counters)
     out["catalog.rows_scanned_per_result_row"] = out["catalog.scan_rows"] / max(1.0, out["queries.result_rows"])
-    out["queries.warmup_s"] = runner.warmup_s
-    out["queries.persisted_rdds_leaked"] = runner.leaked["queries"]
-    out["sources.persisted_rdds_leaked"] = runner.leaked["sources"]
+    out.update(runner.leaked)
 
     out["bench.latency_p50_s"] = statistics.median(s.seconds for s in timed)
     out["bench.latency_p90_s"] = _p90([s.seconds for s in timed])
@@ -605,7 +618,7 @@ def per_layer(runner: Runner, cycles, passes: int, ingest: Ingest | None) -> dic
             out[name] = sum(tracer.total(span, p) for p in pass_spans) / passes / INGESTS_PER_PASS
 
     out["bench.self_s"] = sum(tracer.self_times(p).get("bench.op", 0.0) for p in pass_spans) / passes
-    out["trace.total_s"] = end_to_end(samples, cycles, 0.0)["total_s"]
+    out["trace.total_s"] = end_to_end(samples, setup, 0.0)["total_s"]
     out["trace.overhead_s"] = runner.profiler.overhead_s
     out["trace.overhead_frac"] = runner.profiler.overhead_s / sum(s.seconds for s in samples)
     out["trace.spans"] = len(tracer.spans)
