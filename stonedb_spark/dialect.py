@@ -48,6 +48,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stonedb_spark.reuse import materialize
+
 # ---------------------------------------------------------------------------
 # MTR script → statements
 
@@ -11344,7 +11346,7 @@ def run_statement(run: MTRRun, stmt: str):
                 f"Table '{tname}' doesn't exist (MySQL error 1146 analog)"
             )
         tbl = run.spark.table(f"`{_physname(tname)}`")
-        tbl.limit(0).localCheckpoint(eager=True).write.insertInto(
+        materialize(tbl.limit(0), eager=True).write.insertInto(
             f"`{tname}`", overwrite=True
         )
         run.tables[tname.lower()].next_auto = 1  # TRUNCATE resets it
@@ -11470,9 +11472,7 @@ def run_statement(run: MTRRun, stmt: str):
                 ).select(*[F.col(f"`{c.name}`") for c in td.columns])
             else:
                 survivors = tbl
-            staged = survivors.unionByName(new_df).localCheckpoint(
-                eager=True
-            )
+            staged = materialize(survivors.unionByName(new_df), eager=True)
             staged.write.insertInto(f"`{td.name}`", overwrite=True)
             return None
         ins = re.sub(r"^\s*REPLACE\s+(INTO\s+)?", "INSERT INTO ", s, flags=re.I)
@@ -11486,7 +11486,7 @@ def run_statement(run: MTRRun, stmt: str):
             ).select(*[F.col(f"`{c.name}`") for c in td.columns])
         else:
             survivors = tbl
-        staged = survivors.unionByName(new_df).localCheckpoint(eager=True)
+        staged = materialize(survivors.unionByName(new_df), eager=True)
         staged.write.insertInto(f"`{td.name}`", overwrite=True)
         return None
     if re.match(r"^\s*INSERT\b", s, re.I):
@@ -11513,7 +11513,7 @@ def run_statement(run: MTRRun, stmt: str):
             sel = _upsert_select(
                 td, set_exprs, f"`{td.name}`", inc_ref, "spark"
             )
-            staged = run.sql(sel).localCheckpoint(eager=True)
+            staged = materialize(run.sql(sel), eager=True)
             staged.write.insertInto(f"`{td.name}`", overwrite=True)
             return None
         if re.search(r"\bVALUES?\s*\(", s, re.I) or re.search(
@@ -11585,7 +11585,7 @@ def run_statement(run: MTRRun, stmt: str):
             keep = run.sql(
                 _delete_keep_sql(f"`{tname}`", td, cond, order, n, "spark")
             )
-        staged = keep.localCheckpoint(eager=True)
+        staged = materialize(keep, eager=True)
         staged.write.insertInto(f"`{tname}`", overwrite=True)
         return None
     if re.match(r"^\s*DELETE\b", s, re.I) and not re.match(
@@ -11606,9 +11606,9 @@ def run_statement(run: MTRRun, stmt: str):
             td.seen_pk = None
             keeps.append((
                 td.name,
-                run.sql(_multi_delete_keep_sql(
+                materialize(run.sql(_multi_delete_keep_sql(
                     td, td.name, f"`{td.name}`", joinfrom, where, "spark"
-                )).localCheckpoint(eager=True),
+                )), eager=True),
             ))
         for tn, df in keeps:
             df.write.insertInto(f"`{tn}`", overwrite=True)
@@ -11704,7 +11704,7 @@ def run_statement(run: MTRRun, stmt: str):
                 rewrite_expr(m.group(3), "spark") if m.group(3) else None,
                 order, int(m.group(5)), "spark",
             )
-            staged = run.sql(sel).localCheckpoint(eager=True)
+            staged = materialize(run.sql(sel), eager=True)
             staged.write.insertInto(f"`{tname}`", overwrite=True)
             return None
         # PK-rewriting UPDATEs enforce uniqueness (issue1616):
@@ -11744,7 +11744,7 @@ def run_statement(run: MTRRun, stmt: str):
             else F.col(f"`{c.name}`")
             for c in td.columns
         ]
-        staged = tbl.select(*proj).localCheckpoint(eager=True)
+        staged = materialize(tbl.select(*proj), eager=True)
         if pk_assigned and not upd_ignore:
             dup = (
                 staged.groupBy(*[F.col(f"`{p}`") for p in td.pk])
@@ -11799,10 +11799,10 @@ def run_statement(run: MTRRun, stmt: str):
             td.seen_pk = None
             staged_writes.append((
                 td.name,
-                run.sql(_multi_update_sql(
+                materialize(run.sql(_multi_update_sql(
                     td, td.name, f"`{td.name}`", joinfrom, where,
                     assigns, "spark",
-                )).localCheckpoint(eager=True),
+                )), eager=True),
             ))
         for tn, df in staged_writes:
             df.write.insertInto(f"`{tn}`", overwrite=True)
@@ -11899,7 +11899,7 @@ def run_statement(run: MTRRun, stmt: str):
                         f"Out of range value for column '{cname}' during "
                         f"ALTER (MySQL error 1264 analog)"
                     )
-        staged = tbl.select(*proj).localCheckpoint(eager=True)
+        staged = materialize(tbl.select(*proj), eager=True)
         tout = newtd.name  # may differ: RENAME action within the ALTER
         run.sql(f"DROP TABLE IF EXISTS `{tname}`")
         run.sql(f"DROP TABLE IF EXISTS `{tout}`")
@@ -11969,7 +11969,7 @@ def run_script(
     """Execute a verbatim MTR script on Spark; return the
     ``designated``-th SELECT's result (default: last).  Every other
     SELECT is forced with count() so errors surface; DDL/DML execute
-    in order.  The designated result is checkpointed so the script's
+    in order.  The designated result is materialized so the script's
     own cleanup (DROP TABLE …) can't invalidate it.  When
     ``show_designated`` is set, the result is instead the Nth SHOW
     CREATE TABLE / DESCRIBE output (separately numbered)."""
@@ -12025,11 +12025,11 @@ def run_script(
                     # separately so adding them never shifts the
                     # SELECT designation of existing entries
                     if shows_seen == show_designated:
-                        result = out.localCheckpoint(eager=True)
+                        result = materialize(out, eager=True)
                     shows_seen += 1
                     continue
                 if seen == target and show_designated is None:
-                    result = out.localCheckpoint(eager=True)
+                    result = materialize(out, eager=True)
                 else:
                     out.count()
                 seen += 1

@@ -29,11 +29,11 @@ which LSH keeps near-linear.
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from stonedb_spark.functions.text import shingles
+from stonedb_spark.reuse import materialize
 
 # MinHash configuration shared with the DuckDB oracle SQL (pipeline.py).
 N_HASHES = 12
@@ -111,27 +111,15 @@ def _jaccard_from_shingles(sh: DataFrame, threshold: float) -> DataFrame:
     |A∩B| from the shingle-key equi-join, |A∪B| = |A|+|B|−|A∩B|.
 
     ``sh`` is referenced three times (sizes + both join sides);
-    checkpoint it so the upstream shingle explode runs once.  The stream
-    is linear in corpus size (~10-100× doc count) — the checkpoint's
-    MEMORY_AND_DISK storage spills rather than OOMs, and one spilled
+    materialize it so the upstream shingle explode runs once.  The
+    stream is linear in corpus size (~10-100× doc count); one spilled
     copy beats three recomputes of the explode + the scans feeding it.
-    Lazy localCheckpoint, not .persist(): a CacheManager persist is
-    keyed on the canonical plan (parquet path included), so a later
-    fresh build() of the same query silently reused this run's blocks —
-    cross-run result caching the bench contract forbids — and the entry
-    was never unpersisted (r12 verdict item 7).
 
-    ``sizes`` is likewise a lazy checkpoint (r13): the two size joins
-    (d1 and d2) each re-aggregated the whole stream — the r12 plan
-    carried TWO identical HashAggregate+Exchange subtrees that
-    ReuseExchange failed to fold — so the per-doc count now runs once
-    over the checkpointed stream instead of twice (guide §2.4)."""
-    sh = sh.localCheckpoint(eager=False)
-    sizes = (
-        sh.groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_sh"))
-        .localCheckpoint(eager=False)
-    )
+    ``sizes`` is materialized too: the two size joins (d1 and d2)
+    otherwise each re-aggregate the whole stream — ReuseExchange does
+    not fold the two identical HashAggregate+Exchange subtrees."""
+    sh = materialize(sh)
+    sizes = materialize(sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh")))
     a = sh.select(F.col("doc_id").alias("d1"), "shingle")
     b = sh.select(F.col("doc_id").alias("d2"), "shingle")
     inter = (
@@ -168,12 +156,11 @@ def jaccard_pairs(
     frequency cap): they explode the inverted-index join quadratically
     while contributing no discriminative signal.
 
-    r13 (guide §2.4, one exchange of the shingle stream): the cap is a
-    COUNT() window over the stream partitioned by shingle — the window's
-    required hashpartitioning(shingle) is the stream's only exchange —
-    instead of the old shape (a second full shingle explode feeding a
-    groupBy(shingle) aggregate, then an equi-join of the two streams:
-    2 explodes + 3 exchanges).  Identical semantics: the window counts
+    The cap is a COUNT() window over the stream partitioned by
+    shingle — the window's required hashpartitioning(shingle) is the
+    stream's only exchange — instead of a second full shingle explode
+    feeding a groupBy(shingle) aggregate, then an equi-join of the two
+    streams (2 explodes + 3 exchanges).  Identical semantics: the window counts
     exactly what the aggregate counted, and rows with count > max_df
     are dropped either way.  Skew note: a hot stop-shingle lands in one
     window group, but it did the same on the join/aggregate path; the
@@ -239,25 +226,21 @@ def minhash_lsh_pairs(
     only over LSH candidates (left-semi pushdown), so the quadratic
     verify cost is bounded by the candidate count, not n².
     """
-    # Checkpoint both plan-reused intermediates, sized to stay linear:
+    # Materialize both plan-reused intermediates, sized to stay linear:
     # sig is n_docs × 12 longs, cand is the (by-construction small) LSH
     # candidate pair set.  Without this, Catalyst recomputes the full
     # shingle→hash→aggregate pipeline once PER REFERENCE — the self-join
     # plus the two cand consumers made the un-reused plan ~12× slower
     # at sf0.1, and the multiplier is constant in data size so the same
-    # waste ships to the 100 TB run.  Lazy localCheckpoint, not
-    # .persist(): see _jaccard_from_shingles (cross-run CacheManager
-    # reuse + leak).  Checkpoint storage is MEMORY_AND_DISK: spill,
-    # don't OOM.
-    sig = minhash_signatures(docs, text_col, k).localCheckpoint(eager=False)
+    # waste ships to the 100 TB run.
+    sig = materialize(minhash_signatures(docs, text_col, k))
     bk = band_keys(sig)
-    cand = (
+    cand = materialize(
         bk.alias("x")
         .join(bk.alias("y"), ["band", "band_key"])
         .filter(F.col("x.doc_id") < F.col("y.doc_id"))
         .select(F.col("x.doc_id").alias("d1"), F.col("y.doc_id").alias("d2"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     # Verify ONLY over docs that appear in some candidate pair: the
     # left-semi prune bounds the quadratic intersection join by the LSH
@@ -319,15 +302,13 @@ def connected_components(
     halves diameter per round; the propagation loop below is the
     simpler plan with identical output.
 
-    Each round ends with ``localCheckpoint()`` — an iterative
-    DataFrame loop otherwise accretes one join per round into a plan
-    Catalyst re-optimizes (and re-executes) from scratch; on a real
-    cluster use ``spark.sparkContext.setCheckpointDir`` + ``checkpoint``
-    for fault-tolerant truncation.  The convergence test is an exact
-    DECIMAL(38,0) label-sum aggregate over the frame the checkpoint
-    materializes anyway (see ``_label_sum`` below).
+    Each round ends with ``materialize`` — an iterative DataFrame loop
+    otherwise accretes one join per round into a plan Catalyst
+    re-optimizes (and re-executes) from scratch.  The convergence test
+    is an exact DECIMAL(38,0) label-sum aggregate over the frame each
+    round materializes anyway (see ``_label_sum`` below).
 
-    Round 1 is FOLDED into initialization (r12): on identity labels the
+    Round 1 is FOLDED into initialization: on identity labels the
     first propagation is exactly ``least(src, min(dst))`` per source —
     one map-side-combinable aggregation straight off the edge list,
     replacing the distinct-nodes pass AND the first join round (every
@@ -338,14 +319,11 @@ def connected_components(
     min-of-4, OPTIMIZATION_r12.md).
     """
     # Symmetrize with ONE explode per pair row, not union(e, swap(e)):
-    # the union duplicated the whole upstream pair-generation subtree
+    # the union duplicates the whole upstream pair-generation subtree
     # (for dedup_clusters that is the quadratic jaccard self-join), so
-    # materializing the edge list executed it twice (r13, guide §2.4 —
-    # don't compute things twice).  Persist + unpersist stays: the edge
-    # list is consumed only by in-build actions, so the cache entry dies
-    # inside this build (no cross-run reuse).
+    # materializing the edge list would execute it twice.
     e = pairs.select(F.col(left).alias("src"), F.col(right).alias("dst"))
-    edges = (
+    edges = materialize(
         e.select(
             F.explode(
                 F.array(
@@ -357,13 +335,11 @@ def connected_components(
             ).alias("_e")
         )
         .select("_e.src", "_e.dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    labels = (
+    labels = materialize(
         edges.groupBy("src")
         .agg(F.least(F.col("src"), F.min("dst")).alias("comp"))
         .select(F.col("src").alias("node"), "comp")
-        .localCheckpoint(eager=False)
     )
 
     def one_round(lbl):
@@ -393,12 +369,11 @@ def connected_components(
     # near-clique graphs (diameter ≲ 2).  Raise it for long-chain
     # graphs where rounds ≫ and per-action latency dominates.
     #
-    # Convergence test (r12): labels are elementwise monotone
-    # NON-INCREASING, so the label SUM is strictly decreasing until the
-    # fixed point — "sum unchanged" ⇔ "no label changed".  One map-side-
-    # combinable aggregate on the frame the checkpoint materializes
-    # anyway, replacing the r11 shape (self-join of old vs new labels +
-    # LIMIT 1 count: an extra shuffle join per round — guide §2.4).
+    # Convergence test: labels are elementwise monotone NON-INCREASING,
+    # so the label SUM is strictly decreasing until the fixed point —
+    # "sum unchanged" ⇔ "no label changed".  One map-side-combinable
+    # aggregate on the frame each round materializes anyway, with no
+    # self-join of old vs new labels (an extra shuffle join per round).
     # DECIMAL(38,0) keeps the sum exact at any node-id magnitude/count.
     def _label_sum(lbl) -> int:
         row = lbl.agg(
@@ -415,14 +390,13 @@ def connected_components(
         steps = min(check_every, max_iter - done)
         new_labels = labels
         for _ in range(steps):
-            new_labels = one_round(new_labels).localCheckpoint(eager=False)
+            new_labels = materialize(one_round(new_labels))
         done += steps
         new_sum = _label_sum(new_labels)
         labels = new_labels
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
-    edges.unpersist()
     return labels
 
 
@@ -470,14 +444,14 @@ def connected_components_star(
 
     Same output contract as connected_components: (node, comp).
     """
-    e = (
+    e = materialize(
         pairs.select(
             F.least(F.col(left), F.col(right)).alias("a"),
             F.greatest(F.col(left), F.col(right)).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
 
     def _bidirect(edges):
@@ -507,7 +481,7 @@ def connected_components_star(
             .filter(F.col("x") != F.col("m"))
             .select(F.least("x", "m").alias("a"), F.greatest("x", "m").alias("b"))
         )
-        new_e = large.union(small).distinct().localCheckpoint()
+        new_e = materialize(large.union(small).distinct(), eager=True)
         changed = (
             new_e.exceptAll(e).limit(1).count() + e.exceptAll(new_e).limit(1).count()
         )
@@ -569,24 +543,16 @@ def contamination_report(
 
 class CorpusLSHIndex:
     """The build-once artifact for incremental dedup: the corpus's
-    banded MinHash keys plus its shingle rows, both checkpointed and
-    materialized so every subsequent batch probe is join-only work.
+    banded MinHash keys plus its shingle rows, both materialized so
+    every subsequent batch probe is join-only work.
     In a deployment both frames are tables partitioned by band_key /
-    bucketed by doc_id; here they are localCheckpoints (per-index-object
-    blocks, GC-cleaned — never CacheManager entries a later independent
-    build could silently reuse across runs)."""
+    bucketed by doc_id; here they are ``materialize``d, so dropping the
+    index object releases them."""
 
     def __init__(self, bands: DataFrame, shingles: DataFrame, k: int):
         self.bands = bands  # (band, band_key, corpus_id)
         self.shingles = shingles  # (doc_id, shingle)
         self.k = k
-
-    def unpersist(self) -> None:
-        # checkpoint blocks are owned by the frames' RDDs; dropping the
-        # index object releases them (ContextCleaner).  unpersist() is
-        # kept for API compatibility with persisted-frame callers.
-        self.bands.unpersist()
-        self.shingles.unpersist()
 
 
 def build_lsh_index(
@@ -596,12 +562,11 @@ def build_lsh_index(
     the shingle rows the Jaccard verifier needs).  Cost is one pass
     over the corpus; every later probe touches only (batch × matched
     candidates) of it via equi-/semi-joins."""
-    bands = (
+    bands = materialize(
         band_keys(minhash_signatures(corpus, text_col, k))
         .select("band", "band_key", F.col("doc_id").alias("corpus_id"))
-        .localCheckpoint(eager=False)
     )
-    shingles = _shingle_rows(corpus, text_col, k).localCheckpoint(eager=False)
+    shingles = materialize(_shingle_rows(corpus, text_col, k))
     bands.count()
     shingles.count()
     return CorpusLSHIndex(bands, shingles, k)
@@ -612,30 +577,22 @@ def probe_lsh_index(
     batch: DataFrame,
     text_col: str = "text",
     threshold: float = 0.5,
-    scoped_frames: list | None = None,
 ) -> DataFrame:
     """Verdict a batch against a prebuilt corpus index.  All work is
     batch-sized: batch signatures/shingles are computed fresh; the
-    corpus side is only touched through the persisted index frames
+    corpus side is only touched through the materialized index frames
     (band-key equi-join, then candidate-bounded semi-join on shingles).
-
-    ``scoped_frames``: when given, every batch-scoped persisted frame
-    is appended so the caller (e.g. a streaming fold) can unpersist
-    them once the verdicts are consumed.
     """
     k = index.k
-    sig_b = minhash_signatures(batch, text_col, k).localCheckpoint(eager=False)
+    sig_b = materialize(minhash_signatures(batch, text_col, k))
     bk_b = band_keys(sig_b).select(
         "band", "band_key", F.col("doc_id").alias("batch_id")
     )
-    cand = (
+    cand = materialize(
         bk_b.join(index.bands, ["band", "band_key"])
         .select("batch_id", "corpus_id")
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    if scoped_frames is not None:
-        scoped_frames.extend([sig_b, cand])
     cand_corpus = cand.select(F.col("corpus_id").alias("doc_id")).distinct()
     cand_batch = cand.select(F.col("batch_id").alias("doc_id")).distinct()
     sh = index.shingles.join(
@@ -656,7 +613,7 @@ def probe_lsh_index(
     hits = ordered.join(ver, ["d1", "d2"]).select(
         "batch_id", "corpus_id", "jaccard"
     )
-    # argmax per batch doc as a map-side-combinable aggregate (r12):
+    # argmax per batch doc as a map-side-combinable aggregate:
     # max(struct(jaccard, -corpus_id)) == the old ROW_NUMBER() OVER
     # (ORDER BY jaccard DESC, corpus_id ASC) rn=1, without the window's
     # extra sort (guide §2.3 "aggregate before you shuffle").

@@ -11,10 +11,14 @@ sides — the driver's compare sorts columns by name before hashing.
 from __future__ import annotations
 
 import importlib
+import logging
+import sys
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass(frozen=True)
@@ -26,6 +30,9 @@ class Query:
 
 
 _REGISTRY: dict[str, Query] = {}
+
+# Registry modules whose import raised; never retried.
+_FAILED: set[str] = set()
 
 # Modules that register queries on import.
 _MODULES = (
@@ -52,6 +59,25 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 
 
 def all_queries() -> dict[str, Query]:
+    """Every registered query.  A module whose import raises (e.g. an
+    oracle that reads a fixture this host lacks) contributes nothing: the
+    entries it registered before failing are rolled back, the failure is
+    logged once, and the module is not imported again."""
     for mod in _MODULES:
-        importlib.import_module(mod)
+        if mod in _FAILED:
+            continue
+        before = set(_REGISTRY)
+        try:
+            importlib.import_module(mod)
+        except Exception as exc:
+            _FAILED.add(mod)
+            # a failed import leaves no module object; entries from
+            # modules it imported successfully stay registered
+            for name in set(_REGISTRY) - before:
+                if _REGISTRY[name].build.__module__ not in sys.modules:
+                    del _REGISTRY[name]
+            _log.warning(
+                "query module %s not registered: %s: %s",
+                mod, type(exc).__name__, exc,
+            )
     return dict(_REGISTRY)

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from stonedb_spark.catalog import load_tables
 from stonedb_spark.functions.exact import DEC
 from stonedb_spark.queries import register
+from stonedb_spark.reuse import materialize
 
 
 # --------------------------------------------------------------------------
@@ -407,10 +408,8 @@ def dml_multi_delete(spark, sf_dir):
         .distinct()
     )
     # Both targets anti-join the SAME doomed frame (one join evaluation,
-    # mirroring MySQL's single pre-delete join pass).  Lazy
-    # localCheckpoint, not .persist(): no cross-run CacheManager reuse,
-    # no leaked cache entry.
-    doomed = doomed.localCheckpoint(eager=False)
+    # mirroring MySQL's single pre-delete join pass).
+    doomed = materialize(doomed)
     surv_s = (
         s.join(
             doomed.select("s_suppkey").distinct(),

@@ -17,8 +17,8 @@ Scale notes
 * Pair generation is per-order (bounded fan-out ~7 lines/order -> ~21
   pairs), never an unbounded self-join: linear in lineitem.
 * PageRank is 3 unrolled join+agg rounds over the edge list — each
-  round shuffles edges once on dst; the edge list is localCheckpoint'd
-  so the base subplan is materialized once, not re-derived per round
+  round shuffles edges once on dst; the edge list goes through
+  ``materialize`` so the base subplan runs once, not re-derived per round
   (same discipline as operators/dedup.py connected components).
 * Triangle counting orients edges from low to high (degree, id), the
   standard trick that caps wedge fan-out at O(sqrt(m)) per node, so
@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from stonedb_spark.catalog import load_tables
 from stonedb_spark.queries import register
+from stonedb_spark.reuse import materialize
 
 B = F.broadcast
 
@@ -95,23 +96,15 @@ LIMIT 25
 def graph_pagerank(spark, sf_dir):
     l = load_tables(spark, sf_dir)["lineitem"]  # noqa: E741
     pairs = _copurchase_pairs(l)
-    # r13 (r12 verdict items 5+7): BOTH reused frames are LAZY local
-    # checkpoints, so the single deg.count() below is the only setup
-    # action — it materializes edges and deg in one job instead of the
-    # old eager-checkpoint job + separate count (two of the ~5 jobs at
-    # sf0.1).  deg was a .persist() before: a CacheManager entry that
-    # was never unpersisted (leak); checkpoint blocks are GC-cleaned.
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)
-    # deg is read 4x (one contrib join per round + the rebase join);
-    # checkpoint so the edge aggregation runs once, not per reference
-    # (r11 shape re-aggregated the checkpointed edges 5x).
-    deg = (
-        edges.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=False)
+    # BOTH reused frames are materialized lazily, so the single
+    # deg.count() below is the only setup action — it materializes
+    # edges and deg in one job.
+    edges = materialize(
+        pairs.unionByName(pairs.select(F.col("v").alias("u"), F.col("u").alias("v")))
     )
+    # deg is read 4x (one contrib join per round + the rebase join);
+    # materialize so the edge aggregation runs once, not per reference.
+    deg = materialize(edges.groupBy("u").agg(F.count(F.lit(1)).alias("d")))
     n = deg.count()  # node count: one tiny job, bounded by |parts|
     # rank carries (u, r, d): the contribution r DIV d needs the SOURCE
     # node's rank AND degree, so shipping d inside the rank frame makes
@@ -184,8 +177,8 @@ FROM stats s CROSS JOIN tri t
 def graph_triangles(spark, sf_dir):
     l = load_tables(spark, sf_dir)["lineitem"]  # noqa: E741
     # lazy: the tri.count() below is the first consumer and materializes
-    # the checkpoint inside its own job (no separate setup job — §2.4)
-    pairs = _copurchase_pairs(l).localCheckpoint(eager=False)
+    # the pairs inside its own job (no separate setup job)
+    pairs = materialize(_copurchase_pairs(l))
     edges = pairs.unionByName(
         pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )

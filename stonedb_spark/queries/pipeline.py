@@ -19,6 +19,7 @@ from stonedb_spark.functions import text as T
 from stonedb_spark.operators import dedup as D
 from stonedb_spark.operators import similarity as S
 from stonedb_spark.queries import register
+from stonedb_spark.reuse import materialize
 
 # ---------------------------------------------------------------------------
 # shared DuckDB SQL fragments
@@ -184,12 +185,9 @@ ORDER BY d1, d2
 )
 def dedup_simhash(spark, sf_dir):
     t = load_tables(spark, sf_dir)
-    # lazy localCheckpoint: the self-join otherwise recomputes the
-    # 32-bit vote aggregation for each side (2× the heavy stage; output
-    # is 1 row/doc).  Not .persist(): a CacheManager entry is keyed on
-    # the canonical plan, so a later fresh build() would silently reuse
-    # this run's blocks (cross-run caching) and it was never unpersisted.
-    sim = D.simhash32(t["documents"]).localCheckpoint(eager=False)
+    # the self-join otherwise recomputes the 32-bit vote aggregation
+    # for each side (2× the heavy stage; output is 1 row/doc)
+    sim = materialize(D.simhash32(t["documents"]))
     a = sim.select(F.col("doc_id").alias("d1"), F.col("simhash"))
     b = sim.select(F.col("doc_id").alias("d2"), F.col("simhash").alias("sh2"))
     return (
@@ -227,14 +225,11 @@ def dedup_embedding_cos(spark, sf_dir):
     # n² dot products) runs as ONE vectorized einsum per Arrow batch —
     # interpreted per-pair array folds measured 89 s vs ~3 s here at
     # sf0.1, and the gap scales with the pair count.  The unit vectors
-    # are checkpointed (lazy, per-build — not a cross-run-reusable
-    # CacheManager persist): both join sides read the same n rows
-    # instead of re-normalizing per side.
+    # are materialized: both join sides read the same n rows instead of
+    # re-normalizing per side.
     t = load_tables(spark, sf_dir)
     e = t["embeddings"]
-    unit = e.select(
-        "vec_id", S.unit_vec(F.col("embedding")).alias("u")
-    ).localCheckpoint(eager=False)
+    unit = materialize(e.select("vec_id", S.unit_vec(F.col("embedding")).alias("u")))
     a = unit.select(F.col("vec_id").alias("v1"), F.col("u").alias("ua"))
     b = unit.select(F.col("vec_id").alias("v2"), F.col("u").alias("ub"))
     pair_dot = S.pair_dot_pandas()
@@ -396,8 +391,7 @@ def knn_ivf_probe(spark, sf_dir):
     # with identical (sim DESC, cid ASC) tie-breaks via struct(sim,
     # -cid) ordering).  ONE scan of embeddings, zero exchanges of any
     # n-row frame; the only shuffle-like step left is TakeOrdered's
-    # partial top-20 merge.  Honest A/B at sf0.1 (post cross-run-cache
-    # removal): 1.28 s → see OPTIMIZATION_r13.md.
+    # partial top-20 merge.
     t = load_tables(spark, sf_dir)
     e = t["embeddings"]
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
@@ -3672,15 +3666,15 @@ def emb_truncation_fidelity(spark, sf_dir):
             lambda acc, x: acc + x,
         )
 
-    # lazy localCheckpoint (not .persist()): reused by the three rank
-    # frames within this build only — no cross-run CacheManager reuse,
-    # no leaked cache entry (r12 verdict item 7 discipline).
-    dots = m.select(
-        "vec_id",
-        dot_prefix(64).alias("dot_full"),
-        dot_prefix(32).alias("dot_32"),
-        dot_prefix(16).alias("dot_16"),
-    ).localCheckpoint(eager=False)
+    # read by the three rank frames
+    dots = materialize(
+        m.select(
+            "vec_id",
+            dot_prefix(64).alias("dot_full"),
+            dot_prefix(32).alias("dot_32"),
+            dot_prefix(16).alias("dot_16"),
+        )
+    )
     # ROW_NUMBER() OVER (ORDER BY dot DESC, vec_id) without the
     # single-partition window: ascending key (-dot, vec_id) is the
     # identical total order (dots are exact integer milli-units, so
@@ -3813,7 +3807,7 @@ def knn_ivfpq_probe(spark, sf_dir):
 
     e = load_tables(spark, sf_dir)["embeddings"]
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    c, assign = S.ivf_index(e, sf_dir)
+    c, assign = S.ivf_index(e)
     probe = (
         c.crossJoin(F.broadcast(q))
         .select("cid", S.cosine(F.col("cvec"), F.col("qv")).alias("sim"))

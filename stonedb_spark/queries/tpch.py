@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from stonedb_spark.catalog import load_tables
 from stonedb_spark.functions.exact import DEC
 from stonedb_spark.queries import register
+from stonedb_spark.reuse import materialize
 
 B = F.broadcast
 
@@ -689,36 +690,25 @@ ORDER BY part_value DESC, p_partkey
 )
 def tpch_q11(spark, sf_dir):
     # The global 0.001×total threshold comes from the SAME grouped
-    # aggregate.  Three forms considered across rounds: (a) scalar
-    # subquery — re-executes the whole lineitem pipeline for the total
-    # (ReuseExchange misses on the self-referencing branch: TWO fact
-    # scans); (b) empty-frame window (round 10) — one pass, but drags
-    # all |parts| rows into ONE task (the single-partition WindowExec
-    # the r11 verdict flagged); (c) THIS form: persist the grouped
-    # aggregate (|parts| rows ≈ SF×200k — metadata-scale, ~300 MB at
-    # SF100), reduce it to a 1-row total with an ordinary partial agg,
-    # and crossJoin(broadcast(1 row)) back.  One fact scan, no
-    # single-partition window anywhere.  Idle A/B in PLANS.md.
-    #
-    # r13: the reuse is a lazy localCheckpoint, NOT .persist() — a
-    # CacheManager persist is keyed on the CANONICAL plan (which embeds
-    # the parquet path), so a fresh build() in a later bench run silently
-    # read the previous run's cached aggregate (measured: run1 2.9 s,
-    # run2 0.5 s) — cross-run result caching, which the bench contract
-    # forbids — and the entry was never unpersisted (r12 verdict item 7).
-    # A localCheckpoint is keyed on this build's own RDD: same one-scan
-    # reuse inside the run, no reuse across runs, blocks GC-cleaned.
+    # aggregate.  Three forms: (a) scalar subquery — re-executes the
+    # whole lineitem pipeline for the total (ReuseExchange misses on the
+    # self-referencing branch: TWO fact scans); (b) empty-frame window —
+    # one pass, but drags all |parts| rows into ONE task (a
+    # single-partition WindowExec); (c) THIS form: materialize the
+    # grouped aggregate (|parts| rows ≈ SF×200k — metadata-scale,
+    # ~300 MB at SF100), reduce it to a 1-row total with an ordinary
+    # partial agg, and crossJoin(broadcast(1 row)) back.  One fact scan,
+    # no single-partition window anywhere.  Idle A/B in PLANS.md.
     t = load_tables(spark, sf_dir)
     l, s, n, r = t["lineitem"], t["supplier"], t["nation"], t["region"]  # noqa: E741
     eur_supp = s.join(
         B(n.join(B(r.filter(r["r_name"] == "EUROPE")), n["n_regionkey"] == r["r_regionkey"])),
         s["s_nationkey"] == n["n_nationkey"],
     ).select("s_suppkey")
-    vpp = (
+    vpp = materialize(
         l.join(B(eur_supp), l["l_suppkey"] == F.col("s_suppkey"), "left_semi")
         .groupBy(l["l_partkey"].alias("p_partkey"))
         .agg(F.sum(_rev(l)).alias("val"))
-        .localCheckpoint(eager=False)
     )
     total = vpp.agg(
         (F.sum("val").cast("double") * F.lit(0.001)).alias("threshold")
@@ -869,27 +859,22 @@ def tpch_q15(spark, sf_dir):
     # pipeline — Spark's ReuseExchange misses because attribute dedup
     # on the self-referencing branch de-canonicalizes the exchanges —
     # so at 100 TB the fact table would be scanned and shuffled twice.
-    # The round-10 rank-window form avoided that but sorted all
-    # #suppliers rows in ONE task (the r11 verdict's flag).  THIS
-    # form materializes the aggregated frame (#suppliers = SF×10k rows —
-    # 4 orders below lineitem), reduces it to a 1-row scalar max with
-    # a partial agg, and equality-joins the broadcast max back — the
-    # TPC-H view definition's own shape, with no single-task sort.
+    # A rank-window form avoids that but sorts all #suppliers rows in
+    # ONE task.  THIS form materializes the aggregated frame
+    # (#suppliers = SF×10k rows — 4 orders below lineitem), reduces it
+    # to a 1-row scalar max with a partial agg, and equality-joins the
+    # broadcast max back — the TPC-H view definition's own shape, with
+    # no single-task sort.
     # Equality keeps max-revenue ties exactly as the subquery does.
-    # r13: lazy localCheckpoint instead of .persist() — same in-run
-    # reuse, but no canonical-plan CacheManager entry that a later bench
-    # run's fresh build() would silently hit (cross-run result caching)
-    # and that was never unpersisted (r12 verdict item 7; see tpch_q11).
     t = load_tables(spark, sf_dir)
     l, s = t["lineitem"], t["supplier"]  # noqa: E741
-    revenue = (
+    revenue = materialize(
         l.filter(
             (l["l_shipdate"] >= F.lit("1996-01-01").cast("timestamp"))
             & (l["l_shipdate"] < F.lit("1996-04-01").cast("timestamp"))
         )
         .groupBy(l["l_suppkey"].alias("supplier_no"))
         .agg(F.sum(_rev(l)).cast("double").alias("total_revenue"))
-        .localCheckpoint(eager=False)
     )
     mx = revenue.agg(F.max("total_revenue").alias("_max_rev"))
     top = (

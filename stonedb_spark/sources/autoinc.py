@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stonedb_spark.reuse import materialize
+
 _PID = "__autoinc_pid__"
 
 
@@ -42,14 +44,14 @@ def with_auto_increment(
     counter; explicit non-NULL ids are preserved and push the counter
     past themselves (MySQL rule).  Returns (stamped_df, new_counter).
 
-    The returned frame is materialized under a persist so the pid→offset
-    map computed in pass 1 stays valid for pass 2.
+    The input is materialized once so the pid→offset map computed in
+    pass 1 stays valid for pass 2.
     """
     out_schema = df.schema
     if id_col not in out_schema.names:
         raise ValueError(f"no {id_col!r} column in frame")
 
-    tagged = df.withColumn(_PID, F.spark_partition_id()).persist()
+    tagged = materialize(df.withColumn(_PID, F.spark_partition_id()))
     stats = (
         tagged.groupBy(_PID)
         .agg(

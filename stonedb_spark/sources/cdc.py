@@ -24,6 +24,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stonedb_spark.reuse import materialize
+
 CHANGE_COL = "_change"
 
 
@@ -166,7 +168,7 @@ def run_streaming_apply(
             .filter(F.col("_rn") == 1)
             .drop("_rn", "_src_file", "_src_mtime", "_src_seq")
         )
-        merged = apply_changes(base, latest, key).localCheckpoint()
+        merged = materialize(apply_changes(base, latest, key), eager=True)
         staging = target_path + ".staging"
         merged.write.mode("overwrite").parquet(staging)
         if os.path.exists(backup):

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from stonedb_spark.reuse import materialize
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -60,7 +62,7 @@ def read_csv_with_rejects(
         reader = reader.option("lineSep", line_sep)
     if encoding is not None:
         reader = reader.option("encoding", encoding)
-    df = reader.csv(path).cache()  # one parse, two consumers (good + reject split)
+    df = materialize(reader.csv(path))  # one parse, two consumers (good + reject split)
     good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
         F.col(CORRUPT_COL).alias("raw")
@@ -97,12 +99,11 @@ def read_jsonl_with_rejects(
     full_schema = StructType(
         list(schema.fields) + [StructField(CORRUPT_COL, StringType())]
     )
-    df = (
+    df = materialize(  # one parse, two consumers
         spark.read.schema(full_schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
-        .cache()  # one parse, two consumers
     )
     good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
@@ -249,7 +250,7 @@ def load_data_infile(
             .filter(F.col("_recno") >= skip_lines)
             .drop("_recno")
         )
-    df = df.cache()
+    df = materialize(df)
     good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
         F.col(CORRUPT_COL).alias("raw")

@@ -37,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from stonedb_spark.reuse import materialize
+
 from .ddl import _rewrite
 
 _SIDECAR = "_TRIGGERS.json"
@@ -249,7 +251,7 @@ def insert_rows(spark: SparkSession, path: str, rows: DataFrame) -> None:
     rows = _apply_before(spark, path, rows, "INSERT")
     # Materialize once so the audit append and the table append see the
     # same batch without recomputing upstream lineage.
-    rows = rows.localCheckpoint(eager=True)
+    rows = materialize(rows, eager=True)
     rows.write.mode("append").parquet(path)
     _fire_inserts(spark, path, rows, "INSERT")
 
@@ -278,7 +280,7 @@ def update_rows(
         old_struct,
     )
     newrows = _apply_before(spark, path, newrows, "UPDATE")
-    newrows = newrows.localCheckpoint(eager=True)
+    newrows = materialize(newrows, eager=True)
     n = newrows.count()
     _rewrite(untouched.unionByName(newrows.drop("old")), path)
     _fire_inserts(spark, path, newrows, "UPDATE")
@@ -289,7 +291,7 @@ def delete_rows(spark: SparkSession, path: str, where: str) -> int:
     """DELETE with trigger firing; audit actions see the deleted rows
     (their post-image == pre-image)."""
     table = spark.read.parquet(path)
-    doomed = table.filter(F.expr(where)).localCheckpoint(eager=True)
+    doomed = materialize(table.filter(F.expr(where)), eager=True)
     n = doomed.count()
     survivors = table.filter(~F.coalesce(F.expr(where), F.lit(False)))
     _rewrite(survivors, path)

@@ -34,7 +34,7 @@ def dedup_stream(
 
 
 def build_corpus_index(corpus: DataFrame, text_col: str = "text"):
-    """Build (and persist) the corpus MinHash LSH index once — band
+    """Build (and materialize) the corpus MinHash LSH index once — band
     keys plus the shingle rows the Jaccard verifier needs; the artifact
     a production pipeline stores as a table partitioned by band_key.
     Streamed batches probe it by equi-join.  Returns a
@@ -64,10 +64,9 @@ def run_incremental_dedup_stream(
     corpus, which is what makes the stage embarrassingly restartable).
 
     The corpus LSH index (signatures → band keys, plus shingle rows)
-    is built and persisted ONCE before the stream starts; each
-    micro-batch only pays batch-sized probe work, and its own
-    persisted intermediates are unpersisted at the end of the fold —
-    the 'index built once, probe cost scales with the batch' contract.
+    is built and materialized ONCE before the stream starts; each
+    micro-batch only pays batch-sized probe work — the 'index built
+    once, probe cost scales with the batch' contract.
 
     Results append to ``out_path`` (batch_id, is_dup, best_match,
     best_jaccard).
@@ -79,14 +78,10 @@ def run_incremental_dedup_stream(
     def fold(batch: DataFrame, batch_id: int) -> None:
         if not batch.head(1):
             return
-        scoped: list = []
         verdicts = probe_lsh_index(
-            index, batch, text_col=text_col, threshold=threshold,
-            scoped_frames=scoped,
+            index, batch, text_col=text_col, threshold=threshold
         )
         verdicts.write.mode("append").parquet(out_path)
-        for frame in scoped:
-            frame.unpersist()
 
     q = (
         spark.readStream.schema(schema)
@@ -97,4 +92,3 @@ def run_incremental_dedup_stream(
         .start()
     )
     q.awaitTermination()
-    index.unpersist()

@@ -24,6 +24,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stonedb_spark.reuse import materialize
+
 
 def fold_bucket_counts(base: DataFrame | None, delta: DataFrame) -> DataFrame:
     """Merge per-(event_type, h) counts: additive union + re-agg."""
@@ -92,7 +94,7 @@ def run_streaming_monitor(
             base = spark_l.read.parquet(backup)
         else:
             base = None
-        merged = fold_bucket_counts(base, delta).localCheckpoint()
+        merged = materialize(fold_bucket_counts(base, delta), eager=True)
         staging = state_path + ".staging"
         merged.write.mode("overwrite").parquet(staging)
         if os.path.exists(backup):
