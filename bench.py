@@ -163,6 +163,8 @@ def _time_battery(spark, names, sf_dir, runs, warmup):
         df.count()
     times: dict[str, float] = {}
     for name in names:
+        # each query's jobs carry its name in the Spark UI / status store
+        spark.sparkContext.setJobDescription(f"bench:{name}")
         for _ in range(warmup):
             _run_once(qs[name], spark, sf_dir, name)
         samples = []
@@ -173,6 +175,7 @@ def _time_battery(spark, names, sf_dir, runs, warmup):
         # min-of-N: least sensitive to concurrent machine load (the
         # mean folded a loaded machine into BENCH_r03)
         times[name] = round(min(samples), 4)
+    spark.sparkContext.setJobDescription(None)
     return times
 
 

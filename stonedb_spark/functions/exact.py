@@ -61,15 +61,3 @@ def scaled_long(col: Column | str, digits: int) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.round(c * (10**digits), 0).cast("long")
 
-
-def sql_dsum(expr: str) -> str:
-    """DuckDB-side twin of :func:`dsum` for oracle SQL strings."""
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(38,10))) AS DOUBLE)"
-
-
-def sql_davg(expr: str) -> str:
-    """DuckDB-side twin of :func:`davg`."""
-    return (
-        f"CAST(SUM(CAST({expr} AS DECIMAL(38,10))) AS DOUBLE)"
-        f" / CAST(COUNT({expr}) AS DOUBLE)"
-    )

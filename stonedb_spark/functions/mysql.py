@@ -343,10 +343,6 @@ def instr(s: Column | str, sub: str) -> Column:
     return F.instr(s, sub)
 
 
-def ascii_(s: Column | str) -> Column:
-    return F.ascii(s)
-
-
 def repeat(s: Column | str, n: int) -> Column:
     return F.repeat(s, n)
 

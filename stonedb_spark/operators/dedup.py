@@ -286,7 +286,6 @@ def connected_components(
     left: str = "d1",
     right: str = "d2",
     max_iter: int = 25,
-    check_every: int = 1,
 ) -> DataFrame:
     """Duplicate-cluster labels from near-dup pairs: (node, comp) where
     comp is the minimum doc_id reachable through the pair graph.
@@ -360,15 +359,6 @@ def connected_components(
             ).alias("comp"),
         )
 
-    # Rounds run in BATCHES of `check_every` between convergence
-    # checks; labels are monotone non-increasing, so "unchanged across
-    # a batch" ⇒ converged at the batch's first round.  Default 1:
-    # an interleaved min-of-4 A/B at sf0.1 measured check_every=1 at
-    # 3.3 s vs 4.7 s for 3 — the extra lazy rounds a batch runs past
-    # convergence cost more than the saved action round-trips on
-    # near-clique graphs (diameter ≲ 2).  Raise it for long-chain
-    # graphs where rounds ≫ and per-action latency dominates.
-    #
     # Convergence test: labels are elementwise monotone NON-INCREASING,
     # so the label SUM is strictly decreasing until the fixed point —
     # "sum unchanged" ⇔ "no label changed".  One map-side-combinable
@@ -385,15 +375,10 @@ def connected_components(
         return int(row[0]["s"])
 
     prev_sum = _label_sum(labels)
-    done = 1  # the folded initialization IS round 1
-    while done < max_iter:
-        steps = min(check_every, max_iter - done)
-        new_labels = labels
-        for _ in range(steps):
-            new_labels = materialize(one_round(new_labels))
-        done += steps
-        new_sum = _label_sum(new_labels)
-        labels = new_labels
+    # the folded initialization IS round 1; one round per check
+    for _ in range(max_iter - 1):
+        labels = materialize(one_round(labels))
+        new_sum = _label_sum(labels)
         if new_sum == prev_sum:
             break
         prev_sum = new_sum

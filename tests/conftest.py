@@ -7,6 +7,12 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# The engine's 24g driver default is sized for a large host; the suite's
+# sf0.01 data needs far less, and an uncapped heap grows past the RAM of
+# a 16 GB machine over a full run.  Must be set before stonedb_spark
+# reads it at import.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
+
 from stonedb_spark import get_spark  # noqa: E402
 from stonedb_spark.testing import duckdb_connection  # noqa: E402
 

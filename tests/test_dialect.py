@@ -916,3 +916,155 @@ def test_dml_where_only_temporal_normalization():
     # no WHERE: statement returned verbatim
     s2 = "UPDATE t1 SET d = 20230101"
     assert _normalize_dml_where(s2, tables, "spark") == s2
+
+
+# ------------------------------------------------------------ stored programs
+#
+# CALL, stored functions and triggers share one body parser
+# (dialect._sp_parse); each script runs on Spark and compiles to the
+# DuckDB oracle from the same text.
+
+
+def _spark_vs_oracle(spark, script: str) -> list:
+    pdf = run_script(spark, script).toPandas()
+    odf = duckdb.connect().execute(build_oracle_sql(script)).df()
+    assert not compare_frames(pdf, odf)
+    return sorted(pdf.values.tolist())
+
+
+SCRIPT_SP_CALL = """
+create table t (k int, v varchar(10));
+DELIMITER //
+CREATE PROCEDURE fill(IN n INT)
+BEGIN
+  DECLARE i INT DEFAULT 0;
+  WHILE i < n DO
+    INSERT INTO t VALUES (i, 'w');
+    SET i = i + 1;
+  END WHILE;
+  REPEAT
+    SET i = i - 1;
+  UNTIL i <= 2 END REPEAT;
+  INSERT INTO t VALUES (100 + i, 'r');
+  lbl: LOOP
+    SET i = i + 1;
+    IF i > 8 THEN
+      LEAVE lbl;
+    END IF;
+    IF MOD(i, 2) = 0 THEN
+      ITERATE lbl;
+    END IF;
+    INSERT INTO t VALUES (200 + i, 'l');
+  END LOOP lbl;
+  CASE i
+    WHEN 8 THEN INSERT INTO t VALUES (300, 'eight');
+    WHEN 9 THEN INSERT INTO t VALUES (301, 'nine');
+    ELSE BEGIN END;
+  END CASE;
+END //
+DELIMITER ;
+CALL fill(5);
+select * from t;
+"""
+
+
+def test_call_loops_and_case(spark):
+    """WHILE, REPEAT … UNTIL, a labeled LOOP with LEAVE / ITERATE and a
+    CASE statement, all unrolled at CALL time."""
+    assert _spark_vs_oracle(spark, SCRIPT_SP_CALL) == [
+        [0, "w"], [1, "w"], [2, "w"], [3, "w"], [4, "w"],
+        [102, "r"], [203, "l"], [205, "l"], [207, "l"], [301, "nine"],
+    ]
+
+
+SCRIPT_SP_FUNCTION = """
+create table p (id int, price int);
+insert into p values (1, 10), (2, 20);
+DELIMITER //
+CREATE FUNCTION grade(x INT) RETURNS VARCHAR(10)
+BEGIN
+  DECLARE g VARCHAR(10) DEFAULT 'low';
+  IF x >= 90 THEN
+    SET g = 'top';
+  ELSEIF x >= 50 THEN
+    SET g = 'mid';
+  END IF;
+  RETURN g;
+END //
+CREATE FUNCTION total(n INT) RETURNS INT
+BEGIN
+  DECLARE i INT DEFAULT 1;
+  DECLARE s INT DEFAULT 0;
+  WHILE i <= n DO
+    SET s = s + i;
+    SET i = i + 1;
+  END WHILE;
+  RETURN s;
+END //
+CREATE FUNCTION price_of(k INT) RETURNS INT
+BEGIN
+  DECLARE v INT DEFAULT -1;
+  SELECT price INTO v FROM p WHERE id = k;
+  RETURN v;
+END //
+DELIMITER ;
+select grade(95) as a, grade(60) as b, grade(10) as c, total(4) as s,
+       price_of(2) as hit, price_of(7) as miss;
+"""
+
+
+def test_function_if_merge_while_and_select_into(spark):
+    """IF/ELSEIF arms merge per variable; WHILE over a bound argument
+    unrolls; SELECT … INTO that finds no row keeps the prior value."""
+    assert _spark_vs_oracle(spark, SCRIPT_SP_FUNCTION) == [
+        ["top", "mid", "low", 10, 20, -1],
+    ]
+
+
+SCRIPT_SP_TRIGGER = """
+create table t1 (a int, b int, c varchar(10));
+DELIMITER //
+create trigger trg before insert on t1 for each row
+begin
+  if new.a > 10 then
+    set new.b = new.a * 2, new.c = 'big';
+  else
+    set new.c = 'small';
+  end if;
+end//
+DELIMITER ;
+insert into t1 values (5, 0, ''), (20, 0, '');
+select * from t1;
+"""
+
+
+def test_before_insert_trigger_sets_new(spark):
+    """BEFORE INSERT trigger: SET NEW.x under IF / ELSE folds into the
+    inserted rows."""
+    assert _spark_vs_oracle(spark, SCRIPT_SP_TRIGGER) == [
+        [5, 0, "small"], [20, 40, "big"],
+    ]
+
+
+def test_stored_program_loop_cap(monkeypatch):
+    """One loop bound for every walker: a loop that does not terminate
+    within it raises, one that finishes at the bound does not."""
+    import stonedb_spark.dialect as D
+
+    monkeypatch.setattr(D, "_SP_LOOP_CAP", 50)
+    call = (
+        "DELIMITER //\n"
+        "CREATE PROCEDURE spin(IN n INT)\nBEGIN\n"
+        "  DECLARE i INT DEFAULT 0;\n"
+        "  WHILE i < n DO SET i = i + 1; END WHILE;\n"
+        "  SELECT i;\nEND //\nDELIMITER ;\nCALL spin({n});\n"
+    )
+    assert [s.text for s in split_mtr(call.format(n=50))][-1] == "SELECT 50"
+    with pytest.raises(ValueError, match="did not terminate"):
+        split_mtr(call.format(n=51))
+    func = (
+        "BEGIN DECLARE i INT DEFAULT 0; "
+        "lbl: LOOP SET i = i + 1; END LOOP lbl; RETURN i; END"
+    )
+    with pytest.raises(ValueError, match="did not terminate"):
+        D._compile_proc_body(func)

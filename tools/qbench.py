@@ -1,10 +1,11 @@
 """Focused per-query micro-bench for the optimization rounds.
 
-Times individual registered queries with EXACTLY the bench.py
-methodology (same timed action per query: collect(), or the noop sink
-for LARGE_OUTPUT entries; same min-of-N statistic; warmed tables and
-one untimed warmup run), so numbers here are comparable to BENCH_*.json
-without paying the full-battery wall clock per A/B iteration.
+Times individual registered queries through bench.py's own timing loop
+(``bench._time_battery``: same timed action per query, collect() or
+the noop sink for LARGE_OUTPUT entries; same min-of-N statistic; warmed
+tables and untimed warmup runs), so numbers here are comparable to
+BENCH_*.json without paying the full-battery wall clock per A/B
+iteration.
 
 Usage:
     python tools/qbench.py q1 q2 ...            # sf0.1, 3 runs
@@ -19,14 +20,12 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from stonedb_spark import get_spark, load_tables  # noqa: E402
-from stonedb_spark.queries import all_queries  # noqa: E402
+from stonedb_spark import get_spark  # noqa: E402
 
-from bench import LARGE_OUTPUT, _run_once  # noqa: E402
+from bench import LARGE_OUTPUT, _time_battery  # noqa: E402
 
 
 def main() -> None:
@@ -42,22 +41,7 @@ def main() -> None:
     loadavg_start = [round(x, 2) for x in os.getloadavg()]
     spark = get_spark("stonedb_spark-qbench")
     spark.sparkContext.setLogLevel("ERROR")
-    qs = all_queries()
-    for df in load_tables(spark, args.sf_dir).values():
-        df.count()
-    times: dict[str, float] = {}
-    for name in args.names:
-        q = qs[name]
-        spark.sparkContext.setJobDescription(f"qbench:{name}")
-        for _ in range(args.warmup):
-            _run_once(q, spark, args.sf_dir, name)
-        samples = []
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            _run_once(q, spark, args.sf_dir, name)
-            samples.append(time.perf_counter() - t0)
-        times[name] = round(min(samples), 4)
-        spark.sparkContext.setJobDescription(None)
+    times = _time_battery(spark, args.names, args.sf_dir, args.runs, args.warmup)
     print(
         json.dumps(
             {
