@@ -129,7 +129,7 @@ def mysql(
     spark: SparkSession, query: str, sf_dir: str = DEFAULT_SF_DIR
 ) -> DataFrame:
     """Run MySQL-dialect query TEXT over the registered catalog: the
-    statement is rewritten by the round-7 dialect front-end
+    statement is rewritten by the dialect front-end
     (stonedb_spark.dialect.rewrite_expr — backticks, LIMIT x,y, DIV,
     GROUP_CONCAT, DATE_FORMAT %-codes, string aliases, ||/&&, …) and
     executed as a normal Catalyst plan.  For whole MTR scripts

@@ -39,13 +39,14 @@ fights the 100 TB execution path.
 from __future__ import annotations
 
 import decimal
+import functools
 import os
 import re
 import shutil
 import tempfile
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stonedb_spark.reuse import materialize
@@ -336,7 +337,7 @@ def _expand_var_recurrences(stmts: list) -> list:
                 # a single-quoted alias (AS 'rankno') would splice as
                 # a string literal on DuckDB (silently wrong rows) and
                 # a parse error on Spark — normalize to a backticked
-                # identifier (ADVICE r11)
+                # identifier
                 out_alias = alias or r1
                 if out_alias[0] in "'`\"":
                     out_alias = f"`{out_alias[1:-1]}`"
@@ -454,7 +455,7 @@ def _expand_var_recurrences(stmts: list) -> list:
         # anchor to select-list positions: a `@v := col` embedded in
         # function arguments or a WHERE clause is NOT the previous-key
         # idiom — rewriting it there emits broken SQL instead of
-        # falling through to the survived-site guard (ADVICE r11).
+        # falling through to the survived-site guard.
         # A site qualifies when its nearest enclosing paren level IS a
         # SELECT (statement or derived table) and the preceding token
         # at that level is SELECT[/DISTINCT] or a list comma.
@@ -1465,7 +1466,6 @@ def _batch_single_inserts(stmts: list[Statement]) -> list[Statement]:
             # multi-row INSERT would downgrade MySQL's hard single-row
             # 1048 to implicit-default storage in non-strict sessions) —
             # break the run so such statements execute standalone
-            # (ADVICE r8)
             if re.search(r"(?i)\b(SELECT|NULL)\b", mm.group(3)):
                 break
             key = (
@@ -3349,11 +3349,11 @@ _NUS_MODE = [False]
 # strict mode
 _NZD_MODE = [True]
 # MySQL's zero date '0000-00-00' has no engine value on Spark or
-# DuckDB.  Rounds 1-11 modeled it as NULL — which merged it with true
-# NULL in NULLABLE columns (issue682 lines 29-42: `is null` must see
-# 2 of 4 rows, not all 4).  Round 12: the zero date is stored as the
-# SENTINEL 0001-01-01 (a value MySQL accepts but the 5.7 test corpus
-# never uses: real MySQL data starts at '1000-01-01'); IS NULL over
+# DuckDB.  Modeled as NULL it would merge with true NULL in NULLABLE
+# columns (issue682 lines 29-42: `is null` must see 2 of 4 rows, not
+# all 4), so the zero date is stored as the SENTINEL 0001-01-01 (a
+# value MySQL accepts but the 5.7 test corpus never uses: real MySQL
+# data starts at '1000-01-01'); IS NULL over
 # NOT NULL temporal columns and numeric-0 compares rewrite against the
 # sentinel (MySQL's documented IS-NULL-matches-zero-date quirk), and
 # designated SELECTs render it back as '0000-00-00' where an entry
@@ -3718,8 +3718,8 @@ def _guard_unsigned_arith(s: str, tables: dict) -> str:
     non-negative, so non-error selects keep their results.  Runner
     (Spark) side only: the oracle compiler skips --error statements.
     Only columns of tables the statement actually references count —
-    an unsigned 'a' in some OTHER table must not poison 'a - y' here
-    (ADVICE r8) — and NO_UNSIGNED_SUBTRACTION legalizes negatives."""
+    an unsigned 'a' in some OTHER table must not poison 'a - y' here —
+    and NO_UNSIGNED_SUBTRACTION legalizes negatives."""
     if _NUS_MODE[0]:
         return s
     referenced = {
@@ -3919,7 +3919,6 @@ def _bind_literal_uservar(expr: str):
         # only the fraction overflows: MySQL keeps the integer part
         # and ROUNDS the fraction to what fits — at most 30 digits
         # (DECIMAL(65,30)), fewer when the integer part is long
-        # (ADVICE r8)
         import decimal
 
         keep = min(30, 65 - len(ip))
@@ -4280,8 +4279,8 @@ def _wrap_truthy_leaves(cond: str) -> str:
     # a paren is in boolean context only when the ENCLOSING GROUP is —
     # both what precedes the '(' AND what follows the matching ')'
     # must be logical.  Without the rp-side check, `((t) <> 0)` and
-    # `a <> (b)` re-wrap their inner leaf (the round-8 idempotence
-    # break: compiled fragments re-enter this pass via UPDATE…WHERE).
+    # `a <> (b)` re-wrap their inner leaf (an idempotence break:
+    # compiled fragments re-enter this pass via UPDATE…WHERE).
     lp_of, rp_of = {}, {}
     stack: list[int] = []
     for idx, (kind, _t, _s, _e) in enumerate(toks):
@@ -4394,7 +4393,7 @@ def _truthy_bool_clauses(sql: str) -> str:
     clause bodies.  Matching runs on a string-literal-masked copy so a
     WHERE inside a literal never starts a rewrite, and the body is
     bounded at the SAME paren depth as the clause keyword so an inner
-    subquery's GROUP BY/ORDER BY never truncates it (ADVICE r8)."""
+    subquery's GROUP BY/ORDER BY never truncates it."""
     mask = _ANY_STRLIT.sub(lambda m: "\x00" * len(m.group(0)), sql)
     out, pos = [], 0
     for m in _CLAUSE_KW.finditer(mask):
@@ -4644,7 +4643,19 @@ def _rewrite_str_to_date(sql: str, engine: str) -> str:
 
 
 def rewrite_expr(sql: str, engine: str) -> str:
-    """The shared MySQL→(Spark|DuckDB) expression/text rewriter."""
+    """The shared MySQL→(Spark|DuckDB) expression/text rewriter.
+
+    Memoised: scripts repeat the same texts (bare INSERT values above
+    all).  Besides the text and the engine, the rewrite reads two pieces
+    of per-script state — the NO_UNSIGNED_SUBTRACTION flag and the
+    STR_TO_DATE format pool — so both are part of the key.  A raised
+    error is not cached; the next call raises it again."""
+    return _rewrite_expr(sql, engine, _NUS_MODE[0], tuple(_STR_FMT_POOL))
+
+
+@functools.lru_cache(maxsize=1 << 14)
+def _rewrite_expr(sql: str, engine: str, _nus: bool,
+                  _fmt_pool: tuple[str, ...]) -> str:
     _huge_int_arith_guard(sql)
     _const_1690_guard(sql)
 
@@ -4902,7 +4913,7 @@ def rewrite_expr(sql: str, engine: str) -> str:
         if engine == "spark":
             return f"({base} + MAKE_INTERVAL(0, 0, 0, 0, 0, 0, {secs}))"
         # interval arithmetic, NOT duckdb's to_seconds() helper — the
-        # MySQL TO_SECONDS wrap added in round 9 would re-match it
+        # MySQL TO_SECONDS wrap would re-match it
         return f"({base} + ({secs}) * INTERVAL 1 SECOND)"
 
     sql = _wrap_calls(sql, "TIMESTAMP", _timestamp_fn)
@@ -8077,6 +8088,12 @@ def _alter_tabledef(
                 return i
         raise ValueError(f"ALTER: unknown column {name}")
 
+    def check_free(name: str) -> None:
+        if any(c.name.lower() == name.lower() for c, _ in work):
+            raise ValueError(
+                f"Duplicate column name '{name}' (MySQL error 1060 analog)"
+            )
+
     def place(item: tuple[ColumnDef, str | None], pos: str | None,
               at: int | None = None) -> None:
         if pos is None:
@@ -8139,19 +8156,16 @@ def _alter_tabledef(
         if m:
             from dataclasses import replace as _repl
             i = find(_unquote_ident(m.group(1)))
-            c, src0 = work[i]
-            work[i] = (_repl(c, name=_unquote_ident(m.group(2))), src0)
+            c, src0 = work.pop(i)
+            check_free(_unquote_ident(m.group(2)))
+            work.insert(i, (_repl(c, name=_unquote_ident(m.group(2))), src0))
             continue
         m = re.match(r"ADD\s+(?:COLUMN\s+)?(.*)$", a, re.I | re.S)
         if m and not re.match(
             r"ADD\s+(PRIMARY|UNIQUE|INDEX|KEY|CONSTRAINT|FULLTEXT)", a, re.I
         ):
             nc = _parse_coldef(m.group(1))
-            if any(c.name.lower() == nc.name.lower() for c, _ in work):
-                raise ValueError(
-                    f"Duplicate column name '{nc.name}' "
-                    f"(MySQL error 1060 analog)"
-                )
+            check_free(nc.name)
             if td.engine == "tianmu":
                 _check_tianmu_decimal(nc)
             if nc.autoinc and nc.name.lower() not in {
@@ -8181,6 +8195,7 @@ def _alter_tabledef(
             nc = _parse_coldef(m.group(2))
             i = find(_unquote_ident(m.group(1)))
             old = work.pop(i)
+            check_free(nc.name)
             place((nc, old[1]), pos, at=i)
             continue
         em2 = re.match(r"ENGINE\s*=\s*(\w+)\s*$", a, re.I)
@@ -8637,8 +8652,8 @@ def _apply_truthy_on(sql: str, engine: str) -> str:
         if up in ("TRUE", "FALSE"):
             # boolean literals ARE join conditions on both engines —
             # the lenient-prefix read would turn ON TRUE into the
-            # string 'true' -> 0 -> always-false (ADVICE r11, medium;
-            # issue502-2's CREATE VIEW ... JOIN ... ON TRUE)
+            # string 'true' -> 0 -> always-false (issue502-2's
+            # CREATE VIEW ... JOIN ... ON TRUE)
             return m.group(0)
         if up == "NULL":
             return f"{m.group(1)}{_BFALSE}"  # NULL condition = no match
@@ -8976,7 +8991,7 @@ def _normalize_dml_where(
     top-level WHERE clause.  Running the passes over the whole
     statement rewrites SET assignments (``UPDATE t1 JOIN t2 ... SET
     d = 20230101`` is an assignment, not a compare) into COALESCE
-    comparisons before assigns-parsing splits on '=' (ADVICE r11).
+    comparisons before assigns-parsing splits on '='.
     Table refs are collected from the statement HEAD (UPDATE target,
     FROM, JOIN) and prepended as a synthetic FROM/JOIN stub so the
     passes' column collection still sees them."""
@@ -10501,7 +10516,7 @@ def run_statement(run: MTRRun, stmt: str):
         # DELETE/UPDATE WHERE clauses need the same temporal-column
         # compare normalization SELECTs get (issue682's
         # ``delete from t1 where a=0`` over a DATE column) — WHERE
-        # clause only, so SET assignments stay untouched (ADVICE r11)
+        # clause only, so SET assignments stay untouched
         s = _normalize_dml_where(s, run.tables, "spark")
     upd_ignore = bool(re.match(r"^\s*UPDATE\s+IGNORE\b", s, re.I))
     s = re.sub(r"^(\s*UPDATE)\s+IGNORE\b", r"\1", s, flags=re.I)
@@ -11416,8 +11431,30 @@ def run_statement(run: MTRRun, stmt: str):
         newtd, mapping = _alter_tabledef(td, _split_top_commas(m.group(2)))
         tbl = run.spark.table(f"`{_physname(tname)}`")
         proj = []
-        checks = []
+        # (violating-row count, MySQL error) per check; one aggregate
+        # validates the existing rows before the rewrite
+        checks: list[tuple[Column, str]] = []
         oldtypes = {c.name: c for c in td.columns}
+        srcs = {c.name.lower(): src for c, src in mapping}
+        pk_srcs = [srcs.get(k.lower()) for k in newtd.pk]
+        if ([k.lower() for k in newtd.pk] != [k.lower() for k in td.pk]
+                and pk_srcs and None not in pk_srcs):
+            # a new PRIMARY KEY validates the existing rows: a NULL key
+            # part is 1138 in strict mode, a repeated key is 1062
+            keyed = F.expr(" AND ".join(
+                f"`{k}` IS NOT NULL" for k in pk_srcs))
+            if run.strict:
+                checks.append((
+                    F.sum(F.when(keyed, 0).otherwise(1)),
+                    "Invalid use of NULL value in the PRIMARY KEY "
+                    "(MySQL error 1138 analog)",
+                ))
+            checks.append((
+                F.sum(F.when(keyed, 1).otherwise(0))
+                - F.countDistinct(*[F.col(f"`{k}`") for k in pk_srcs]),
+                "Duplicate entry for key 'PRIMARY' during ALTER "
+                "(MySQL error 1062 analog)",
+            ))
         for c, src in mapping:
             if src is None:
                 lit = c.default if c.default is not None else "NULL"
@@ -11428,6 +11465,15 @@ def run_statement(run: MTRRun, stmt: str):
             else:
                 proj.append(F.col(f"`{src}`").cast(c.spark_type).alias(c.name))
                 oldc = oldtypes.get(src)
+                if (run.strict and c.notnull and oldc is not None
+                        and not oldc.notnull):
+                    # NULL -> NOT NULL over rows holding NULL: strict
+                    # mode refuses the conversion
+                    checks.append((
+                        F.sum(F.col(f"`{src}`").isNull().cast("int")),
+                        f"Invalid use of NULL value: column '{c.name}' "
+                        f"(MySQL error 1138 analog)",
+                    ))
                 if (
                     c.mysql_type in _STRICT_INT_RANGES
                     and oldc is not None
@@ -11451,19 +11497,16 @@ def run_statement(run: MTRRun, stmt: str):
                     x = F.col(f"`{src}`").cast("decimal(38,0)")
                     lod = F.lit(decimal.Decimal(lo)).cast("decimal(38,0)")
                     hid = F.lit(decimal.Decimal(hi)).cast("decimal(38,0)")
-                    checks.append(
-                        F.sum(
-                            F.when((x < lod) | (x > hid), 1).otherwise(0)
-                        ).alias(c.name)
-                    )
+                    checks.append((
+                        F.sum(F.when((x < lod) | (x > hid), 1).otherwise(0)),
+                        f"Out of range value for column '{c.name}' during "
+                        f"ALTER (MySQL error 1264 analog)",
+                    ))
         if checks:
-            bad = tbl.agg(*checks).collect()[0]
-            for cname in bad.asDict():
-                if bad[cname]:
-                    raise ValueError(
-                        f"Out of range value for column '{cname}' during "
-                        f"ALTER (MySQL error 1264 analog)"
-                    )
+            bad = tbl.agg(*[n for n, _ in checks]).collect()[0]
+            for n_bad, (_, err) in zip(bad, checks):
+                if n_bad:
+                    raise ValueError(err)
         staged = materialize(tbl.select(*proj), eager=True)
         tout = newtd.name  # may differ: RENAME action within the ALTER
         run.sql(f"DROP TABLE IF EXISTS `{tname}`")

@@ -1,9 +1,8 @@
 """Real (stdlib-only) multimodal codecs: WAV audio, 24-bit BMP, PNG.
 
-The round-5 verdict graded the multimodal stack "partial by design"
-because the decode steps were deterministic stubs — the container has
-no PIL/libav.  These two formats need NOTHING beyond the standard
-library + numpy, so the decode step here is REAL byte-level parsing:
+There is no PIL/libav to decode with.  These formats need NOTHING
+beyond the standard library + numpy, so the decode step here is REAL
+byte-level parsing:
 
 * WAV — encode builds the RIFF/fmt/data chunks by hand (struct.pack);
   decode goes through the stdlib ``wave`` module — two INDEPENDENT

@@ -313,9 +313,11 @@ def connected_components(
     replacing the distinct-nodes pass AND the first join round (every
     node appears as ``src`` in the symmetrized edge list, so coverage
     is identical).  Near-clique graphs (the near-dup case) then
-    converge after ONE confirming round: measured 2.81 s vs 4.27 s for
-    the identity-init form on dedup_clusters at sf0.1 (interleaved
-    min-of-4, OPTIMIZATION_r12.md).
+    converge after ONE confirming round.
+
+    Labels still changing after ``max_iter`` rounds (a pair graph whose
+    diameter exceeds the cap) raise ``RuntimeError``: unconverged labels
+    would split components silently.
     """
     # Symmetrize with ONE explode per pair row, not union(e, swap(e)):
     # the union duplicates the whole upstream pair-generation subtree
@@ -380,9 +382,12 @@ def connected_components(
         labels = materialize(one_round(labels))
         new_sum = _label_sum(labels)
         if new_sum == prev_sum:
-            break
+            return labels
         prev_sum = new_sum
-    return labels
+    raise RuntimeError(
+        f"connected_components: labels still changing after max_iter="
+        f"{max_iter} rounds; the pair graph's diameter exceeds the cap"
+    )
 
 
 def dedup_clusters(
@@ -427,7 +432,9 @@ def connected_components_star(
     (shuffle on node id).  Stable edge set = star forest: every node
     holds an edge to its component's minimum id.
 
-    Same output contract as connected_components: (node, comp).
+    Same output contract as connected_components: (node, comp), and
+    the same ``RuntimeError`` when the edge set is still changing after
+    ``max_iter`` rounds.
     """
     e = materialize(
         pairs.select(
@@ -473,6 +480,11 @@ def connected_components_star(
         e = new_e
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components_star: edges still changing after "
+            f"max_iter={max_iter} rounds"
+        )
     # stable star forest: b's component is a; roots map to themselves
     nodes = _bidirect(e).select(F.col("u").alias("node")).distinct()
     roots = e.groupBy(F.col("b").alias("node")).agg(F.min("a").alias("comp"))

@@ -46,11 +46,6 @@ def split_assign(
     )
 
 
-def sample_fraction(df, key: Column | str, fraction: float):
-    """Deterministic ~fraction sample: filter on the hash bucket."""
-    return df.filter(hash_bucket(key) < int(fraction * _BUCKET_MOD))
-
-
 def stratified_sample(
     df,
     strata: Column | str,
@@ -59,7 +54,7 @@ def stratified_sample(
     default: float = 0.0,
 ):
     """Per-stratum deterministic sampling: each stratum keeps its own
-    fraction, decided by the SAME md5 hash-bucket as sample_fraction —
+    fraction, decided by the SAME md5 hash-bucket as split_assign —
     so the kept set is stable across engines, partitionings and reruns
     (df.sampleBy is rand()-seeded per partition and is not).
 

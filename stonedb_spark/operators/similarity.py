@@ -1,15 +1,10 @@
 """Similarity search over embedding columns (array<float>).
 
-* cosine_scores / knn_bruteforce — exact top-k by cosine; the dot
-  product runs as a sequential fold over the zipped arrays in pure
-  Catalyst (F.zip_with + F.aggregate), entirely JVM-side.  Brute force
-  is the correctness baseline: one broadcast of the query vector, one
-  scan — at 100 TB it is still a single pass, the cost is O(n·d).
-* lsh_bucket / knn_lsh — random-hyperplane LSH (Charikar 2002): sign
-  bits of <x, h_i> for fixed seeded hyperplanes form a bucket key; the
-  search touches only the query's bucket — the scale path (the scan
-  prunes to ~n/2^bits with a plain equi-filter on the bucket column,
-  which Parquet can push down when the bucket is materialized).
+* dot / cosine — the dot product runs as a sequential fold over the
+  zipped arrays in pure Catalyst (F.zip_with + F.aggregate), entirely
+  JVM-side.
+* lsh_bucket — random-hyperplane LSH (Charikar 2002): sign bits of
+  <x, h_i> for fixed seeded hyperplanes form a bucket key.
 
 Hyperplanes are generated from a fixed seed and inlined as literals so
 any other engine (the DuckDB oracle) reproduces bucket keys exactly.
@@ -60,43 +55,6 @@ def lsh_bucket(vec: Column, planes: list[list[float]] | None = None) -> Column:
         F.when(dot(vec, const_vector(p)) >= 0, "1").otherwise("0") for p in planes
     ]
     return F.concat(*bits)
-
-
-def knn_bruteforce(
-    embeddings: DataFrame,
-    query_vec: Column,
-    k: int = 20,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Exact top-k neighbors of a constant query vector."""
-    return (
-        embeddings.select(
-            F.col(id_col),
-            cosine(F.col(vec_col), query_vec).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
-
-
-def knn_lsh(
-    embeddings: DataFrame,
-    query_vec: Column,
-    k: int = 20,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Approximate top-k: search only the query's LSH bucket."""
-    planes = lsh_hyperplanes()
-    bucketed = embeddings.withColumn("bucket", lsh_bucket(F.col(vec_col), planes))
-    qb = lsh_bucket(query_vec, planes)
-    return (
-        bucketed.filter(F.col("bucket") == qb)
-        .select(F.col(id_col), cosine(F.col(vec_col), query_vec).alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc(id_col))
-        .limit(k)
-    )
 
 
 IVF_NLIST = 16

@@ -22798,7 +22798,7 @@ _SPECS = [
     ('dialect_issue1332_null_bat', SCRIPT_ISSUE1332F, 18, ['a', 'b', 'c'], False, 'NOT IN / IN / IS NULL battery over boundary bigints (IN (NOT NULL) evaluates NULL)', {'c': 'STRING'}),
     ('dialect_issue1332_year3', SCRIPT_ISSUE1332F, 21, ['a', 'b', 'c'], False, "3-digit-year temporal literal BETWEEN ('111-11-10' reads year 0111)", {'c': 'STRING'}),
     ('dialect_issue1332_single', SCRIPT_ISSUE1332F, 75, ['a'], False, 'single-column boundary battery after re-create (empty range)'),
-    ('dialect_issue682_zerodate', SCRIPT_ISSUE682F, 0, ['a'], False, "zero-date inserts under strict-without-NO_ZERO_DATE (issue682 NOT NULL legs; r12: zero date stored as the 0001-01-01 sentinel, rendered verbatim '0000-00-00' — IS NULL matches via MySQL's NOT-NULL-column quirk)", None, {'zd': {'a': 'date'}}),
+    ('dialect_issue682_zerodate', SCRIPT_ISSUE682F, 0, ['a'], False, "zero-date inserts under strict-without-NO_ZERO_DATE (issue682 NOT NULL legs; zero date stored as the 0001-01-01 sentinel, rendered verbatim '0000-00-00' — IS NULL matches via MySQL's NOT-NULL-column quirk)", None, {'zd': {'a': 'date'}}),
     ('dialect_issue682_zerodel', SCRIPT_ISSUE682F, -1, ['a'], False, 'IS NULL / =0 / =string deletes over zero-date rows leave the datetime table empty', None, {'zd': {'a': 'ts'}}),
     ('dialect_issue682_nullable', SCRIPT_ISSUE682_NULLABLE, 0, ['a'], False, "NULLABLE date column: zero dates stay DISTINCT from true NULL (issue682 lines 29-42 — 2 sentinel rows + 2 NULLs + real date, rendered '0000-00-00')", None, {'zd': {'a': 'date'}}),
     ('dialect_issue682_null_isnull', SCRIPT_ISSUE682_NULLABLE, 1, ['a'], False, 'IS NULL over a nullable date sees ONLY the true NULLs (2 of 4), not the zero dates', None, {'zd': {'a': 'date'}}),

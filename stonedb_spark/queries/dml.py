@@ -300,7 +300,7 @@ def dml_insert_ignore(spark, sf_dir):
     )
     # first-wins per key by the batch arrival expression, ranked INSIDE
     # the key partition — a global batch_pos row_number would drag the
-    # whole batch into one task (the r12 partition-less-window gate)
+    # whole batch into one task (tests/test_plans.py partition-less-window gate)
     w = Window.partitionBy("c_custkey").orderBy(F.col("c_custkey") + 7)
     fresh = (
         batch.join(target.select("c_custkey"), "c_custkey", "left_anti")

@@ -379,12 +379,10 @@ LIMIT 20
     doc="IVF coarse-quantized k-NN: nlist hash-seeded centroids, nprobe-cell probe",
 )
 def knn_ivf_probe(spark, sf_dir):
-    # r13 rewrite (guide §2.4, remove shuffles outright): the old shape
-    # materialized the full (vec_id, cid) assignment as a sort-aggregate
-    # over an n×nlist scored stream, EXCHANGED it on vec_id, and joined
-    # embeddings back onto it — at sf0.1 the planner even broadcast the
-    # whole embeddings table to do so.  But nlist is 16: collapse the
-    # centroid table to ONE row holding array<struct(cid, cvec)> and the
+    # Remove shuffles outright (guide §2.4): a materialized (vec_id, cid)
+    # assignment would be a sort-aggregate over an n×nlist scored
+    # stream, exchanged on vec_id and joined back onto embeddings.  But
+    # nlist is 16: collapse the centroid table to ONE row holding array<struct(cid, cvec)> and the
     # probe's top-nprobe cid set, broadcast that, and resolve each
     # vector's nearest cell as a map-side array_max over the 16 cosines
     # (identical arithmetic count — the cross join also scored all 16 —
@@ -3090,8 +3088,8 @@ def emb_nearest_centroid_eval(spark, sf_dir):
         .groupBy("vec_id", "label", "c_label")
         .agg(F.sum(diff * diff).alias("d2"))
     )
-    # argmin per vector as a map-side-combinable aggregate (r12): the
-    # lexicographic struct min on (d2, c_label) is exactly the old
+    # argmin per vector as a map-side-combinable aggregate: the
+    # lexicographic struct min on (d2, c_label) is exactly
     # ROW_NUMBER() ORDER BY d2, c_label rn=1 — same deterministic
     # tie-break, no per-partition window sort (guide §2.3).  label is a
     # trailing carry-along field ((d2, c_label) is unique per group, so
@@ -3262,13 +3260,12 @@ LIMIT 20
     doc="product-quantization encode + asymmetric-distance top-20 (integer-exact)",
 )
 def knn_pq_adc(spark, sf_dir):
-    # r12: the per-(vector, block) nearest-centroid used to be a
-    # ROW_NUMBER() window over the n*8*16 scored rows (Exchange + two
-    # Sorts + WindowGroupLimit); the lexicographic struct min on (d2, c)
-    # is the identical argmin with the identical tie-break, computed as
-    # a map-side-combinable HashAggregate instead (guide SS2.3 "aggregate
-    # before you shuffle" -- the exchange now carries per-task partial
-    # minima, not scored rows, and two sorts disappear).
+    # The per-(vector, block) nearest-centroid is a lexicographic struct
+    # min on (d2, c): the identical argmin and tie-break of a
+    # ROW_NUMBER() window over the n*8*16 scored rows, computed as a
+    # map-side-combinable HashAggregate instead of Exchange + two Sorts
+    # + WindowGroupLimit (guide SS2.3 "aggregate before you shuffle" --
+    # the exchange carries per-task partial minima, not scored rows).
     #
     # An all-expression formulation (codebook literals inlined per
     # block, zero data shuffles) was tried first and REJECTED: 8 blocks
@@ -3608,11 +3605,10 @@ def text_containment_pairs(spark, sf_dir):
 # The audit run before shipping truncated embeddings to a cheaper
 # index.  All dot products in integer milli-units (same discipline as
 # knn_pq_adc) so ranks and errors are engine-exact.  Global ranks are
-# computed DISTRIBUTED (r12, closing the r11 verdict's scale-killer):
-# each of the three orderings goes through the range-repartition +
-# per-partition-offset recipe of operators/ids.py — one range shuffle
-# and a #partitions-row driver agg per ordering, never a partition-
-# less window dragging the corpus into one task.
+# computed DISTRIBUTED: each of the three orderings goes through the
+# range-repartition + per-partition-offset recipe of operators/ids.py —
+# one range shuffle and a #partitions-row driver agg per ordering,
+# never a partition-less window dragging the corpus into one task.
 @register(
     "emb_truncation_fidelity",
     oracle="""
@@ -3847,7 +3843,7 @@ def knn_ivfpq_probe(spark, sf_dir):
         F.col("qb"), F.col("c").alias("qc"), d2.alias("qd2")
     )
     # argmin per (vector, block) as a map-side-combinable aggregate
-    # (r12; same swap as emb_nearest_centroid_eval): struct min on
+    # (same shape as emb_nearest_centroid_eval): struct min on
     # (d2, c) == ROW_NUMBER() ORDER BY d2, c rn=1; cid is a constant
     # carry-along per vec_id (guide §2.3).
     code = (
@@ -3868,7 +3864,7 @@ def knn_ivfpq_probe(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# REAL multimodal codecs (round 6): WAV and BMP need only the standard
+# REAL multimodal codecs: WAV and BMP need only the standard
 # library + numpy, so unlike the stub entries above, the decode step
 # here is genuine byte-level parsing (operators/codecs.py — encoder and
 # decoder are independent implementations of each spec).  The oracle

@@ -201,7 +201,7 @@ def regress_len_numeric(spark, sf_dir):
         F.sum(key_len).alias("sum_len_int"),
         # DOUBLE on both sides: DuckDB materializes DECIMAL(38,10) as
         # float64 in pandas (precision > 18), so a decimal here would
-        # reach the driver hash as Decimal-vs-float (round-6 sweep FAIL).
+        # reach the driver hash as Decimal-vs-float.
         F.sum(key_len / F.lit(2.0)).cast("double").alias("sum_half_len"),
     )
 

@@ -31,9 +31,8 @@ from stonedb_spark.reuse import materialize
 B = F.broadcast
 
 # --------------------------------------------------------------------------
-# Scale gate for explicit broadcast hints on SF-GROWING dims (r12 verdict
-# item 2 / ADVICE): q5/q7 pre-join a pruned customer projection onto
-# orders.  The pre-join is right at any scale; the unconditional B() hint
+# Scale gate for explicit broadcast hints on SF-GROWING dims: q5/q7
+# pre-join a pruned customer projection onto orders.  The pre-join is right at any scale; the unconditional B() hint
 # is not — customer grows 150k×SF rows, so at SF≈100k (the ~100 TB point)
 # the pruned dim blows the 8 GB / 512M-row broadcast hard cap and OOMs
 # the driver.  Estimate the pruned dim's in-memory hashed-relation size
@@ -293,8 +292,7 @@ ORDER BY o_orderpriority
 def tpch_q4(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     o, l = t["orders"], t["lineitem"]  # noqa: E741
-    # r13 (r12 verdict item 6): push the orders date window through the
-    # EXISTS correlation onto the lineitem SCAN.  Equivalence: a
+    # Push the orders date window through the EXISTS correlation onto the lineitem SCAN.  Equivalence: a
     # witnessing line satisfies l_shipdate > o_orderdate and every
     # surviving order has o_orderdate >= 1996-01-01, so every witness
     # has l_shipdate > 1996-01-01 — pre-filtering lineitem to that
@@ -358,15 +356,14 @@ def tpch_q5(spark, sf_dir):
         c["c_nationkey"] == F.col("asia_key"),
         "left_semi",
     )
-    # r12: the customer dim is consumed onto the date-filtered orders
-    # BEFORE the lineitem join (c2 projected to (c_custkey, c_nationkey):
-    # 3M rows ≈ 50 MB at SF100), so the orderkey join's orders side
+    # The customer dim is consumed onto the date-filtered orders BEFORE
+    # the lineitem join (c2 projected to (c_custkey, c_nationkey): 3M
+    # rows ≈ 50 MB at SF100), so the orderkey join's orders side
     # arrives pre-shrunk by both the date range and the ASIA membership
     # instead of shuffling customer⋈orders first (guide §3.1/§3.2).
-    # Interleaved min-of-5 at sf1: 2.58 s → 2.00 s, identical rows.
-    # r13: the broadcast HINT is scale-gated (ASIA keeps 1/5 of
-    # customers × 16 B payload); above the cap the pre-join stays but
-    # shuffles (§3.3 — a hint must not bypass the 8 GB broadcast limit).
+    # The broadcast HINT is scale-gated (ASIA keeps 1/5 of customers ×
+    # 16 B payload); above the cap the pre-join stays but shuffles
+    # (§3.3 — a hint must not bypass the 8 GB broadcast limit).
     c2p = c2.select("c_custkey", "c_nationkey")
     if _dim_fits_broadcast(sf_dir, "customer", 1 / 5, 16):
         c2p = B(c2p)
@@ -459,7 +456,7 @@ def tpch_q7(spark, sf_dir):
     # l_suppkey / o_custkey prunes the big probe sides at the scan, and
     # only the pair-matching residual OR remains post-join.  Without this
     # the OR survives solely as the last join's residual and all 25
-    # nations flow through the 6-way join (round-1 verdict item 4).
+    # nations flow through the 6-way join.
     pair = ("NATION_1", "NATION_2")
     n1 = (
         t["nation"]
@@ -473,14 +470,13 @@ def tpch_q7(spark, sf_dir):
     )
     s2 = s.join(B(n1), s["s_nationkey"] == F.col("n1_key"))
     c2 = c.join(B(n2), c["c_nationkey"] == F.col("n2_key"))
-    # r12: join the pruned customer dim (2/25 of customers; 1.2M
-    # rows ≈ 20 MB at SF100) onto orders BEFORE the orderkey fact join,
-    # so the orders side of the one remaining big SMJ shrinks ~12×
-    # up front instead of shuffling in full and dropping rows at the
-    # last join (guide §3.2 "reduce the big side before shuffling").
-    # Interleaved min-of-5 at sf1: 2.05 s → 1.47 s, identical rows.
-    # r13: the broadcast HINT is scale-gated (see _dim_fits_broadcast;
-    # payload ≈ key + 8-char nation); the pre-join itself always stays.
+    # Join the pruned customer dim (2/25 of customers; 1.2M rows ≈
+    # 20 MB at SF100) onto orders BEFORE the orderkey fact join, so the
+    # orders side of the one remaining big SMJ shrinks ~12× up front
+    # instead of shuffling in full and dropping rows at the last join
+    # (guide §3.2 "reduce the big side before shuffling").  The
+    # broadcast HINT is scale-gated (see _dim_fits_broadcast; payload ≈
+    # key + 8-char nation); the pre-join itself always stays.
     c2p = c2.select("c_custkey", "cust_nation")
     if _dim_fits_broadcast(sf_dir, "customer", 2 / 25, 24):
         c2p = B(c2p)
@@ -547,7 +543,7 @@ def tpch_q8(spark, sf_dir):
     # r_name='AMERICA' restricts the customer-side nation (n1); resolve the
     # region join on the broadcast dim and semi-filter customer BEFORE it
     # meets orders, so only 1/5 of customers enter the fact joins (same
-    # late-dim-filter shape as q7, round-1 verdict item 4).
+    # late-dim-filter shape as q7).
     america_keys = n1.join(
         B(r.filter(r["r_name"] == "AMERICA")), F.col("n1_region") == r["r_regionkey"]
     ).select("n1_key")
@@ -1144,13 +1140,9 @@ def tpch_q21(spark, sf_dir):
     load_tables(spark, sf_dir)
     # Correlated EXISTS/NOT EXISTS with inequality correlation is exactly
     # what Catalyst's subquery decorrelation handles; express in SQL.
-    # Measured (round 4, sf3, interleaved min-of-5): the hand-written
-    # single-scan rewrite (per-order conditional COUNT(DISTINCT) + join
-    # back to late rows) ties this decorrelated form at 4.3s — Catalyst
-    # already plans the efficient shape, so the declarative SQL stays.
-    # Re-measured round 6 (sf1, idle host, interleaved min-of-5) after
-    # the r5 1.5x wobble: decorrelated 1.47s vs rewrite 1.66s — the
-    # declarative form still ties-or-wins; wobble was host noise.
+    # A hand-written single-scan rewrite (per-order conditional
+    # COUNT(DISTINCT) + join back to late rows) measured no faster:
+    # Catalyst already plans the efficient shape.
     return spark.sql(
         """
 SELECT s_name, COUNT(*) AS numwait

@@ -1,27 +1,19 @@
-"""DDL analogs: TRUNCATE / ALTER TABLE add/drop column.
+"""Table layout maintenance on plain parquet: compaction and Z-order
+clustering, both staged rewrites.
 
-Reference: TianmuTable::Truncate / TianmuTable::Alter
-(storage/tianmu/core/tianmu_table.h:74-76); MTR coverage
-mysql-test/suite/tianmu/t/add_column.test, drop_column.test.
-
-In a lakehouse the analogs are metadata/layout operations:
-* TRUNCATE — overwrite the table location with an empty frame of the
-  same schema (constant-time on object stores that support prefix
-  delete; never a row-by-row delete).
-* ADD COLUMN — schema evolution: existing files stay untouched, the new
-  column materializes as NULL (here: rewrite with a literal because
-  plain parquet has no evolution log; the operator contract — old rows
-  read as NULL, new schema visible — is the same one Delta provides via
-  `mergeSchema`).
-* DROP COLUMN — projection rewrite (Delta: pure metadata).
+The MySQL DDL statements themselves (TRUNCATE, ALTER TABLE, CREATE
+TEMPORARY TABLE, CREATE TRIGGER, AUTO_INCREMENT) run through the dialect
+front-end (stonedb_spark/dialect.py), as the reference runs them in the
+MySQL SQL layer above Tianmu (TianmuTable::Truncate / Alter,
+storage/tianmu/core/tianmu_table.h:74-76).
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _rewrite(df: DataFrame, path: str) -> None:
@@ -32,83 +24,10 @@ def _rewrite(df: DataFrame, path: str) -> None:
     (Delta) makes this a log commit — on plain parquet the staging dir +
     directory swap provides the same never-in-place discipline.
     """
-    import glob
-    import os
-
     staging = path.rstrip("/") + ".__staging__"
     df.write.mode("overwrite").parquet(staging)
-    # Catalog sidecars (_CONSTRAINTS.json, _PK.json, _TRIGGERS.json, …)
-    # live inside the table dir; carry them across the swap — a rewrite
-    # changes data, not catalog metadata.  (On Delta/Iceberg this is
-    # moot: constraints live in the table log, not loose files.)
-    for meta in glob.glob(os.path.join(path, "_*.json")):
-        shutil.copy2(meta, os.path.join(staging, os.path.basename(meta)))
     shutil.rmtree(path)
     shutil.move(staging, path)
-
-
-def truncate_table(spark: SparkSession, path: str) -> None:
-    """Empty the table at ``path`` keeping its schema."""
-    schema = spark.read.parquet(path).schema
-    shutil.rmtree(path)
-    spark.createDataFrame([], schema).write.parquet(path)
-
-
-def add_column(
-    spark: SparkSession,
-    path: str,
-    name: str,
-    dtype: str,
-    default: Column | None = None,
-    after: str | None = None,
-    first: bool = False,
-) -> None:
-    """ALTER TABLE ADD COLUMN: existing rows get NULL (or ``default``).
-    ``after``/``first`` place the column positionally (alter_column.test
-    ADD COLUMN ... AFTER c11 / FIRST); re-adding an existing name is
-    MySQL error 1060."""
-    df = spark.read.parquet(path)
-    if name in df.columns:
-        raise ValueError(f"duplicate column name: {name} (MySQL error 1060 analog)")
-    value = (default if default is not None else F.lit(None)).cast(dtype)
-    out = df.withColumn(name, value)
-    if first or after is not None:
-        cols = [c for c in df.columns]
-        pos = 0 if first else cols.index(after) + 1
-        order = cols[:pos] + [name] + cols[pos:]
-        out = out.select(*order)
-    _rewrite(out, path)
-
-
-def drop_column(spark: SparkSession, path: str, name: str) -> None:
-    """ALTER TABLE DROP COLUMN: projection rewrite."""
-    _rewrite(spark.read.parquet(path).drop(name), path)
-
-
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read the table applying catalog constraints: columns recorded
-    NOT NULL in `_CONSTRAINTS.json` get non-nullable schema fields (the
-    optimizer can then drop IsNotNull filters and null-check branches).
-
-    The rebuild goes through an RDD because Spark's file sources force
-    nullable=true no matter what (user-specified read schema and
-    DataFrame.to() both refuse or ignore the flip) — so this path
-    trades scan pushdown for the constraint-typed schema.  Use it for
-    constraint-aware consumers; plain scans should read the parquet
-    directly.  On Delta/Iceberg the constraint is table metadata and
-    the trade-off disappears.
-    """
-    from pyspark.sql.types import StructField, StructType
-
-    df = spark.read.parquet(path)
-    nn = set(_load_constraints(path).get("not_null", []))
-    if not nn:
-        return df
-    fields = [
-        StructField(f.name, f.dataType, f.nullable and f.name not in nn)
-        for f in df.schema.fields
-    ]
-    return spark.createDataFrame(df.rdd, StructType(fields), verifySchema=False)
 
 
 def compact_table(
@@ -127,8 +46,6 @@ def compact_table(
     never a row count collected to the driver.  On Delta this is
     OPTIMIZE (+ Z-ORDER); on plain parquet it is a staged rewrite.
     """
-    import os
-
     total = sum(
         os.path.getsize(os.path.join(root, f))
         for root, _, files in os.walk(path)
@@ -154,8 +71,6 @@ def optimize_zorder(
     scans prune row groups on every listed column.  This is the full
     lakehouse maintenance verb: compact_table alone fixes file sizing,
     this also fixes ROW ORDER.  Returns the new file count."""
-    import os
-
     from pyspark.sql import functions as F
 
     from stonedb_spark.operators.zorder import zvalue
@@ -178,144 +93,8 @@ def optimize_zorder(
     ).parquet(staging)
     backup = path + ".old"
     if os.path.exists(backup):
-        import shutil
-
         shutil.rmtree(backup)
     os.rename(path, backup)
     os.rename(staging, path)
-    import shutil
-
     shutil.rmtree(backup, ignore_errors=True)
     return n_files
-
-
-def modify_column_type(
-    spark: SparkSession, path: str, name: str, dtype: str, strict: bool = True
-) -> None:
-    """ALTER TABLE MODIFY col <type> (alter_table.test: char->smallint,
-    varchar length changes, int->tinyint in alter_column.test).
-
-    strict=True mirrors MySQL STRICT_TRANS_TABLES: a value the new type
-    cannot represent aborts the ALTER (ValueError) and the table is
-    untouched — the check runs BEFORE the rewrite, so there is no
-    half-converted state.  strict=False mirrors the reference's
-    non-strict clamp-to-NULL ingest (rejecter path, load_parser.h:43):
-    unrepresentable values become NULL via try_cast.
-    """
-    df = spark.read.parquet(path)
-    if name not in df.columns:
-        raise KeyError(name)
-    casted = F.col(name).try_cast(dtype)
-    if strict:
-        n_lossy = df.filter(F.col(name).isNotNull() & casted.isNull()).count()
-        if n_lossy:
-            raise ValueError(
-                f"MODIFY {name} -> {dtype}: {n_lossy} value(s) not representable"
-                " (MySQL strict mode error 1366 analog)"
-            )
-    cols = [casted.alias(c) if c == name else F.col(c) for c in df.columns]
-    _rewrite(df.select(*cols), path)
-
-
-def rename_column(spark: SparkSession, path: str, old: str, new: str) -> None:
-    """ALTER TABLE CHANGE old new <same type> (alter_column.test).
-    Renaming onto an existing name is error 1060 (duplicate column)."""
-    df = spark.read.parquet(path)
-    if old not in df.columns:
-        raise KeyError(old)
-    if new in df.columns and new != old:
-        raise ValueError(f"duplicate column name: {new} (MySQL error 1060 analog)")
-    _rewrite(df.withColumnRenamed(old, new), path)
-
-
-_CONSTRAINTS_FILE = "_CONSTRAINTS.json"
-
-
-def _load_constraints(path: str) -> dict:
-    import json
-    import os
-
-    p = os.path.join(path, _CONSTRAINTS_FILE)
-    if not os.path.exists(p):
-        return {}
-    with open(p) as f:
-        return json.load(f)
-
-
-def _save_constraints(path: str, data: dict) -> None:
-    import json
-    import os
-
-    with open(os.path.join(path, _CONSTRAINTS_FILE), "w") as f:
-        json.dump(data, f, indent=1, sort_keys=True)
-
-
-def set_nullability(
-    spark: SparkSession, path: str, name: str, nullable: bool
-) -> None:
-    """ALTER TABLE MODIFY col <type> NULL / NOT NULL
-    (alter_table_null.test).  NULL -> NOT NULL validates that no NULLs
-    exist (MySQL rewrites the table and errors on the first NULL in
-    strict mode — error 1138/1048), then records the constraint in the
-    table's `_CONSTRAINTS.json` sidecar.  A sidecar, not the parquet
-    footer: Spark's parquet reader reports every column nullable by
-    design regardless of `required`/`optional`, so footers cannot carry
-    this — the same catalog-vs-data split the reference makes (its
-    NOT NULL lives in the MySQL .frm, not the Tianmu packs).
-    read_table re-applies the recorded nullability to the schema."""
-    df = spark.read.parquet(path)
-    if name not in df.columns:
-        raise KeyError(name)
-    if not nullable:
-        n_null = df.filter(F.col(name).isNull()).count()
-        if n_null:
-            raise ValueError(
-                f"MODIFY {name} NOT NULL: {n_null} NULL value(s) present"
-                " (MySQL error 1138/1048 analog)"
-            )
-    cons = _load_constraints(path)
-    nn = set(cons.get("not_null", []))
-    (nn.discard if nullable else nn.add)(name)
-    cons["not_null"] = sorted(nn)
-    _save_constraints(path, cons)
-
-
-def get_not_null_columns(path: str) -> list[str]:
-    return list(_load_constraints(path).get("not_null", []))
-
-
-def add_primary_key(spark: SparkSession, path: str, cols: list[str]) -> None:
-    """ALTER TABLE ADD PRIMARY KEY (alter_table_primarykey.test): the
-    key must be unique and non-NULL across existing rows (duplicate ->
-    MySQL error 1062, NULL -> 1138); plain parquet has no constraint
-    catalog, so the validated key lands in a `_PK.json` sidecar that
-    ingest paths (sources/autoinc.py, dml upserts) can consult — the
-    same split the reference makes between the column store and its
-    separate RocksDB key index (tianmu_table_index.h:61)."""
-    import json
-    import os
-
-    df = spark.read.parquet(path)
-    for c in cols:
-        if c not in df.columns:
-            raise KeyError(c)
-        if df.filter(F.col(c).isNull()).limit(1).count():
-            raise ValueError(f"PK column {c} contains NULL (error 1138 analog)")
-    n_dup = (
-        df.groupBy(*cols).count().filter(F.col("count") > 1).limit(1).count()
-    )
-    if n_dup:
-        raise ValueError("duplicate key values present (MySQL error 1062 analog)")
-    with open(os.path.join(path, "_PK.json"), "w") as f:
-        json.dump({"primary_key": cols}, f)
-
-
-def get_primary_key(path: str) -> list[str] | None:
-    import json
-    import os
-
-    pk = os.path.join(path, "_PK.json")
-    if not os.path.exists(pk):
-        return None
-    with open(pk) as f:
-        return json.load(f)["primary_key"]

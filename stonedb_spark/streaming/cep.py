@@ -67,8 +67,8 @@ def detect_funnel_stream(events: DataFrame, watermark_delay: str = "0 seconds") 
         # On timestamp ties, process stages in funnel order (view before
         # click before purchase): the batch funnel binds with ts >=
         # view_ts, so a click sharing the view's exact timestamp must
-        # bind regardless of how event_ids happen to sort (round-5
-        # ADVICE; same-tick events are a real clickstream case).
+        # bind regardless of how event_ids happen to sort (same-tick
+        # events are a real clickstream case).
         rows = pd.concat(list(pdfs))
         rows["_stage"] = rows["event_type"].map(
             {"view": 0, "click": 1, "purchase": 2}

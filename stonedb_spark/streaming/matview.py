@@ -69,8 +69,8 @@ def run_incremental_agg(
     def fold(batch: DataFrame, batch_id: int) -> None:
         # Merged state is written DISTRIBUTED straight to the staged dir —
         # never through the driver: view state is |groups|-sized, and a
-        # high-cardinality group key would OOM a collect() (round-1
-        # verdict item 5).  Reading view_dir while writing
+        # high-cardinality group key would OOM a collect().  Reading
+        # view_dir while writing
         # view_dir + '.staged' is safe; the swap stays atomic-rename.
         part = _partial(batch)
         if os.path.exists(view_dir):

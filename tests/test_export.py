@@ -30,37 +30,6 @@ def test_ctas_parquet_roundtrip(spark, sf_dir, tmp_path):
     assert set(back.columns) == {"o_orderkey", "o_custkey", "o_totalprice"}
 
 
-def test_ddl_truncate_add_drop(spark, sf_dir, tmp_path):
-    """TRUNCATE / ADD COLUMN / DROP COLUMN analogs
-    (TianmuTable::Truncate/Alter, add_column.test / drop_column.test)."""
-    from stonedb_spark.catalog import load_tables
-    from stonedb_spark.sources.ddl import (
-        add_column,
-        drop_column,
-        read_table,
-        truncate_table,
-    )
-
-    path = str(tmp_path / "ddl_tbl")
-    load_tables(spark, sf_dir)["region"].write.parquet(path)
-    base_cols = read_table(spark, path).columns
-
-    add_column(spark, path, "r_comment", "string")
-    df = read_table(spark, path)
-    assert df.columns == base_cols + ["r_comment"]
-    assert df.filter(df["r_comment"].isNotNull()).count() == 0  # old rows → NULL
-
-    drop_column(spark, path, "r_comment")
-    assert read_table(spark, path).columns == base_cols
-
-    n_before = read_table(spark, path).count()
-    assert n_before > 0
-    truncate_table(spark, path)
-    after = read_table(spark, path)
-    assert after.count() == 0
-    assert after.columns == base_cols  # schema survives truncate
-
-
 def test_compact_table_folds_small_files(spark, sf_dir, tmp_path):
     """The background delta-merge analog: many small appended files →
     few target-size files, contents identical."""
@@ -330,110 +299,3 @@ def test_training_shard_checksum_detects_payload_and_duplication(
     # restore -> verifies again (checksum is order-insensitive)
     orig.orderBy(F.rand(7)).write.mode("overwrite").parquet(part_dir)
     assert verify_shard(spark, path, shard)
-
-
-def test_ddl_alter_battery(spark, sf_dir, tmp_path):
-    """ALTER TABLE breadth (alter_table.test, alter_table_null.test,
-    alter_column.test, alter_table_primarykey.test): type changes
-    strict/non-strict, positional ADD, CHANGE rename, NULL/NOT NULL
-    flips, PK add with uniqueness + non-null validation."""
-    import pytest
-
-    from stonedb_spark.catalog import load_tables
-    from stonedb_spark.sources.ddl import (
-        add_column,
-        add_primary_key,
-        drop_column,
-        get_primary_key,
-        modify_column_type,
-        rename_column,
-        set_nullability,
-    )
-
-    path = str(tmp_path / "alter_tbl")
-    load_tables(spark, sf_dir)["customer"].filter(
-        F.col("c_custkey") <= 400
-    ).write.parquet(path)
-    n0 = spark.read.parquet(path).count()
-    assert n0 > 127  # keys must overflow tinyint for the strict check
-
-    # MODIFY type widen (int -> bigint) is always safe
-    modify_column_type(spark, path, "c_nationkey", "bigint")
-    assert dict(spark.read.parquet(path).dtypes)["c_nationkey"] == "bigint"
-
-    # MODIFY narrow: c_custkey > 127 overflows tinyint -> strict aborts,
-    # table untouched; non-strict clamps to NULL (reference rejecter path)
-    with pytest.raises(ValueError, match="1366"):
-        modify_column_type(spark, path, "c_custkey", "tinyint")
-    assert dict(spark.read.parquet(path).dtypes)["c_custkey"] == "bigint"
-    modify_column_type(spark, path, "c_custkey", "tinyint", strict=False)
-    lossy = spark.read.parquet(path)
-    assert dict(lossy.dtypes)["c_custkey"] == "tinyint"
-    # exactly the keys outside tinyint's [-128, 127] went NULL
-    n_fit = 128  # fixture keys are 0-based: 0..127 fit
-    assert lossy.filter(F.col("c_custkey").isNull()).count() == n0 - n_fit
-    # restore a usable key for the PK step below
-    modify_column_type(spark, path, "c_custkey", "bigint")
-    with_key = spark.read.parquet(path).withColumn(
-        "row_key", F.monotonically_increasing_id()
-    )
-    with_key.write.mode("overwrite").parquet(str(tmp_path / "rekey"))
-    spark.read.parquet(str(tmp_path / "rekey")).write.mode(
-        "overwrite"
-    ).parquet(path)
-    modify_column_type(spark, path, "c_nationkey", "string")  # int->char ok
-    assert dict(spark.read.parquet(path).dtypes)["c_nationkey"] == "string"
-    modify_column_type(spark, path, "c_nationkey", "smallint")  # char->smallint
-    assert dict(spark.read.parquet(path).dtypes)["c_nationkey"] == "smallint"
-
-    # positional ADD (FIRST / AFTER) + duplicate-name error 1060
-    add_column(spark, path, "c0", "int", first=True)
-    add_column(spark, path, "mid_flag", "int", after="c_name")
-    cols = spark.read.parquet(path).columns
-    assert cols[0] == "c0" and cols[cols.index("c_name") + 1] == "mid_flag"
-    with pytest.raises(ValueError, match="1060"):
-        add_column(spark, path, "mid_flag", "int")
-
-    # CHANGE rename; rename onto an existing name is 1060
-    rename_column(spark, path, "mid_flag", "flag2")
-    assert "flag2" in spark.read.parquet(path).columns
-    with pytest.raises(ValueError, match="1060"):
-        rename_column(spark, path, "flag2", "c0")
-
-    # NOT NULL flip on an all-NULL column must fail; after filling, ok.
-    # The constraint lives in the sidecar catalog and surfaces through
-    # read_table (Spark's parquet reader reports everything nullable).
-    from stonedb_spark.sources.ddl import read_table
-
-    with pytest.raises(ValueError, match="1138|1048"):
-        set_nullability(spark, path, "flag2", nullable=False)
-    df = spark.read.parquet(path)
-    df.withColumn("flag2", F.lit(1)).write.mode("overwrite").parquet(
-        str(tmp_path / "tmp_fill")
-    )
-    spark.read.parquet(str(tmp_path / "tmp_fill")).write.mode(
-        "overwrite"
-    ).parquet(path)
-    set_nullability(spark, path, "flag2", nullable=False)
-    assert not read_table(spark, path).schema["flag2"].nullable
-    set_nullability(spark, path, "flag2", nullable=True)
-    assert read_table(spark, path).schema["flag2"].nullable
-
-    # PRIMARY KEY: dup key -> 1062; unique key registers in the sidecar
-    with pytest.raises(ValueError, match="1062"):
-        add_primary_key(spark, path, ["flag2"])  # constant column: dup
-    add_primary_key(spark, path, ["row_key"])
-    assert get_primary_key(path) == ["row_key"]
-
-    # Catalog sidecars must survive a data rewrite: ALTER ADD COLUMN
-    # goes through the copy-on-write swap, and the PK/NOT NULL metadata
-    # written above has to still be there afterwards.
-    set_nullability(spark, path, "flag2", nullable=False)
-    add_column(spark, path, "post_pk_col", "int")
-    assert get_primary_key(path) == ["row_key"]
-    assert not read_table(spark, path).schema["flag2"].nullable
-    drop_column(spark, path, "post_pk_col")
-    set_nullability(spark, path, "flag2", nullable=True)
-
-    # row count survived every ALTER
-    assert spark.read.parquet(path).count() == n0

@@ -262,8 +262,8 @@ def test_div_truncate_exact_past_double_mantissa(spark):
 
 
 def test_bit_type_shims(spark):
-    """BIT(n) literal parse, clamp/null ingest modes, display, and the
-    ALTER-to-BIT path (alter_bit.test analog via ddl.add_column)."""
+    """BIT(n) literal parse, clamp/null ingest modes and display
+    (alter_bit.test analog)."""
     from pyspark.sql import functions as F
 
     from stonedb_spark.functions import bittype as BT

@@ -95,6 +95,23 @@ def test_connected_components_chain_and_clique(spark):
     }
 
 
+def test_connected_components_raise_at_round_cap(spark):
+    """A 60-edge chain needs 60 propagation rounds, past the default
+    cap of 25: the operator raises instead of returning the unconverged
+    labels (36 components where the answer is 1).  The star variant
+    raises the same way when its own cap ends the loop."""
+    from stonedb_spark.operators.dedup import (
+        connected_components,
+        connected_components_star,
+    )
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(60)], ["d1", "d2"])
+    with pytest.raises(RuntimeError, match="max_iter=25"):
+        connected_components(chain)
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components_star(chain, max_iter=1)
+
+
 def test_pca_components_and_projection(spark, sf_dir):
     """Driver eigh on mapInPandas moment partials must reproduce numpy
     PCA on the collected corpus: orthonormal components, matching

@@ -7,11 +7,9 @@ import os
 import re
 from pathlib import Path
 
-from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from stonedb_spark.queries import all_queries
-from stonedb_spark.sources.autoinc import with_auto_increment
 from stonedb_spark.sources.csvload import append_load, read_csv_with_rejects
 
 PKG = Path(__file__).resolve().parent.parent / "stonedb_spark"
@@ -30,7 +28,7 @@ def test_materialize_is_the_only_reuse_site():
 
 
 def test_no_cache_manager_entries_after_runs(spark, sf_dir, tmp_path):
-    """No CacheManager entry survives a query, an ingest or an id stamp:
+    """No CacheManager entry survives a query or an ingest:
     a later, independent build of the same plan must recompute."""
     sf = os.path.join(os.path.dirname(sf_dir), "sf0.001")
     qs = all_queries()
@@ -50,12 +48,5 @@ def test_no_cache_manager_entries_after_runs(spark, sf_dir, tmp_path):
     append_load(good, str(tmp_path / "table"))
     assert bad.count() == 1
     assert spark.read.parquet(str(tmp_path / "table")).count() == 2
-
-    df = spark.range(100).select(
-        F.when(F.col("id") % 3 == 0, F.col("id") + 1000).alias("id"),
-        F.col("id").alias("v"),
-    )
-    stamped, _ = with_auto_increment(df, "id", next_val=1)
-    assert stamped.select("id").distinct().count() == 100
 
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
