@@ -742,6 +742,9 @@ def _expand_triggers(stmts: list) -> list:
     temps: set[tuple] = set()
     views_: set[tuple] = set()
     trig: dict[tuple, list] = {}  # (db,tbl) -> [(name,timing,event,ops)]
+    # a permanent table and its triggers while a TEMPORARY table of its
+    # name hides it: (db, name) -> (TableDef, triggers)
+    parked: dict[tuple, tuple] = {}
     out: list = []
 
     _REL = r"(?:(\w+)\s*\.\s*)?(`[^`]+`|\w+)"
@@ -882,6 +885,7 @@ def _expand_triggers(stmts: list) -> list:
             for k in [k for k in tables if k[0] == d]:
                 tables.pop(k, None)
                 trig.pop(k, None)
+                parked.pop(k, None)
             temps.difference_update({k for k in temps if k[0] == d})
             views_.difference_update({k for k in views_ if k[0] == d})
             emit(s, st.expect_error)
@@ -899,6 +903,10 @@ def _expand_triggers(stmts: list) -> list:
                     if cm.group(2) else s
                 )
                 td = parse_create_table(s_bare)
+                if cm.group(1) and (d, nm) in tables \
+                        and (d, nm) not in temps:
+                    parked[(d, nm)] = (tables[(d, nm)],
+                                       trig.pop((d, nm), None))
                 tables[(d, nm)] = td
                 if cm.group(1):
                     temps.add((d, nm))
@@ -931,6 +939,10 @@ def _expand_triggers(stmts: list) -> list:
                 tables.pop(k, None)
                 trig.pop(k, None)  # DROP TABLE drops its triggers
                 temps.discard(k)
+                if k in parked:  # the permanent table is back
+                    tables[k], ts = parked.pop(k)
+                    if ts:
+                        trig[k] = ts
             emit(s, st.expect_error)
             return
         rm = re.match(
@@ -7600,6 +7612,12 @@ def _map_physnames(sql: str, tables: dict) -> str:
     )
 
 
+def _parked_name(name: str) -> str:
+    """Physical name of a permanent table while a TEMPORARY table of
+    the same name hides it."""
+    return f"{_physname(name)}__shadowed"
+
+
 @dataclass
 class MTRRun:
     """Execution state for one script run."""
@@ -7622,6 +7640,11 @@ class MTRRun:
     # of the script path reads the remapped file (round-trip tests,
     # unsigned_support_issue1267.test).
     outfiles: dict = field(default_factory=dict)
+
+    # a TEMPORARY table hides the permanent table of its name until it
+    # is dropped (temporary.test): key -> the permanent TableDef, whose
+    # Spark table is parked under _parked_name meanwhile
+    shadowed: dict = field(default_factory=dict)
 
     def sql(self, q: str):
         """Engine boundary: physical-name mapping happens here so the
@@ -10602,6 +10625,10 @@ def run_statement(run: MTRRun, stmt: str):
                 f"DROP TABLE IF EXISTS `{run.tables[key].name}`"
             )
             del run.tables[key]
+            prior = run.shadowed.pop(key, None)
+            if prior is not None:
+                run.spark.sql(
+                    f"DROP TABLE IF EXISTS `{_parked_name(prior.name)}`")
         return None
     svm = _SHOW_VARS_RX.match(s)
     if svm:
@@ -10848,6 +10875,12 @@ def run_statement(run: MTRRun, stmt: str):
                         f"(MySQL error 1051 analog)")
                 run.sql(f"DROP TABLE IF EXISTS `{name}`")
                 run.tables.pop(name.lower(), None)
+                prior = run.shadowed.pop(name.lower(), None)
+                if prior is not None:  # the permanent table is back
+                    run.spark.sql(
+                        f"ALTER TABLE `{_parked_name(prior.name)}` "
+                        f"RENAME TO `{_physname(prior.name)}`")
+                    run.tables[name.lower()] = prior
             else:
                 run.sql(f"DROP VIEW IF EXISTS `{name}`")
         return None
@@ -10947,6 +10980,10 @@ def run_statement(run: MTRRun, stmt: str):
                     f"Table '{td.name}' already exists "
                     f"(MySQL error 1050 analog)"
                 )
+            run.spark.sql(
+                f"ALTER TABLE `{_physname(prior.name)}` "
+                f"RENAME TO `{_parked_name(prior.name)}`")
+            run.shadowed[td.name.lower()] = prior
         run.tables[td.name.lower()] = td
         coldefs = ", ".join(f"`{c.name}` {c.spark_type}" for c in td.columns)
         run.sql(f"DROP TABLE IF EXISTS `{td.name}`")
@@ -11682,6 +11719,8 @@ def run_script(
             # lowercased, and _physname hashes case-sensitively, so a
             # mixed-case weird name would otherwise leak its table
             spark.sql(f"DROP TABLE IF EXISTS `{_physname(td_.name)}`")
+        for td_ in run.shadowed.values():
+            spark.sql(f"DROP TABLE IF EXISTS `{_parked_name(td_.name)}`")
         shutil.rmtree(workdir, ignore_errors=True)
 
 
@@ -11801,6 +11840,9 @@ def build_oracle_sql(
     incarn: dict[str, int] = {}  # DROP+re-CREATE gets fresh CTE names
     ctes: list[tuple[str, str]] = []
     pending_rows: dict[str, list[list[str]]] = {}
+    # permanent tables hidden by a TEMPORARY one: key -> (TableDef,
+    # the CTE of its last version)
+    shadowed: dict[str, tuple[TableDef, str]] = {}
 
     def vname(t: str) -> str:
         return f"{_physname(t)}__c{incarn[t]}v{versions[t]}"
@@ -12011,6 +12053,7 @@ def build_oracle_sql(
             for key in victims:
                 pending_rows.pop(key, None)
                 tables.pop(key)
+                shadowed.pop(key, None)
             continue
         if not _SHOWDESC.match(s) and (
             _IGNORED.match(s) or re.match(r"^\s*DROP\s+VIEW\b", s, re.I)
@@ -12025,7 +12068,14 @@ def build_oracle_sql(
                 r"(?:IF\s+EXISTS\s+)?(.*)$", s, re.I | re.S,
             )
             for nm_ in _split_top_commas(dm_.group(1)):
-                tables.pop(_unquote_ident(nm_).lower(), None)
+                key = _unquote_ident(nm_).lower()
+                tables.pop(key, None)
+                if key in shadowed:  # the permanent table is back
+                    pending_rows.pop(key, None)
+                    tables[key], last = shadowed.pop(key)
+                    versions[key] = 0
+                    incarn[key] += 1
+                    ctes.append((vname(key), f"SELECT * FROM {last}"))
             continue
         mc = _split_create_select(s)
         if mc:  # CREATE TABLE t (coldefs) [options] SELECT …
@@ -12083,6 +12133,11 @@ def build_oracle_sql(
                 r"\bIF\s+NOT\s+EXISTS\b", s, re.I
             ):
                 continue  # keep the existing table untouched
+            if td.temporary and key in tables and not tables[key].temporary:
+                flush(key)
+                if versions[key] == 0 and not _has_version0(key):
+                    ctes.append((vname(key), _duck_values_cte(tables[key], [])))
+                shadowed[key] = (tables[key], vname(key))
             tables[key] = td
             versions[key] = 0
             incarn[key] = incarn.get(key, 0) + 1

@@ -50,6 +50,18 @@ def zvalue(cols: list[Column], bits: int = 16) -> Column:
     return out
 
 
+def scale_to_bits(c: Column, lo: float, hi: float, bits: int) -> Column:
+    """Map ``c`` from its [lo, hi] range onto [0, 2^bits) so every
+    column of a Morton key fills the same bit width.  Interleaving raw
+    values instead lets the widest column own the key's top bits, and
+    the layout degrades to a sort on that column alone.  ``lo``/``hi``
+    are None for an empty or all-NULL column."""
+    lo, hi = float(lo or 0), float(hi or 0)
+    span = hi - lo or 1.0
+    s = F.floor((c.cast("double") - F.lit(lo)) / F.lit(span) * (1 << bits))
+    return F.least(F.greatest(s, F.lit(0)), F.lit((1 << bits) - 1)).cast("long")
+
+
 def zorder_write(
     df: DataFrame,
     path: str,
@@ -61,8 +73,17 @@ def zorder_write(
     """CTAS clustered on the Morton key of ``cols``: range-partition by
     the key, sort within partitions, small row groups
     (``parquet.block.size``) so min/max stats have pruning resolution —
-    the knob a real table tunes per workload."""
-    keyed = df.withColumn("_z", zvalue([F.col(c) for c in cols], bits))
+    the knob a real table tunes per workload.  Each column is scaled
+    from its min/max (one small aggregate) before interleaving."""
+    row = df.agg(
+        *[F.min(c).cast("double").alias(f"lo{i}") for i, c in enumerate(cols)],
+        *[F.max(c).cast("double").alias(f"hi{i}") for i, c in enumerate(cols)],
+    ).collect()[0]
+    scaled = [
+        scale_to_bits(F.col(c), row[f"lo{i}"], row[f"hi{i}"], bits)
+        for i, c in enumerate(cols)
+    ]
+    keyed = df.withColumn("_z", zvalue(scaled, bits))
     (
         keyed.repartitionByRange(partitions, "_z")
         .sortWithinPartitions("_z")

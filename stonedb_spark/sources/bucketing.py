@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stonedb_spark.operators.zorder import scale_to_bits, zvalue
+
 
 def write_bucketed(
     df: DataFrame,
@@ -88,17 +90,10 @@ def zorder_key(cols: list[Column], bounds: list[tuple[float, float]], bits: int 
 
     ``bounds[i]`` = (lo, hi) of ``cols[i]`` — normally one tiny min/max
     agg at write time.  Pure bit arithmetic; codegen, no UDF."""
-    n = len(cols)
-    scaled = []
-    for c, (lo, hi) in zip(cols, bounds):
-        span = float(hi) - float(lo) or 1.0
-        s = F.floor((c.cast("double") - F.lit(float(lo))) / F.lit(span) * (1 << bits))
-        scaled.append(F.least(F.greatest(s, F.lit(0)), F.lit((1 << bits) - 1)).cast("long"))
-    z = F.lit(0).cast("long")
-    for b in range(bits):
-        for i, s in enumerate(scaled):
-            z = z.bitwiseOR(F.shiftleft(F.shiftright(s, b).bitwiseAND(F.lit(1)), b * n + i))
-    return z
+    return zvalue(
+        [scale_to_bits(c, lo, hi, bits) for c, (lo, hi) in zip(cols, bounds)],
+        bits,
+    )
 
 
 def zorder_write(

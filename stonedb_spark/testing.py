@@ -86,3 +86,16 @@ def check_query(spark, con, query, sf_dir: str) -> list[str]:
         return [] if len(sdf) >= 0 else ["spark query failed"]
     odf = con.execute(query.oracle).df()
     return compare_frames(sdf, odf)
+
+
+def script_vs_oracle(spark, script: str, designated: int = -1) -> list:
+    """Run a MySQL script through the dialect on Spark and compile it to
+    its DuckDB oracle; assert the ``designated`` SELECT agrees on both
+    and return its rows, sorted."""
+    from stonedb_spark.dialect import build_oracle_sql, run_script
+
+    pdf = run_script(spark, script, designated).toPandas()
+    odf = duckdb.connect().execute(build_oracle_sql(script, designated)).df()
+    problems = compare_frames(pdf, odf)
+    assert not problems, problems
+    return sorted(pdf.values.tolist())

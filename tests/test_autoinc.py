@@ -1,77 +1,83 @@
 """AUTO_INCREMENT lifecycle (auto_increment.test,
-init_auto_increment_value.test analogs): uniqueness + density across
-batch boundaries, explicit-id preservation, initial counter value."""
+init_auto_increment_value.test, issue1848.test analogs) through the
+dialect: explicit ids kept, the counter moved past them, the initial
+counter value, the counter carried across INSERT statements, and exact
+ids past 2^53.  Each script runs on Spark and against its DuckDB
+oracle."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+from stonedb_spark.testing import script_vs_oracle
 
-from stonedb_spark.sources.autoinc import append_with_auto_increment, with_auto_increment
-
-
-def _ids(df, col="id"):
-    return sorted(r[col] for r in df.select(col).collect())
-
-
-def test_dense_assignment_across_partitions(spark):
-    df = (
-        spark.range(1000)
-        .select(F.lit(None).cast("long").alias("id"), F.col("id").alias("payload"))
-        .repartition(7)
-    )
-    stamped, counter = with_auto_increment(df, "id", next_val=1)
-    ids = _ids(stamped)
-    assert ids == list(range(1, 1001))  # dense, gap-free, unique
-    assert counter == 1001
+SCRIPT_EXPLICIT_IDS = """
+create table t (id bigint not null auto_increment, v varchar(5),
+                primary key (id));
+insert into t (id, v) values (100, 'a'), (null, 'b'), (null, 'c'),
+                             (7, 'd'), (null, 'e');
+insert into t (v) values ('f');
+select * from t;
+"""
 
 
 def test_explicit_ids_preserved_and_bump_counter(spark):
-    rows = [(100, "a"), (None, "b"), (None, "c"), (7, "d"), (None, "e")]
-    df = spark.createDataFrame(rows, "id long, v string").repartition(3)
-    stamped, counter = with_auto_increment(df, "id", next_val=1)
-    got = {r["v"]: r["id"] for r in stamped.collect()}
-    assert got["a"] == 100 and got["d"] == 7  # explicit values kept
-    auto = sorted(v for k, v in got.items() if k in ("b", "c", "e"))
-    assert auto == [101, 102, 103]  # start past max explicit
-    assert counter == 104
+    """Explicit ids are kept; the counter starts past the largest one,
+    and a smaller explicit id later in the statement leaves it alone."""
+    assert script_vs_oracle(spark, SCRIPT_EXPLICIT_IDS) == [
+        [7, "d"], [100, "a"], [101, "b"], [102, "c"], [103, "e"],
+        [104, "f"],
+    ]
+
+
+SCRIPT_INIT_VALUE = """
+create table t (id int not null auto_increment, v int,
+                primary key (id)) auto_increment=500;
+insert into t (v) values (1), (2);
+insert into t (v) values (3);
+select * from t;
+"""
 
 
 def test_init_value_floor(spark):
-    df = spark.createDataFrame([(None, 1), (None, 2)], "id long, v int")
-    stamped, counter = with_auto_increment(df, "id", next_val=500)
-    assert _ids(stamped) == [500, 501] and counter == 502
+    """AUTO_INCREMENT=500 is the first id assigned."""
+    assert script_vs_oracle(spark, SCRIPT_INIT_VALUE) == [
+        [500, 1], [501, 2], [502, 3],
+    ]
 
 
-def test_append_lifecycle_across_batches(spark, tmp_path):
-    """Counter survives across batches via max-existing readback —
-    batch 2 continues exactly where batch 1 stopped (no overlap, no
-    gap), like the reference's persisted stats.auto_increment_value."""
-    target = str(tmp_path / "t.parquet")
-    b1 = spark.createDataFrame([(None, i) for i in range(10)], "id long, v int").repartition(4)
-    c1 = append_with_auto_increment(spark, b1, target, "id", init_value=100)
-    assert c1 == 110
-    b2 = spark.createDataFrame([(None, i) for i in range(5)], "id long, v int").repartition(2)
-    c2 = append_with_auto_increment(spark, b2, target, "id")
-    assert c2 == 115
-    all_ids = _ids(spark.read.parquet(target))
-    assert all_ids == list(range(100, 115))
-    # a third batch with one explicit high id forces a counter jump
-    b3 = spark.createDataFrame([(1000, 0), (None, 1)], "id long, v int")
-    c3 = append_with_auto_increment(spark, b3, target, "id")
-    assert c3 == 1002
-    assert 1001 in _ids(spark.read.parquet(target))
+SCRIPT_ACROSS_BATCHES = """
+create table t (id bigint not null auto_increment, v int,
+                primary key (id)) auto_increment=100;
+insert into t (v) values (0), (1), (2), (3), (4), (5), (6), (7), (8), (9);
+insert into t (v) values (0), (1), (2), (3), (4);
+insert into t (id, v) values (1000, 0), (null, 1);
+insert into t (v) values (2);
+select id from t;
+"""
+
+
+def test_append_lifecycle_across_batches(spark):
+    """The second INSERT continues where the first stopped (no overlap,
+    no gap); an explicit high id moves the counter past it."""
+    assert script_vs_oracle(spark, SCRIPT_ACROSS_BATCHES) == [
+        [i] for i in [*range(100, 115), 1000, 1001, 1002]
+    ]
+
+
+SCRIPT_BIG_SEED = """
+create table t (id bigint not null auto_increment, v varchar(5),
+                primary key (id)) auto_increment=9007199254740995;
+insert into t (id, v) values (9007199254740985, 'x'), (null, 'a'),
+                             (null, 'b'), (null, 'c');
+insert into t (v) values ('d');
+select * from t;
+"""
 
 
 def test_big_seed_exact_past_double_mantissa(spark):
-    """issue1848.test: a table created with AUTO_INCREMENT=3000000004910127
-    mixes explicit 3e15-range ids with assigned ones.  Push further —
-    seeds past 2^53 — to pin that ids never round through a double
-    mantissa (the stamp path is nullable Int64 end-to-end)."""
-    seed = 2**53 + 3  # not representable as float64 +1 steps
-    rows = [(seed - 10, "x"), (None, "a"), (None, "b"), (None, "c")]
-    df = spark.createDataFrame(rows, "id long, v string").repartition(2)
-    stamped, counter = with_auto_increment(df, "id", next_val=seed)
-    got = {r["v"]: r["id"] for r in stamped.collect()}
-    assert got["x"] == seed - 10
-    assert sorted(v for k, v in got.items() if k != "x") == [seed, seed + 1, seed + 2]
-    assert counter == seed + 3
+    """issue1848.test seeds the counter near 3e15; a seed past 2^53
+    pins that ids never round through a double."""
+    seed = 2**53 + 3
+    assert script_vs_oracle(spark, SCRIPT_BIG_SEED) == [
+        [seed - 10, "x"], [seed, "a"], [seed + 1, "b"], [seed + 2, "c"],
+        [seed + 3, "d"],
+    ]

@@ -25,7 +25,7 @@ from stonedb_spark.dialect import (
     run_script,
     split_mtr,
 )
-from stonedb_spark.testing import compare_frames
+from stonedb_spark.testing import compare_frames, script_vs_oracle
 
 
 # ---------------------------------------------------------------- text layer
@@ -947,13 +947,6 @@ def test_dml_where_only_temporal_normalization():
 # DuckDB oracle from the same text.
 
 
-def _spark_vs_oracle(spark, script: str, designated: int = -1) -> list:
-    pdf = run_script(spark, script, designated).toPandas()
-    odf = duckdb.connect().execute(build_oracle_sql(script, designated)).df()
-    assert not compare_frames(pdf, odf)
-    return sorted(pdf.values.tolist())
-
-
 SCRIPT_SP_CALL = """
 create table t (k int, v varchar(10));
 DELIMITER //
@@ -993,7 +986,7 @@ select * from t;
 def test_call_loops_and_case(spark):
     """WHILE, REPEAT … UNTIL, a labeled LOOP with LEAVE / ITERATE and a
     CASE statement, all unrolled at CALL time."""
-    assert _spark_vs_oracle(spark, SCRIPT_SP_CALL) == [
+    assert script_vs_oracle(spark, SCRIPT_SP_CALL) == [
         [0, "w"], [1, "w"], [2, "w"], [3, "w"], [4, "w"],
         [102, "r"], [203, "l"], [205, "l"], [207, "l"], [301, "nine"],
     ]
@@ -1038,7 +1031,7 @@ select grade(95) as a, grade(60) as b, grade(10) as c, total(4) as s,
 def test_function_if_merge_while_and_select_into(spark):
     """IF/ELSEIF arms merge per variable; WHILE over a bound argument
     unrolls; SELECT … INTO that finds no row keeps the prior value."""
-    assert _spark_vs_oracle(spark, SCRIPT_SP_FUNCTION) == [
+    assert script_vs_oracle(spark, SCRIPT_SP_FUNCTION) == [
         ["top", "mid", "low", 10, 20, -1],
     ]
 
@@ -1063,7 +1056,7 @@ select * from t1;
 def test_before_insert_trigger_sets_new(spark):
     """BEFORE INSERT trigger: SET NEW.x under IF / ELSE folds into the
     inserted rows."""
-    assert _spark_vs_oracle(spark, SCRIPT_SP_TRIGGER) == [
+    assert script_vs_oracle(spark, SCRIPT_SP_TRIGGER) == [
         [5, 0, "small"], [20, 40, "big"],
     ]
 
@@ -1094,61 +1087,11 @@ def test_stored_program_loop_cap(monkeypatch):
 
 # ------------------------------------------------- DDL and row triggers
 #
-# TRUNCATE, ALTER TABLE, TEMPORARY tables, triggers and AUTO_INCREMENT
-# run through the dialect, as the reference runs them in the MySQL SQL
-# layer above Tianmu.  The registered dialect_alter_* / dialect_trg_* /
-# dialect_temporary / dialect_auto_inc* entries check the MTR scripts;
-# these inline scripts pin the legs those scripts do not reach.
-
-
-SCRIPT_AUTO_INCREMENT_SEED = """
-create table t (id bigint not null auto_increment, v varchar(5),
-                primary key (id)) auto_increment=9007199254740995;
-insert into t (v) values ('a'), ('b');
-insert into t (id, v) values (9007199254740990, 'x');
-insert into t (v) values ('c');
-insert into t (id, v) values (9007199254741000, 'y'), (null, 'd');
-insert into t (v) values ('e');
-select * from t;
-"""
-
-
-def test_auto_increment_seed_explicit_ids_and_statements(spark):
-    """A seed past 2^53 assigns exact ids; an explicit id below the
-    counter is kept and leaves it alone; the counter carries across
-    INSERT statements; an explicit id above it moves it."""
-    assert _spark_vs_oracle(spark, SCRIPT_AUTO_INCREMENT_SEED) == [
-        [9007199254740990, "x"], [9007199254740995, "a"],
-        [9007199254740996, "b"], [9007199254740997, "c"],
-        [9007199254741000, "y"], [9007199254741001, "d"],
-        [9007199254741002, "e"],
-    ]
-
-
-SCRIPT_TEMPORARY_LIFECYCLE = """
-create table t (v int);
-insert into t values (1), (2);
-create temporary table t (v int);
-insert into t values (99);
-select * from t;
-create temporary table tt (x int);
-insert into tt values (0), (1), (2), (3), (4);
-insert into tt values (0), (1), (2);
---error 1050
-create temporary table tt (x int);
-select sum(x) as s, count(*) as n from tt;
-drop temporary table tt;
---error 1051
-drop temporary table tt;
-"""
-
-
-def test_temporary_table_shadows_and_drops(spark):
-    """A TEMPORARY table shadows a permanent one of the same name; a
-    second TEMPORARY table of one name is 1050; inserts append; a DROP
-    of a dropped table is 1051."""
-    assert _spark_vs_oracle(spark, SCRIPT_TEMPORARY_LIFECYCLE, 0) == [[99]]
-    assert _spark_vs_oracle(spark, SCRIPT_TEMPORARY_LIFECYCLE, 1) == [[13, 8]]
+# TRUNCATE, ALTER TABLE and triggers run through the dialect, as the
+# reference runs them in the MySQL SQL layer above Tianmu.  The
+# registered dialect_alter_* / dialect_trg_* entries check the MTR
+# scripts; these inline scripts pin the legs those scripts do not reach
+# (TEMPORARY tables: test_temptable.py; AUTO_INCREMENT: test_autoinc.py).
 
 
 SCRIPT_TRIGGER_UPDATE_AUDIT = """
@@ -1167,10 +1110,10 @@ select * from audit;
 def test_before_update_trigger_writes_audit_row(spark):
     """BEFORE UPDATE trigger inserting one audit row per updated row,
     with the NEW and OLD images of the row (issue1318's audit shape)."""
-    assert _spark_vs_oracle(spark, SCRIPT_TRIGGER_UPDATE_AUDIT, 0) == [
+    assert script_vs_oracle(spark, SCRIPT_TRIGGER_UPDATE_AUDIT, 0) == [
         [1, "brown"], [2, "jones"],
     ]
-    assert _spark_vs_oracle(spark, SCRIPT_TRIGGER_UPDATE_AUDIT, 1) == [
+    assert script_vs_oracle(spark, SCRIPT_TRIGGER_UPDATE_AUDIT, 1) == [
         [1, "brown", "smith", "update"],
     ]
 
@@ -1190,8 +1133,8 @@ select * from log;
 def test_after_delete_trigger_logs_old_rows(spark):
     """AFTER DELETE trigger logging OLD.* per deleted row; the row whose
     WHERE is NULL is neither deleted nor logged."""
-    assert _spark_vs_oracle(spark, SCRIPT_TRIGGER_DELETE_LOG, 0) == [[2]]
-    assert _spark_vs_oracle(spark, SCRIPT_TRIGGER_DELETE_LOG, 1) == [
+    assert script_vs_oracle(spark, SCRIPT_TRIGGER_DELETE_LOG, 0) == [[2]]
+    assert script_vs_oracle(spark, SCRIPT_TRIGGER_DELETE_LOG, 1) == [
         [1, 10], [3, 30],
     ]
 
@@ -1227,6 +1170,6 @@ def test_alter_validates_existing_rows(spark):
     value is 1264, a new PRIMARY KEY over repeats is 1062 and over a
     NULL is 1138.  A refused ALTER leaves the table as it was; FIRST /
     AFTER place new columns, which read their DEFAULT."""
-    assert _spark_vs_oracle(spark, SCRIPT_ALTER_VALIDATES) == [
+    assert script_vs_oracle(spark, SCRIPT_ALTER_VALIDATES) == [
         [7, 1, 8, "x", 300], [7, 2, 8, "y", 5], [7, 2, 8, "z", 7],
     ]

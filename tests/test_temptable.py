@@ -1,59 +1,62 @@
-"""TEMPORARY table lifecycle (temporary.test analog): create/insert/
-query/drop, permanent-table shadowing and un-shadowing, duplicate
-errors, and session-end cleanup."""
+"""TEMPORARY table lifecycle (temporary.test analog) through the
+dialect: create/insert/query/drop, the 1050 and 1051 errors, and a
+TEMPORARY table shadowing a permanent one until it is dropped.  Each
+script runs on Spark and against its DuckDB oracle."""
 
 from __future__ import annotations
 
-import os
+from stonedb_spark.testing import script_vs_oracle
 
-import pytest
-from pyspark.sql import functions as F
-
-from stonedb_spark.sources.temptable import (
-    create_temp_table,
-    drop_temp_table,
-    end_session,
-    insert_temp_table,
-    is_temp_table,
-)
-from stonedb_spark.sources.views import NotATableError, ViewExistsError
+SCRIPT_LIFECYCLE = """
+create table p (x int, tag varchar(5));
+insert into p values (0, 'even'), (1, 'odd');
+create temporary table tt (x int);
+insert into tt values (0), (1), (2), (3), (4);
+select sum(x) as s, count(*) as n from tt;
+select p.tag, count(*) as n from tt join p on mod(tt.x, 2) = p.x
+group by p.tag;
+insert into tt values (0), (1), (2);
+--error 1050
+create temporary table tt (x int);
+select sum(x) as s, count(*) as n from tt;
+drop temporary table tt;
+--error 1051
+drop temporary table tt;
+--error 1146
+select * from tt;
+select count(*) as n from p;
+"""
 
 
 def test_create_insert_query_drop(spark):
-    df = spark.range(5).select(F.col("id").alias("x"))
-    create_temp_table(spark, "tt_scratch", df)
-    assert is_temp_table(spark, "tt_scratch")
-    assert spark.table("tt_scratch").count() == 5
-    # queries compose with permanent tables like any relation
-    assert spark.sql("SELECT SUM(x) AS s FROM tt_scratch").collect()[0]["s"] == 10
-    insert_temp_table(spark, "tt_scratch", spark.range(3).select(F.col("id").alias("x")))
-    assert spark.table("tt_scratch").count() == 8
-    with pytest.raises(ViewExistsError):
-        create_temp_table(spark, "tt_scratch", df)
-    drop_temp_table(spark, "tt_scratch")
-    assert not is_temp_table(spark, "tt_scratch")
-    with pytest.raises(NotATableError):
-        drop_temp_table(spark, "tt_scratch")
+    """Inserts append, the table joins a permanent one like any
+    relation, a second TEMPORARY table of its name is 1050, and once
+    dropped it is gone: a second DROP is 1051."""
+    assert script_vs_oracle(spark, SCRIPT_LIFECYCLE, 0) == [[10, 5]]
+    assert script_vs_oracle(spark, SCRIPT_LIFECYCLE, 1) == [
+        ["even", 3], ["odd", 2],
+    ]
+    assert script_vs_oracle(spark, SCRIPT_LIFECYCLE, 2) == [[13, 8]]
+    assert script_vs_oracle(spark, SCRIPT_LIFECYCLE, 3) == [[2]]
+
+
+SCRIPT_SHADOW = """
+create table t (v int);
+insert into t values (1), (2);
+create temporary table t (v int);
+insert into t values (99);
+select * from t;
+drop table t;
+select * from t;
+insert into t values (3);
+select * from t;
+"""
 
 
 def test_shadowing_permanent_table(spark):
-    """temporary.test: a TEMPORARY table shadows a same-named permanent
-    table for this session; DROP restores the permanent binding."""
-    spark.createDataFrame([(1,), (2,)], "v int").createOrReplaceTempView("tt_perm")
-    try:
-        create_temp_table(spark, "tt_perm", spark.createDataFrame([(99,)], "v int"))
-        assert [r["v"] for r in spark.table("tt_perm").collect()] == [99]
-        drop_temp_table(spark, "tt_perm")
-        assert sorted(r["v"] for r in spark.table("tt_perm").collect()) == [1, 2]
-    finally:
-        spark.catalog.dropTempView("tt_perm")
-
-
-def test_session_end_cleanup(spark):
-    create_temp_table(spark, "tt_a", spark.range(2))
-    t_b = create_temp_table(spark, "tt_b", spark.range(3))
-    path_b = t_b.inputFiles()[0]
-    end_session(spark)
-    assert not is_temp_table(spark, "tt_a") and not is_temp_table(spark, "tt_b")
-    assert not spark.catalog.tableExists("tt_a")
-    assert not os.path.exists(os.path.dirname(path_b.replace("file:", "")))
+    """A TEMPORARY table shadows a same-named permanent table; DROP
+    removes the temporary one and the permanent table, rows intact,
+    takes inserts again."""
+    assert script_vs_oracle(spark, SCRIPT_SHADOW, 0) == [[99]]
+    assert script_vs_oracle(spark, SCRIPT_SHADOW, 1) == [[1], [2]]
+    assert script_vs_oracle(spark, SCRIPT_SHADOW, 2) == [[1], [2], [3]]
