@@ -1864,6 +1864,10 @@ def _unquote_strlit(v: str) -> str:
     return s
 
 
+def _creates_temporary(stmt: str) -> bool:
+    return bool(re.match(r"\s*CREATE\s+TEMPORARY\b", stmt, re.I))
+
+
 def parse_create_table(stmt: str) -> TableDef:
     m = re.match(
         r"CREATE\s+(?:TEMPORARY\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
@@ -2025,9 +2029,7 @@ def parse_create_table(stmt: str) -> TableDef:
             )
         )
     td = TableDef(name, cols, pk)
-    td.temporary = bool(
-        re.match(r"\s*CREATE\s+TEMPORARY\b", stmt, re.I)
-    )
+    td.temporary = _creates_temporary(stmt)
     am = re.search(r"\bAUTO_INCREMENT\s*=\s*(\d+)", stmt, re.I)
     if am:  # table option seeds the counter (init_auto_increment_value)
         td.next_auto = int(am.group(1))
@@ -7618,6 +7620,17 @@ def _parked_name(name: str) -> str:
     return f"{_physname(name)}__shadowed"
 
 
+def _park_shadowed(run: "MTRRun", name: str, temporary: bool) -> None:
+    """CREATE TEMPORARY TABLE over a permanent table of its name: park
+    the permanent table until the temporary one is dropped."""
+    prior = run.tables.get(name.lower())
+    if temporary and prior is not None and not prior.temporary:
+        run.spark.sql(
+            f"ALTER TABLE `{_physname(prior.name)}` "
+            f"RENAME TO `{_parked_name(prior.name)}`")
+        run.shadowed[name.lower()] = prior
+
+
 @dataclass
 class MTRRun:
     """Execution state for one script run."""
@@ -10892,6 +10905,7 @@ def run_statement(run: MTRRun, stmt: str):
         inner = rewrite_expr(select_part, "spark")
         proj = _merged_ctas_projection(tdd, sel_names, "spark")
         name = tdd.name
+        _park_shadowed(run, name, tdd.temporary)
         run.sql(f"DROP TABLE IF EXISTS `{name}`")
         run.incarnation += 1
         loc = f"{run.workdir}/{name}_{run.incarnation}"
@@ -10904,7 +10918,7 @@ def run_statement(run: MTRRun, stmt: str):
                       _duck_type_from_spark(f.dataType), None)
             for f in run.spark.table(f"`{_physname(name)}`").schema.fields
         ]
-        run.tables[name.lower()] = TableDef(name, cols)
+        run.tables[name.lower()] = TableDef(name, cols, temporary=tdd.temporary)
         return None
     cm = re.match(
         r"^\s*CREATE\s+(?:TEMPORARY\s+)?TABLE\s+(`[^`]+`|\w+)\s+"
@@ -10915,6 +10929,8 @@ def run_statement(run: MTRRun, stmt: str):
     if cm:  # CTAS — MySQL allows both `AS SELECT` and bare `SELECT`
         name = _unquote_ident(cm.group(1))
         sel = rewrite_expr(cm.group(2), "spark")
+        temporary = _creates_temporary(s)
+        _park_shadowed(run, name, temporary)
         run.sql(f"DROP TABLE IF EXISTS `{name}`")
         run.incarnation += 1
         loc = f"{run.workdir}/{name}_{run.incarnation}"
@@ -10926,7 +10942,7 @@ def run_statement(run: MTRRun, stmt: str):
                       _duck_type_from_spark(f.dataType), None)
             for f in run.spark.table(f"`{_physname(name)}`").schema.fields
         ]
-        run.tables[name.lower()] = TableDef(name, cols)
+        run.tables[name.lower()] = TableDef(name, cols, temporary=temporary)
         return None
     lm = re.match(
         r"^\s*CREATE\s+(?:TEMPORARY\s+)?TABLE\s+(`[^`]+`|\w+)\s+LIKE\s+"
@@ -10937,7 +10953,9 @@ def run_statement(run: MTRRun, stmt: str):
     if lm:  # CREATE TABLE x LIKE y: clone schema, start empty
         name = _unquote_ident(lm.group(1))
         src = run.tables[_unquote_ident(lm.group(2)).lower()]
-        td = TableDef(name, list(src.columns), list(src.pk))
+        td = TableDef(name, list(src.columns), list(src.pk),
+                      temporary=_creates_temporary(s))
+        _park_shadowed(run, name, td.temporary)
         run.tables[name.lower()] = td
         coldefs = ", ".join(f"`{c.name}` {c.spark_type}" for c in td.columns)
         run.sql(f"DROP TABLE IF EXISTS `{name}`")
@@ -10980,10 +10998,7 @@ def run_statement(run: MTRRun, stmt: str):
                     f"Table '{td.name}' already exists "
                     f"(MySQL error 1050 analog)"
                 )
-            run.spark.sql(
-                f"ALTER TABLE `{_physname(prior.name)}` "
-                f"RENAME TO `{_parked_name(prior.name)}`")
-            run.shadowed[td.name.lower()] = prior
+            _park_shadowed(run, td.name, td.temporary)
         run.tables[td.name.lower()] = td
         coldefs = ", ".join(f"`{c.name}` {c.spark_type}" for c in td.columns)
         run.sql(f"DROP TABLE IF EXISTS `{td.name}`")
@@ -11871,6 +11886,15 @@ def build_oracle_sql(
             n == f"{_physname(t)}__c{incarn[t]}v0" for n, _ in ctes
         )
 
+    def park(t: str, temporary: bool) -> None:
+        """A TEMPORARY table hides the permanent table ``t``: keep the
+        permanent one's last version for the DROP that brings it back."""
+        if temporary and t in tables and not tables[t].temporary:
+            flush(t)
+            if versions[t] == 0 and not _has_version0(t):
+                ctes.append((vname(t), _duck_values_cte(tables[t], [])))
+            shadowed[t] = (tables[t], vname(t))
+
     def retarget(sql: str) -> str:
         """Point table references at their current CTE version —
         relation positions only (after FROM / JOIN / a relation comma),
@@ -12085,6 +12109,7 @@ def build_oracle_sql(
             sel = retarget(rewrite_expr(select_part, "duck"))
             proj = _merged_ctas_projection(tdd, sel_names, "duck")
             key = tdd.name.lower()
+            park(key, tdd.temporary)
             # register the merged column list (declared cols keep their
             # types; select-derived extras read as text) so a later
             # INSERT INTO the CTAS table parses (issue226)
@@ -12094,7 +12119,8 @@ def build_oracle_sql(
                 if n.lower() not in have:
                     merged_cols.append(
                         ColumnDef(n, "STRING", _DERIVED, None))
-            tables[key] = TableDef(tdd.name, merged_cols)
+            tables[key] = TableDef(tdd.name, merged_cols,
+                                   temporary=tdd.temporary)
             versions[key] = 0
             incarn[key] = incarn.get(key, 0) + 1
             ctes.append(
@@ -12121,7 +12147,9 @@ def build_oracle_sql(
                 ]
             except (ValueError, KeyError):
                 ctas_cols = []
-            tables[key] = TableDef(name, ctas_cols)
+            temporary = _creates_temporary(s)
+            park(key, temporary)
+            tables[key] = TableDef(name, ctas_cols, temporary=temporary)
             versions[key] = 0
             incarn[key] = incarn.get(key, 0) + 1
             ctes.append((vname(key), sel))
@@ -12133,11 +12161,7 @@ def build_oracle_sql(
                 r"\bIF\s+NOT\s+EXISTS\b", s, re.I
             ):
                 continue  # keep the existing table untouched
-            if td.temporary and key in tables and not tables[key].temporary:
-                flush(key)
-                if versions[key] == 0 and not _has_version0(key):
-                    ctes.append((vname(key), _duck_values_cte(tables[key], [])))
-                shadowed[key] = (tables[key], vname(key))
+            park(key, td.temporary)
             tables[key] = td
             versions[key] = 0
             incarn[key] = incarn.get(key, 0) + 1
@@ -12180,7 +12204,10 @@ def build_oracle_sql(
             name = _unquote_ident(lm.group(1))
             src = tables[_unquote_ident(lm.group(2)).lower()]
             key = name.lower()
-            tables[key] = TableDef(name, list(src.columns), list(src.pk))
+            temporary = _creates_temporary(s)
+            park(key, temporary)
+            tables[key] = TableDef(name, list(src.columns), list(src.pk),
+                                   temporary=temporary)
             versions[key] = 0
             incarn[key] = incarn.get(key, 0) + 1
             pending_rows[key] = []

@@ -50,8 +50,8 @@ def scaled_long(col: Column | str, digits: int) -> Column:
     is a scaled integer; sums run in int64, AggregatorSum64,
     storage/tianmu/optimizer/aggregator_basic.h:43).
 
-    ``round()`` recovers the exact decimal the double approximates; all
-    arithmetic on the scaled values is integer-exact.  Long partial sums
+    Rounding HALF_UP recovers the exact decimal the double approximates;
+    all arithmetic on the scaled values is integer-exact.  Long partial sums
     are safe while (rows per partition) × (max |value|) < 2^63 — with
     ≤128 MB parquet splits (~1.3M rows) that allows per-row magnitudes up
     to ~7e12, far above any money expression here; the final cross-
@@ -59,5 +59,19 @@ def scaled_long(col: Column | str, digits: int) -> Column:
     GLOBAL sum does grow past int64 at large scale factors.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.round(c * (10**digits), 0).cast("long")
+    x = c * (10**digits)
+    # Same value as ``F.round(x, 0)`` without its per-row
+    # BigDecimal.valueOf → Double.toString: below 2^52 a double is a tie
+    # exactly when its shortest decimal is one, and otherwise that
+    # decimal and the double round to the same integer.  Ties go away
+    # from zero (HALF_UP), everything else to the nearest integer (rint).
+    # |x| - floor(|x|) is exact (x - floor(x) is not for x in (-1, 0):
+    # -0.49999999999999994 + 1 rounds to 0.5).  NaN and ±Infinity reach
+    # the long cast as before.
+    a = F.abs(x)
+    return (
+        F.when(a - F.floor(a) == 0.5, x + F.signum(x) * 0.5)
+        .otherwise(F.rint(x))
+        .cast("long")
+    )
 

@@ -84,3 +84,44 @@ def partitionless_windows(df: DataFrame) -> list[str]:
         if not first or " ASC" in first or " DESC" in first:
             out.append(first or "<empty spec>")
     return out
+
+
+def _descend(root) -> list:
+    """Every node under the physical plan node ``root``, as JVM objects.
+
+    Descends ``AdaptiveSparkPlanExec.finalPhysicalPlan()`` and each
+    ``*QueryStageExec.plan()``, so after an action the list holds the
+    plan AQE actually ran (before one, the initial plan)."""
+    out: list = []
+    todo = [root]
+    while todo:
+        node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.finalPhysicalPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        out.append(node)
+        kids = node.children()
+        todo.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def broadcast_exchanges(df: DataFrame) -> list[tuple[int, list[str]]]:
+    """``(output rows, scanned root paths)`` of every BroadcastExchange
+    in the executed plan.  Row counts are the exchange's
+    ``numOutputRows`` metric, so they are real only after an action."""
+    out = []
+    for node in _descend(df._jdf.queryExecution().executedPlan()):  # noqa: SLF001
+        if node.getClass().getSimpleName() != "BroadcastExchangeExec":
+            continue
+        paths = [
+            str(p)
+            for scan in _descend(node)
+            if scan.getClass().getSimpleName() == "FileSourceScanExec"
+            for p in scan.relation().location().rootPaths().mkString("\n").split("\n")
+        ]
+        out.append((int(node.metrics().apply("numOutputRows").value()), paths))
+    return out

@@ -371,11 +371,18 @@ def tpch_q5(spark, sf_dir):
         (o["o_orderdate"] >= F.lit("1996-01-01").cast("timestamp"))
         & (o["o_orderdate"] < F.lit("1997-01-01").cast("timestamp"))
     ).join(c2p, o["o_custkey"] == F.col("c_custkey"))
+    # Build on o2, probe lineitem.  Unhinted, the planner sizes a
+    # lineitem projection from the compressed file, finds it under the
+    # auto-broadcast threshold at sf0.1 and builds the hash relation on
+    # the 600k-row fact side instead.  o2 keeps 1/7 of orders (one year
+    # of seven) × 1/5 (ASIA); same gate as the dim hints, payload
+    # (o_orderkey, c_nationkey).
+    o2h = B(o2) if _dim_fits_broadcast(sf_dir, "orders", 1 / 35, 16) else o2
     # same gate for the supplier-side hint (supplier is 10k×SF rows —
     # 1/15 of customer, but still SF-growing; payload ≈ 2 keys + n_name)
     s2h = B(s2) if _dim_fits_broadcast(sf_dir, "supplier", 1 / 5, 40) else s2
     return (
-        o2.join(l, l["l_orderkey"] == o2["o_orderkey"])
+        o2h.join(l, l["l_orderkey"] == o2["o_orderkey"])
         .join(
             s2h,
             (l["l_suppkey"] == s2["s_suppkey"]) & (o2["c_nationkey"] == s2["s_nationkey"]),
@@ -1136,26 +1143,32 @@ ORDER BY numwait DESC, s_name
     doc="TPC-H Q21 waiting suppliers — EXISTS + NOT EXISTS anti-join",
 )
 def tpch_q21(spark, sf_dir):
-    spark  # noqa: B018 — tables come via temp views
     load_tables(spark, sf_dir)
     # Correlated EXISTS/NOT EXISTS with inequality correlation is exactly
     # what Catalyst's subquery decorrelation handles; express in SQL.
     # A hand-written single-scan rewrite (per-order conditional
     # COUNT(DISTINCT) + join back to late rows) measured no faster:
     # Catalyst already plans the efficient shape.
+    # * The due date is computed once per order in the derived table,
+    #   not once per joined (l1, o) and (l3, o) pair.
+    # * Unhinted, the two decorrelated semi/anti joins build a broadcast
+    #   hash relation on lineitem (its compressed file is under the
+    #   auto-broadcast threshold at sf0.1).  SHUFFLE_HASH keeps them
+    #   partitioned on l_orderkey at every scale (SCALING.md "Joins").
     return spark.sql(
         """
 SELECT s_name, COUNT(*) AS numwait
 FROM supplier s
 JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-JOIN orders o ON o.o_orderkey = l1.l_orderkey
-WHERE o.o_orderstatus = 'F'
-  AND l1.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-  AND EXISTS (SELECT 1 FROM lineitem l2
+JOIN (SELECT o_orderkey, o_orderdate + INTERVAL 60 DAY AS o_due
+      FROM orders WHERE o_orderstatus = 'F') o
+  ON o.o_orderkey = l1.l_orderkey
+WHERE l1.l_shipdate > o.o_due
+  AND EXISTS (SELECT /*+ SHUFFLE_HASH(l2) */ 1 FROM lineitem l2
               WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (SELECT 1 FROM lineitem l3
+  AND NOT EXISTS (SELECT /*+ SHUFFLE_HASH(l3) */ 1 FROM lineitem l3
                   WHERE l3.l_orderkey = l1.l_orderkey AND l3.l_suppkey <> l1.l_suppkey
-                    AND l3.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
+                    AND l3.l_shipdate > o.o_due)
 GROUP BY s_name
 ORDER BY numwait DESC, s_name
 """

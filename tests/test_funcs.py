@@ -441,3 +441,44 @@ def test_inet_shims_edge_grid(spark):
     back = {r["n"]: r["ip"] for r in ndf.select("n", M.inet_ntoa(F.col("n")).alias("ip")).collect()}
     for n, want in nums:
         assert back[n] == want, (n, back[n], want)
+
+
+def test_scaled_long_matches_round_half_up(spark):
+    """``exact.scaled_long`` rounds with floor/rint/signum instead of
+    ``F.round`` (a BigDecimal per value); it must give the same long as
+    ``F.round(x * 10^d, 0).cast('long')`` on ties of either sign, on the
+    doubles just below a tie, past 2^52, on -0.0 and NULL, on a grid of
+    3-decimal money values, and on NaN/±Infinity (whatever the session's
+    ANSI mode makes of the cast: the same value or the same error)."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from stonedb_spark.functions.exact import scaled_long
+
+    edge = [0.5, -0.5, 1.5, -1.5, 2.5, -2.5, 0.49999999999999994,
+            -0.49999999999999994, 2.4999999999999996, 1e15 + 0.5,
+            -(1e15 + 0.5), 2.0**52 - 0.5, 2.0**52 + 1, -0.0, 0.0, None,
+            1.005, 0.015, 0.125, -0.125, 12.345, 99.995]
+    rng = np.random.default_rng(11)
+    grid = (rng.integers(-10**7, 10**7, 400) / 1000.0).tolist()
+    df = spark.createDataFrame([(v,) for v in edge + grid], "x double")
+    for digits in (0, 2):
+        old = F.round(F.col("x") * (10**digits), 0).cast("long")
+        rows = df.select("x", old.alias("old"),
+                         scaled_long("x", digits).alias("new")).collect()
+        bad = [(r["x"], r["old"], r["new"]) for r in rows if r["old"] != r["new"]]
+        assert not bad, (digits, bad[:10])
+    assert df.select(scaled_long("x", 0).alias("v")).collect()[:6] == [
+        (1,), (-1,), (2,), (-2,), (3,), (-3,)]
+
+    special = spark.createDataFrame(
+        [(float("nan"),), (float("inf"),), (float("-inf"),)], "x double")
+
+    def outcome(col):
+        try:
+            return [r[0] for r in special.select(col).collect()]
+        except Exception as e:  # noqa: BLE001 — the ANSI cast error
+            return type(e).__name__
+    for digits in (0, 2):
+        old = F.round(F.col("x") * (10**digits), 0).cast("long")
+        assert outcome(scaled_long("x", digits)) == outcome(old)

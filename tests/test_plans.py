@@ -111,6 +111,49 @@ def test_q5_q7_prejoin_survives_broadcast_gate(spark, sf_dir, monkeypatch):
         assert df.collect() == baseline[name], name
 
 
+def test_q5_q21_probe_lineitem_not_broadcast(spark, sf_dir):
+    """Tianmu's hash joiner builds on the smaller side and probes the
+    fact table (joiner_hash.cpp:52).  Unhinted, the planner sizes a
+    lineitem projection from its compressed file, finds it under the
+    auto-broadcast threshold and broadcasts it: in the plan AQE ran, no
+    BroadcastExchange of q5 or q21 may read lineitem."""
+    from stonedb_spark.plans.inspect import broadcast_exchanges
+
+    for name in ("tpch_q5", "tpch_q21"):
+        df = _build(spark, sf_dir, name)
+        df.collect()
+        exchanges = broadcast_exchanges(df)
+        assert exchanges, name
+        bad = [
+            (rows, paths) for rows, paths in exchanges
+            if any(p.rstrip("/").endswith("lineitem.parquet") for p in paths)
+        ]
+        assert not bad, (name, bad)
+
+
+def _q5_orders_hinted(df) -> bool:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return any(
+        re.search(r"l_orderkey#\d+L? = o_orderkey", line)
+        and "Hint=(strategy=broadcast)" in line
+        for line in plan.splitlines()
+        if "Join " in line
+    )
+
+
+def test_q5_orders_hint_follows_broadcast_gate(spark, sf_dir, monkeypatch):
+    """q5's broadcast of the pre-joined orders side is scale-gated like
+    its dim hints: with the gate shut the hint is gone and the rows are
+    unchanged."""
+    hinted = _build(spark, sf_dir, "tpch_q5")
+    assert _q5_orders_hinted(hinted)
+    rows = hinted.collect()
+    monkeypatch.setenv("SPARK_GRAFT_BCAST_DIM_CAP", "0")
+    df = _build(spark, sf_dir, "tpch_q5")
+    assert not _q5_orders_hinted(df)
+    assert df.collect() == rows
+
+
 def test_theta_range_join_is_not_nested_loop(spark, sf_dir):
     """The binned rewrite must plan as an equi-join, not BNLJ."""
     df = _build(spark, sf_dir, "join_theta_range")

@@ -60,3 +60,37 @@ def test_shadowing_permanent_table(spark):
     assert script_vs_oracle(spark, SCRIPT_SHADOW, 0) == [[99]]
     assert script_vs_oracle(spark, SCRIPT_SHADOW, 1) == [[1], [2]]
     assert script_vs_oracle(spark, SCRIPT_SHADOW, 2) == [[1], [2], [3]]
+
+
+SCRIPT_SHADOW_LIKE = """
+create table t (v int);
+insert into t values (1), (2);
+create table s (v int);
+create temporary table t like s;
+insert into t values (99);
+select * from t;
+drop table t;
+select * from t;
+"""
+
+SCRIPT_SHADOW_CTAS = """
+create table t (v int);
+insert into t values (1), (2);
+create table s (v int);
+insert into s values (7);
+create temporary table t select * from s;
+insert into t values (99);
+select * from t;
+drop table t;
+select * from t;
+"""
+
+
+def test_shadowing_by_like_and_ctas(spark):
+    """The LIKE and CTAS forms of CREATE TEMPORARY TABLE hide the
+    permanent table like the column-definition form: DROP brings it
+    back with its rows."""
+    assert script_vs_oracle(spark, SCRIPT_SHADOW_LIKE, 0) == [[99]]
+    assert script_vs_oracle(spark, SCRIPT_SHADOW_LIKE, 1) == [[1], [2]]
+    assert script_vs_oracle(spark, SCRIPT_SHADOW_CTAS, 0) == [[7], [99]]
+    assert script_vs_oracle(spark, SCRIPT_SHADOW_CTAS, 1) == [[1], [2]]
