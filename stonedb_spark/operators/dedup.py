@@ -650,7 +650,6 @@ def incremental_lsh_dedup(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.5,
-    index: CorpusLSHIndex | None = None,
 ) -> DataFrame:
     """Dedupe an INCREMENTAL batch against an existing corpus — the
     production shape: the corpus LSH index (minhash band keys) is built
@@ -660,15 +659,14 @@ def incremental_lsh_dedup(
     with exact Jaccard bounded by the candidate count (same discipline
     as minhash_lsh_pairs).
 
-    Pass a prebuilt ``index`` (build_lsh_index) when verdicting many
-    batches against the same frozen corpus — e.g. the streaming fold in
-    streaming/dedup.py — so the corpus-sized work runs exactly once.
+    To verdict many batches against the same frozen corpus, build the
+    index once (build_lsh_index) and call probe_lsh_index per batch, so
+    the corpus-sized work runs exactly once.
 
     Returns one row per batch doc: (batch_id, is_dup, best_match,
     best_jaccard) — is_dup=1 iff some corpus doc clears ``threshold``;
     best_match/best_jaccard identify the strongest collision (NULL for
     clean docs).  Requires doc_ids disjoint across the two frames.
     """
-    if index is None:
-        index = build_lsh_index(corpus, text_col, k)
+    index = build_lsh_index(corpus, text_col, k)
     return probe_lsh_index(index, batch, text_col, threshold)

@@ -702,9 +702,8 @@ def multimodal_audio_chunks(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Event-stream batch analog: hourly windowed aggregation (the Structured
-# Streaming pipeline in stonedb_spark.streaming computes the same plan
-# incrementally; SURVEY §2.10 — reference has only an ingest pipeline).
+# Event-stream batch analog: hourly windowed aggregation (SURVEY §2.10 —
+# the reference has only an ingest pipeline).
 @register(
     "events_time_window",
     oracle="""
@@ -4398,7 +4397,7 @@ def multimodal_png_decode(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Delta-join IVM parity (streaming/ivm_join.py): the maintained join
+# Delta-join IVM parity (operators/ivm.py): the maintained join
 # view after 5 interleaved delta batches (3 orders splits, 2 customer
 # splits) must equal the plain join — the oracle IS that plain join.
 # Each batch's contribution is J += ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB with the
@@ -4417,7 +4416,7 @@ ORDER BY o_orderkey
     "view == full join (delta-broadcast algebra, append-only state)",
 )
 def pipeline_ivm_join_parity(spark, sf_dir):
-    from stonedb_spark.streaming.ivm_join import delta_join
+    from stonedb_spark.operators.ivm import delta_join
 
     t = load_tables(spark, sf_dir)
     orders = (
@@ -4468,7 +4467,7 @@ ORDER BY o_orderkey
     "consolidated view == join of net states",
 )
 def pipeline_ivm_join_retract(spark, sf_dir):
-    from stonedb_spark.streaming.ivm_join import consolidate, delta_join_weighted
+    from stonedb_spark.operators.ivm import consolidate, delta_join_weighted
 
     t = load_tables(spark, sf_dir)
     orders = (
@@ -4503,7 +4502,7 @@ def pipeline_ivm_join_retract(spark, sf_dir):
     )
 
 
-# Retraction form of the aggregate matview (streaming/matview.py
+# Retraction form of the aggregate matview (operators/ivm.py
 # fold_weighted_agg): inserts then w=-1 deletes of every 3rd event —
 # the maintained (count, exact-sum) view must equal the aggregate of
 # the surviving rows, which is what the oracle computes directly.
@@ -4522,7 +4521,7 @@ ORDER BY event_type
     "net-zero groups vanish",
 )
 def pipeline_ivm_agg_retract(spark, sf_dir):
-    from stonedb_spark.streaming.matview import fold_weighted_agg
+    from stonedb_spark.operators.ivm import fold_weighted_agg
 
     ev = (
         load_tables(spark, sf_dir)["events"]
@@ -4544,7 +4543,7 @@ def pipeline_ivm_agg_retract(spark, sf_dir):
 
 # MIN/MAX IVM: not invertible, so deletes at a group's extremum mark
 # the group dirty and trigger a per-group rescan of the base (semi-join
-# bounded by the dirty-key set) — streaming/matview.fold_minmax_agg.
+# bounded by the dirty-key set) — operators/ivm.fold_minmax_agg.
 # The %3 deletes hit many per-group extrema, so both the clean fold and
 # the rescan path execute; the oracle is the direct recomputation over
 # the surviving rows.
@@ -4564,7 +4563,7 @@ ORDER BY event_type
     "monotonically, deletes of a group's min/max repair via bounded rescan",
 )
 def pipeline_ivm_minmax(spark, sf_dir):
-    from stonedb_spark.streaming.matview import fold_minmax_agg
+    from stonedb_spark.operators.ivm import fold_minmax_agg
 
     ev = (
         load_tables(spark, sf_dir)["events"]
@@ -4589,7 +4588,7 @@ def pipeline_ivm_minmax(spark, sf_dir):
 # LEFT-join view over the maintained pieces: the oracle is the direct
 # LEFT JOIN of the net states (right side = even custkeys minus the
 # retracted %6 ones), the Spark side reads it from inner-view +
-# anti-join null-extension (streaming/ivm_join.left_view).
+# anti-join null-extension (operators/ivm.left_view).
 @register(
     "pipeline_ivm_left_join",
     oracle="""
@@ -4606,7 +4605,7 @@ ORDER BY o_orderkey
     "right rows flip their matches back to unmatched",
 )
 def pipeline_ivm_left_join(spark, sf_dir):
-    from stonedb_spark.streaming.ivm_join import delta_join_weighted, left_view
+    from stonedb_spark.operators.ivm import delta_join_weighted, left_view
 
     t = load_tables(spark, sf_dir)
     orders = (

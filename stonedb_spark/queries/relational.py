@@ -1051,9 +1051,8 @@ def agg_approx_rough(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Beyond parity: sessionization (gaps-and-islands) over the events table —
-# the batch twin of the streaming stateful operator in
-# streaming/sessionize.py.  Pure window functions: a session starts when
+# Beyond parity: sessionization (gaps-and-islands) over the events table.
+# Pure window functions: a session starts when
 # the gap to the previous event of the same user exceeds 30 minutes;
 # session id = running count of starts.  At scale this is one shuffle on
 # user_id; state never materializes on the driver.

@@ -20,10 +20,7 @@ plan: zero `Exchange hashpartitioning` nodes.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from stonedb_spark.operators.zorder import scale_to_bits, zvalue
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -43,13 +40,6 @@ def write_bucketed(
     w = df.write.mode(mode).format("parquet").bucketBy(num_buckets, *bucket_cols)
     w = w.sortBy(*(sort_cols or bucket_cols))
     w.saveAsTable(table)
-
-
-def colocated_join(
-    spark: SparkSession, left: str, right: str, on: list[str] | str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables; the plan must carry no shuffle."""
-    return spark.table(left).join(spark.table(right), on, how)
 
 
 def write_with_bloom(
@@ -78,40 +68,3 @@ def write_with_bloom(
         w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
         w = w.option(f"parquet.bloom.filter.expected.ndv#{c}", str(ndv))
     w.parquet(path)
-
-
-def zorder_key(cols: list[Column], bounds: list[tuple[float, float]], bits: int = 10) -> Column:
-    """Morton (Z-order) interleave of min-max-scaled columns — the
-    multi-column locality analog of the reference's single-key sorted
-    packs: clustering on z keeps row-group min/max TIGHT ON EVERY
-    participating column at once, so the Knowledge-Grid-style stats
-    prune scans filtered on any of them (Delta OPTIMIZE ZORDER BY's
-    mechanism, built from plain expressions).
-
-    ``bounds[i]`` = (lo, hi) of ``cols[i]`` — normally one tiny min/max
-    agg at write time.  Pure bit arithmetic; codegen, no UDF."""
-    return zvalue(
-        [scale_to_bits(c, lo, hi, bits) for c, (lo, hi) in zip(cols, bounds)],
-        bits,
-    )
-
-
-def zorder_write(
-    df: DataFrame, path: str, cols: list[str], bits: int = 10, n_files: int | None = None
-) -> None:
-    """Write ``df`` clustered by the Z-order of ``cols``: range-partition
-    on z (each output file covers one z range) and sort within files.
-    Bounds come from one min/max aggregate — scalar metadata, the same
-    cost class as a broadcast threshold check."""
-    row = df.agg(
-        *[F.min(c).cast("double").alias(f"lo{i}") for i, c in enumerate(cols)],
-        *[F.max(c).cast("double").alias(f"hi{i}") for i, c in enumerate(cols)],
-    ).collect()[0]
-    bounds = [(row[f"lo{i}"], row[f"hi{i}"]) for i in range(len(cols))]
-    z = zorder_key([F.col(c) for c in cols], bounds, bits)
-    out = df.withColumn("__z__", z)
-    if n_files:
-        out = out.repartitionByRange(n_files, "__z__")
-    else:
-        out = out.repartitionByRange("__z__")
-    out.sortWithinPartitions("__z__").drop("__z__").write.mode("overwrite").parquet(path)

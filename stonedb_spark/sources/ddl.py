@@ -12,22 +12,41 @@ from __future__ import annotations
 
 import os
 import shutil
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 
-def _rewrite(df: DataFrame, path: str) -> None:
-    """Copy-on-write rewrite: stage to a sibling dir, then swap.
+def _parquet_bytes(path: str) -> int:
+    """On-disk footprint of a parquet table directory."""
+    return sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+def _staged_swap(path: str, write: Callable[[str], None]) -> None:
+    """Copy-on-write rewrite: ``write`` the new table into a sibling
+    staging dir, then swap it in.
 
     Reading lazily from ``path`` while overwriting the same ``path``
     deletes the source files mid-scan; a transactional table format
     (Delta) makes this a log commit — on plain parquet the staging dir +
-    directory swap provides the same never-in-place discipline.
+    directory swap provides the same never-in-place discipline.  The swap
+    renames the old table to a backup before renaming staging into place
+    and only then removes the backup, so a stop at any point leaves the
+    table (or its backup) whole on disk.
     """
-    staging = path.rstrip("/") + ".__staging__"
-    df.write.mode("overwrite").parquet(staging)
-    shutil.rmtree(path)
-    shutil.move(staging, path)
+    base = path.rstrip("/")
+    staging, backup = base + ".__staging__", base + ".__old__"
+    write(staging)
+    if os.path.exists(backup):
+        shutil.rmtree(backup)
+    os.rename(base, backup)
+    os.rename(staging, base)
+    shutil.rmtree(backup, ignore_errors=True)
 
 
 def compact_table(
@@ -38,7 +57,7 @@ def compact_table(
 
     This is the reference's background delta-merge
     (TianmuTable::MergeDeltaTable, storage/tianmu/core/
-    tianmu_table.cpp:1598; merge loop engine.cpp:1454): streaming/
+    tianmu_table.cpp:1598; merge loop engine.cpp:1454): batched or
     delayed appends accumulate small files (delta-store rows), and a
     maintenance pass folds them into full-size columnar files so scans
     read few large row groups instead of many tiny ones.  File count =
@@ -46,15 +65,9 @@ def compact_table(
     never a row count collected to the driver.  On Delta this is
     OPTIMIZE (+ Z-ORDER); on plain parquet it is a staged rewrite.
     """
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, -(-total // target_file_bytes))
-    df = spark.read.parquet(path)
-    _rewrite(df.repartition(n_files), path)
+    n_files = max(1, -(-_parquet_bytes(path) // target_file_bytes))
+    df = spark.read.parquet(path).repartition(n_files)
+    _staged_swap(path, lambda staging: df.write.mode("overwrite").parquet(staging))
     return n_files
 
 
@@ -67,34 +80,19 @@ def optimize_zorder(
 ) -> int:
     """OPTIMIZE ... ZORDER BY analog: one maintenance pass that both
     compacts small files AND clusters the rewrite on the Morton key of
-    ``cols`` (operators/zorder.py), so subsequent multi-column range
+    ``cols`` (operators/zorder.zorder_write, which scales each column
+    to the same bit width first), so subsequent multi-column range
     scans prune row groups on every listed column.  This is the full
     lakehouse maintenance verb: compact_table alone fixes file sizing,
     this also fixes ROW ORDER.  Returns the new file count."""
-    from pyspark.sql import functions as F
+    from stonedb_spark.operators.zorder import zorder_write
 
-    from stonedb_spark.operators.zorder import zvalue
-
-    total = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_files = max(1, -(-total // target_file_bytes))
+    n_files = max(1, -(-_parquet_bytes(path) // target_file_bytes))
     df = spark.read.parquet(path)
-    keyed = df.withColumn("_z", zvalue([F.col(c) for c in cols]))
-    clustered = (
-        keyed.repartitionByRange(n_files, "_z").sortWithinPartitions("_z").drop("_z")
+    _staged_swap(
+        path,
+        lambda staging: zorder_write(
+            df, staging, cols, partitions=n_files, group_bytes=group_bytes
+        ),
     )
-    staging = path + ".zorder_staging"
-    clustered.write.mode("overwrite").option(
-        "parquet.block.size", group_bytes
-    ).parquet(staging)
-    backup = path + ".old"
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup, ignore_errors=True)
     return n_files

@@ -225,7 +225,7 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     join with ZERO shuffle exchanges — the 100 TB fact-to-fact lever."""
     from stonedb_spark.catalog import load_tables
     from stonedb_spark.plans.inspect import shuffle_exchange_count
-    from stonedb_spark.sources.bucketing import colocated_join, write_bucketed
+    from stonedb_spark.sources.bucketing import write_bucketed
 
     t = load_tables(spark, sf_dir)
     write_bucketed(t["orders"], "b_orders", ["o_orderkey"], 8)
@@ -237,13 +237,8 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        j = colocated_join(
-            spark,
-            "b_lineitem",
-            "b_orders",
-            spark.table("b_lineitem")["l_orderkey"]
-            == spark.table("b_orders")["o_orderkey"],
-        )
+        bl, bo = spark.table("b_lineitem"), spark.table("b_orders")
+        j = bl.join(bo, bl["l_orderkey"] == bo["o_orderkey"])
         assert shuffle_exchange_count(j) == 0, j.explain(True)
         # unbucketed control: the same join over raw parquet shuffles both sides
         raw = t["lineitem"].join(

@@ -182,7 +182,7 @@ _ops = st.lists(
 def test_ivm_weighted_matches_multiset_model(spark, ops):
     from collections import Counter
 
-    from stonedb_spark.streaming.ivm_join import (
+    from stonedb_spark.operators.ivm import (
         consolidate,
         delta_join_weighted,
     )

@@ -1,8 +1,10 @@
 """Materialize-for-reuse goes through one helper and leaves no result that
-a later run could reuse (stonedb_spark/reuse.py)."""
+a later run could reuse (stonedb_spark/reuse.py); no package code exists
+only for the tests."""
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 from pathlib import Path
@@ -12,7 +14,8 @@ from pyspark.sql.types import DoubleType, LongType, StringType, StructField, Str
 from stonedb_spark.queries import all_queries
 from stonedb_spark.sources.csvload import append_load, read_csv_with_rejects
 
-PKG = Path(__file__).resolve().parent.parent / "stonedb_spark"
+ROOT = Path(__file__).resolve().parent.parent
+PKG = ROOT / "stonedb_spark"
 REUSE_CALL = re.compile(r"\.persist\(|\.cache\(\)|localCheckpoint\(|\.unpersist\(")
 
 
@@ -50,3 +53,102 @@ def test_no_cache_manager_entries_after_runs(spark, sf_dir, tmp_path):
     assert spark.read.parquet(str(tmp_path / "table")).count() == 2
 
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+# Top-level definitions that only tests reach today, each with the
+# ROADMAP item that gives it a caller.  The list only shrinks.
+TEST_ONLY_ALLOWED = {
+    "optimize_zorder": "item 1",
+    "write_with_bloom": "item 1",
+    "write_bucketed": "item 1",
+    "connected_components_star": "item 3",
+    "collated": "item 5, open",
+    "decode_charset": "item 5, open",
+    "varchar_cast": "item 5, open",
+    "decimal_div": "item 5, open",
+    "mysql_date": "item 5, open",
+    "pad_eq": "item 5, open",
+    "tianmu_int_check": "item 5, open",
+    "timestampdiff_day": "item 5, open",
+    "parse_bit_literal": "item 5, open",
+    "covariance_matrix": "item 5, open",
+    "pca_components": "item 5, open",
+    "project": "item 5, open",
+    "ivf_refine_centroids": "item 5, open",
+    "observed": "item 5, open",
+    "ingest_quality_counters": "item 5, open",
+    "scale_conf": "item 5, open",
+}
+# Modules that hold test helpers by design.
+TEST_HELPER_MODULES = {PKG / "plans" / "inspect.py", PKG / "testing.py"}
+
+
+def _names(node: ast.AST) -> set[str]:
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.alias):
+            out.add(n.name.rsplit(".", 1)[-1])
+    return out
+
+
+def _registered(node: ast.AST) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", "") == "register"
+        for d in node.decorator_list
+    )
+
+
+def _reachable(roots: set[str], bodies: dict[str, set[str]]) -> set[str]:
+    """Names reachable from ``roots`` through the top-level definitions'
+    bodies (matched by name)."""
+    live, todo = set(roots), list(roots)
+    while todo:
+        for ref in bodies.get(todo.pop(), ()):
+            if ref not in live:
+                live.add(ref)
+                todo.append(ref)
+    return live
+
+
+def test_no_package_definition_is_reached_only_from_tests():
+    """Every top-level function and class in the package is reached from
+    a registered query, module-level code, bench.py, __spark_entry__.py,
+    perfbench/ or tools/ -- not only from tests/ (or from nowhere)."""
+    defined: dict[str, str] = {}
+    bodies: dict[str, set[str]] = {}
+    roots: set[str] = set()
+    for path in sorted(PKG.rglob("*.py")):
+        helpers = path in TEST_HELPER_MODULES
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                if not helpers:
+                    defined[node.name] = str(path.relative_to(ROOT))
+                    bodies.setdefault(node.name, set()).update(_names(node))
+                if _registered(node):
+                    roots.add(node.name)
+            elif not helpers:
+                roots |= _names(node)
+    entry_points = [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    for d in ("perfbench", "tools"):
+        entry_points += [
+            p for p in sorted((ROOT / d).rglob("*.py"))
+            if not p.name.startswith("test_")
+        ]
+    for path in entry_points:
+        roots |= _names(ast.parse(path.read_text()))
+
+    live = _reachable(roots, bodies)
+    live_or_allowed = _reachable(roots | set(TEST_ONLY_ALLOWED), bodies)
+    unreached = sorted(
+        f"{defined[n]}: {n}" for n in defined if n not in live_or_allowed
+    )
+    assert not unreached, (
+        "reached only from tests (give it a caller or delete it):\n"
+        + "\n".join(unreached)
+    )
+    stale = sorted(n for n in TEST_ONLY_ALLOWED if n not in defined or n in live)
+    assert not stale, f"drop from TEST_ONLY_ALLOWED (gone or now has a caller): {stale}"

@@ -1,9 +1,9 @@
-"""CSV loader reject-path (LOAD DATA parity) + Structured Streaming ingest."""
+"""CSV loader reject path, LOAD DATA and SELECT ... INTO OUTFILE through
+the dialect (checked against the DuckDB oracle), and the IVM folds."""
 
 from __future__ import annotations
 
-import os
-
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -14,12 +14,9 @@ from pyspark.sql.types import (
 )
 
 from stonedb_spark.catalog import load_tables
+from stonedb_spark.dialect import run_script
 from stonedb_spark.sources.csvload import read_csv_with_rejects
-from stonedb_spark.streaming.ingest import (
-    run_append_ingest,
-    stream_events,
-    windowed_event_counts,
-)
+from stonedb_spark.testing import script_vs_oracle
 
 SCHEMA = StructType(
     [
@@ -46,54 +43,6 @@ def test_csv_load_with_rejects(spark, tmp_path):
     assert bad_rows == ["3,delta,not_a_number", "bad_id,gamma,1.0"]
 
 
-def test_streaming_append_ingest_and_window(spark, sf_dir, tmp_path):
-    """availableNow ingest must land every source row in the sink, and the
-    watermarked windowed agg must equal the batch computation."""
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-
-    events = load_tables(spark, sf_dir)["events"]
-    sample = events.filter(F.col("event_id") % 17 == 0)
-    sample.write.parquet(src, mode="overwrite")
-    n_src = sample.count()
-
-    schema = spark.read.parquet(src).schema
-    run_append_ingest(spark, src, sink, ckpt, schema)
-    assert spark.read.parquet(sink).count() == n_src
-
-    # incremental windowed agg (availableNow, complete output to memory)
-    stream = stream_events(spark, src, schema)
-    agg = windowed_event_counts(stream)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_agg")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.hour_start, r.event_type): (r.n_events, r.total_value)
-        for r in spark.sql("SELECT * FROM win_agg").collect()
-    }
-    from stonedb_spark.functions.exact import DEC
-
-    expect = {
-        (r.hour_start, r.event_type): (r.n_events, r.total_value)
-        for r in sample.groupBy(
-            F.date_trunc("hour", F.col("ts")).alias("hour_start"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast(DEC)).cast("double").alias("total_value"),
-        )
-        .collect()
-    }
-    assert got == expect
-
-
 def test_dml_queries(spark, oracle, sf_dir):
     from stonedb_spark.queries import all_queries
     from stonedb_spark.testing import check_query
@@ -103,132 +52,6 @@ def test_dml_queries(spark, oracle, sf_dir):
         problems = check_query(spark, oracle, q, sf_dir)
         assert not problems, f"{name}: {problems}"
         assert q.build(spark, sf_dir).count() > 0
-
-
-def test_streaming_sessionize_matches_batch(spark, sf_dir, tmp_path):
-    """Stateful streaming sessionization must agree with the batch
-    gaps-and-islands query.  Deterministically emitted: every session
-    closed by a newer event.  Additionally the event-time timeout may
-    flush a user's final session once the watermark (global max ts)
-    passes its end + gap.  Every emitted session must carry exactly the
-    batch query's aggregates."""
-    from stonedb_spark.queries import all_queries
-    from stonedb_spark.streaming.sessionize import sessionize_stream
-
-    src = str(tmp_path / "sess_src")
-    events = load_tables(spark, sf_dir)["events"]
-    sample = events.filter(F.col("user_id") < 12).select(
-        "user_id", "ts", "event_id", "value"
-    )
-    sample.write.parquet(src, mode="overwrite")
-
-    schema = spark.read.parquet(src).schema
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = (
-        sessionize_stream(stream)
-        .writeStream.format("memory")
-        .queryName("sessions")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    assert q.awaitTermination(300), "stream did not terminate"
-    got = {
-        (r.user_id, r.session_seq): (r.n_events, r.session_start, r.session_end)
-        for r in spark.sql("SELECT * FROM sessions").collect()
-    }
-
-    batch = (
-        all_queries()["events_sessionize"]
-        .build(spark, sf_dir)
-        .filter(F.col("user_id") < 12)
-        .collect()
-    )
-    last_seq = {}
-    for r in batch:
-        last_seq[r.user_id] = max(last_seq.get(r.user_id, 0), r.session_seq)
-    # batch numbers sessions from 1, the stream from 0
-    all_sessions = {
-        (r.user_id, r.session_seq - 1): (r.n_events, r.session_start, r.session_end)
-        for r in batch
-    }
-    closed_by_event = {
-        k: v
-        for k, v in all_sessions.items()
-        if k[1] + 1 != last_seq[k[0]]  # not the user's final session
-    }
-    assert set(closed_by_event) <= set(got), "missing event-closed sessions"
-    for k, v in got.items():
-        assert all_sessions[k] == v, (k, v, all_sessions[k])
-
-
-def test_streaming_dedup_drops_redelivered_rows(spark, sf_dir, tmp_path):
-    """dropDuplicatesWithinWatermark keeps one copy of a re-delivered
-    record (double-written source files) and state stays keyed+GC'd."""
-    from stonedb_spark.streaming.dedup import dedup_stream
-    from stonedb_spark.streaming.ingest import stream_events
-
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    events = load_tables(spark, sf_dir)["events"]
-    sample = events.filter(F.col("event_id") % 29 == 0)
-    # simulate redelivery: the same rows land twice as separate files
-    sample.write.mode("append").parquet(src)
-    sample.write.mode("append").parquet(src)
-    n_distinct = sample.count()
-
-    schema = spark.read.parquet(src).schema
-    deduped = dedup_stream(stream_events(spark, src, schema), ["event_id"])
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("SELECT COUNT(*) AS n, COUNT(DISTINCT event_id) AS d FROM dedup_sink").collect()[0]
-    assert got.n == n_distinct == got.d
-    assert spark.read.parquet(src).count() == 2 * n_distinct
-
-
-def test_stream_static_enrichment_join(spark, sf_dir, tmp_path):
-    """Stream-static dim enrichment equals the batch join, and the dim
-    side is re-resolved per micro-batch (stateless)."""
-    from stonedb_spark.streaming.ingest import enrich_with_dim, stream_events
-
-    src = str(tmp_path / "src_enrich")
-    os.makedirs(src)
-    events = load_tables(spark, sf_dir)["events"]
-    sample = events.filter(F.col("event_id") % 29 == 0)
-    sample.write.parquet(src, mode="overwrite")
-    schema = spark.read.parquet(src).schema
-
-    # dimension: event_type → category (derived, deterministic)
-    dim = (
-        events.select("event_type").distinct()
-        .withColumn("category", F.upper(F.substring("event_type", 1, 3)))
-    )
-    stream = stream_events(spark, src, schema)
-    q = (
-        enrich_with_dim(stream, dim, "event_type")
-        .writeStream.format("memory")
-        .queryName("enriched")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql(
-        "SELECT event_id, category FROM enriched ORDER BY event_id"
-    ).collect()
-    expect = (
-        sample.join(dim, "event_type")
-        .select("event_id", "category")
-        .orderBy("event_id")
-        .collect()
-    )
-    assert got == expect and len(got) == sample.count()
 
 
 def test_csv_load_quote_escape_linesep(spark, tmp_path):
@@ -252,557 +75,83 @@ def test_csv_load_quote_escape_linesep(spark, tmp_path):
     assert bad.count() == 1 and "broken_int" in bad.collect()[0]["raw"]
 
 
-def test_stream_stream_interval_join(spark, sf_dir, tmp_path):
-    """Stream-stream inner join with watermark + time-range bound must
-    equal the identical batch join (view->click attribution shape)."""
-    import os
-
-    from stonedb_spark.streaming.ingest import stream_interval_join
-
-    events = load_tables(spark, sf_dir)["events"]
-    views = events.filter(F.col("event_id") % 2 == 0)
-    clicks = events.filter(F.col("event_id") % 2 == 1)
-    vdir, cdir = str(tmp_path / "views"), str(tmp_path / "clicks")
-    views.write.parquet(vdir)
-    clicks.write.parquet(cdir)
-
-    schema = events.schema
-    sv = spark.readStream.schema(schema).parquet(vdir)
-    sc = spark.readStream.schema(schema).parquet(cdir)
-    joined = stream_interval_join(sv, sc, "user_id", interval="2 hours")
-
-    out = str(tmp_path / "out")
-    (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    got = spark.read.parquet(out)
-
-    expect = stream_interval_join(
-        spark.read.parquet(vdir), spark.read.parquet(cdir), "user_id",
-        interval="2 hours",
-    )
-    assert got.count() == expect.count() > 0
-    assert got.exceptAll(expect).count() == 0
-    assert expect.exceptAll(got).count() == 0
-
-
-def test_jsonl_load_with_rejects(spark, tmp_path):
-    """Broken JSON lines reject with the raw text; missing fields
-    NULL-fill; good rows keep the declared schema."""
-    from stonedb_spark.sources.csvload import read_jsonl_with_rejects
-
-    f = tmp_path / "in.jsonl"
-    f.write_text(
-        '{"id": 1, "name": "alpha", "amount": 10.5}\n'
-        '{"id": 2, "name": "beta"}\n'
-        "{broken json\n"
-        '{"id": "x", "name": "gamma", "amount": 1.0}\n'
-        '{"id": 4, "amount": 40.0}\n'
-    )
-    good, bad = read_jsonl_with_rejects(spark, str(f), SCHEMA)
-    rows = {r.id: r for r in good.collect()}
-    raws = [r.raw for r in bad.collect()]
-    # line 2: missing amount -> NULL-filled; line 5: missing name
-    assert set(rows) >= {1, 2, 4}
-    assert rows[2].amount is None and rows[4].name is None
-    assert rows[1].amount == 10.5
-    assert any("{broken json" in r for r in raws)
-    # "x" id: type mismatch -> either corrupt or null id depending on
-    # coercion; must NOT surface as a fake numeric id
-    assert all(r.id is None or isinstance(r.id, int) for r in good.collect())
-
-
-def test_incremental_agg_matview(spark, sf_dir, tmp_path):
-    """The foreachBatch-maintained view must equal the batch aggregate
-    exactly (counts and decimal sums are associative), across multiple
-    micro-batches (maxFilesPerTrigger=1 over several source files)."""
-    from stonedb_spark.streaming.matview import run_incremental_agg
-
-    events = load_tables(spark, sf_dir)["events"]
-    src = str(tmp_path / "src")
-    # several files -> several micro-batches
-    events.repartition(4).write.parquet(src)
-
-    view = str(tmp_path / "view")
-    run_incremental_agg(
-        spark, src, events.schema, view, str(tmp_path / "ckpt")
-    )
-
-    got = {
-        r["event_type"]: (r["n"], r["total"])
-        for r in spark.read.parquet(view).collect()
-    }
-    expect = {
-        r["event_type"]: (r["n"], r["total"])
-        for r in events.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(38,10)")).alias("total"),
-        )
-        .collect()
-    }
-    assert got == expect and len(got) == 5
-
-
-def test_ingest_checkpoint_recovery_exactly_once(spark, sf_dir, tmp_path):
-    """Restart semantics (the delta-store durability analog): a second
-    availableNow run over the SAME checkpoint must ingest only the files
-    that arrived since the first run — already-committed files are never
-    re-read (no duplicates) and new ones land exactly once.  This is the
-    property that lets a 100-TB ingest resume after a crash without a
-    dedup pass."""
-    from stonedb_spark.streaming.ingest import run_append_ingest
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(src)
-
-    events = load_tables(spark, sf_dir)["events"]
-    batch1 = events.filter(F.col("event_id") % 23 == 0)
-    batch2 = events.filter(F.col("event_id") % 23 == 1)
-    schema = events.schema
-
-    def drop_files(batch, stage_name):
-        """Producers drop flat part-files into src (the file-source
-        contract: files at the top level, arrival order = mtime)."""
-        import glob
-        import shutil
-
-        stage = str(tmp_path / stage_name)
-        batch.write.parquet(stage)
-        for i, f in enumerate(glob.glob(f"{stage}/*.parquet")):
-            shutil.copy(f, os.path.join(src, f"{stage_name}_{i}.parquet"))
-
-    drop_files(batch1, "b1")
-    run_append_ingest(spark, src, sink, ckpt, schema)
-    n1 = spark.read.parquet(sink).count()
-    assert n1 == batch1.count()
-
-    # simulate restart: new files arrive, the SAME checkpoint resumes
-    drop_files(batch2, "b2")
-    run_append_ingest(spark, src, sink, ckpt, schema)
-    got = spark.read.parquet(sink)
-    assert got.count() == batch1.count() + batch2.count()
-    # exactly-once: every event_id appears exactly once
-    dup = got.groupBy("event_id").count().filter("count > 1").count()
-    assert dup == 0
-
-
 def test_csv_load_column_subset_with_defaults(spark, tmp_path):
     """issue1865.test: LOAD DATA ... (a, c) into an (a, b, c) table —
     the missing column takes its DEFAULT, and changing the default
     between loads affects only subsequent batches."""
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    from stonedb_spark.sources.csvload import read_csv_column_subset
-
-    p = tmp_path / "in.csv"
-    p.write_text("1,hello\n2,world\n")
-    schema = StructType(
-        [
-            StructField("a", IntegerType()),
-            StructField("b", IntegerType()),
-            StructField("c", StringType()),
-        ]
+    f = tmp_path / "in.csv"
+    f.write_text("1,hello\n2,world\n")
+    load = f"load data infile '{f}' into table t fields terminated by ',' (a, c);\n"
+    rows = script_vs_oracle(
+        spark,
+        "create table t (a int, b int, c varchar(10));\n"
+        + load
+        + "alter table t alter column b set default 10;\n"
+        + load
+        + "select a, b, c from t;\n",
     )
-    # first load: b has no default -> NULL (the test's DROP DEFAULT state)
-    good, bad = read_csv_column_subset(spark, str(p), schema, ["a", "c"])
-    assert bad.count() == 0
-    rows = {r["a"]: (r["b"], r["c"]) for r in good.collect()}
-    assert rows == {1: (None, "hello"), 2: (None, "world")}
-    assert [f.name for f in good.schema.fields] == ["a", "b", "c"]
-    # second load: SET DEFAULT 10
-    good2, _ = read_csv_column_subset(
-        spark, str(p), schema, ["a", "c"], defaults={"b": 10}
-    )
-    assert {r["b"] for r in good2.collect()} == {10}
-
-
-def test_streaming_trending_terms_matches_batch(spark, sf_dir, tmp_path):
-    """Sliding-window trending terms: the streaming sliding-window counts
-    (complete mode, availableNow drain) must equal the batch evaluation
-    of the SAME expression, and the top-k post-pass must rank
-    deterministically."""
-    from stonedb_spark.streaming.ingest import stream_events
-    from stonedb_spark.streaming.trending import topk_per_window, trending_term_counts
-
-    src = str(tmp_path / "src")
-    events = load_tables(spark, sf_dir)["events"]
-    sample = events.filter(F.col("event_id") % 23 == 0)
-    sample.write.parquet(src, mode="overwrite")
-    schema = spark.read.parquet(src).schema
-
-    stream = stream_events(spark, src, schema)
-    q = (
-        trending_term_counts(stream)
-        .writeStream.format("memory")
-        .queryName("trend_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r.w_start, r.w_end, r.term): r.n
-        for r in spark.sql("SELECT * FROM trend_counts").collect()
+    # first load: no default -> NULL; second load: the new DEFAULT 10
+    assert {(a, None if b != b else b, c) for a, b, c in rows} == {
+        (1, None, "hello"), (1, 10, "hello"), (2, None, "world"), (2, 10, "world"),
     }
-    expect = {
-        (r.w_start, r.w_end, r.term): r.n
-        for r in trending_term_counts(sample).collect()
-    }
-    assert got == expect and len(got) > 0
-
-    top = topk_per_window(trending_term_counts(sample), k=2).collect()
-    by_win = {}
-    for r in top:
-        by_win.setdefault((r.w_start, r.w_end), []).append((r.rnk, r.n, r.term))
-    for ranked in by_win.values():
-        assert [r[0] for r in ranked] == list(range(1, len(ranked) + 1))
-        ns = [r[1] for r in ranked]
-        assert ns == sorted(ns, reverse=True)  # rank follows count desc
-
-
-def test_cdc_diff_apply_roundtrip(spark, sf_dir):
-    """apply_changes(old, diff_snapshots(old, new)) must reproduce new
-    exactly, and the change classes must match the aggregate op."""
-    from stonedb_spark.sources.cdc import apply_changes, diff_snapshots
-
-    o = load_tables(spark, sf_dir)["orders"].select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    )
-    new = (
-        o.filter(F.col("o_orderkey") % 97 != 0)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.when(F.col("o_orderkey") % 13 == 0, F.col("o_totalprice") + 1.0)
-            .otherwise(F.col("o_totalprice"))
-            .alias("o_totalprice"),
-        )
-        .unionByName(
-            o.filter(F.col("o_orderkey") % 101 == 0).select(
-                (F.col("o_orderkey") + 100000000).alias("o_orderkey"),
-                "o_orderstatus",
-                "o_totalprice",
-            )
-        )
-    )
-    changes = diff_snapshots(o, new, "o_orderkey")
-    rebuilt = apply_changes(o, changes, "o_orderkey")
-    assert rebuilt.exceptAll(new).count() == 0
-    assert new.exceptAll(rebuilt).count() == 0
-    classes = {r["_change"]: r["n"] for r in
-               changes.groupBy("_change").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert set(classes) == {"insert", "delete", "update"}
-    assert classes["delete"] == o.filter(F.col("o_orderkey") % 97 == 0).count()
-
-
-def test_cdc_streaming_apply_converges(spark, sf_dir, tmp_path):
-    """Streaming the change set in arbitrary file chunks through
-    foreachBatch apply must converge the sink to the new snapshot."""
-    from stonedb_spark.sources.cdc import diff_snapshots, run_streaming_apply
-
-    o = load_tables(spark, sf_dir)["orders"].select(
-        "o_orderkey", "o_orderstatus", "o_totalprice"
-    ).filter(F.col("o_orderkey") <= 2000)
-    new = o.filter(F.col("o_orderkey") % 7 != 0).withColumn(
-        "o_totalprice",
-        F.when(F.col("o_orderkey") % 3 == 0, F.col("o_totalprice") + 5.0).otherwise(
-            F.col("o_totalprice")
-        ),
-    )
-    target = str(tmp_path / "table.parquet")
-    o.write.parquet(target)
-    changes_dir = str(tmp_path / "changes")
-    changes = diff_snapshots(o, new, "o_orderkey")
-    changes.repartition(4).write.parquet(changes_dir)  # several files -> several batches possible
-    schema = spark.read.parquet(changes_dir).schema
-    run_streaming_apply(
-        spark, changes_dir, target, str(tmp_path / "ckpt"), schema, "o_orderkey"
-    )
-    final = spark.read.parquet(target)
-    assert final.exceptAll(new).count() == 0
-    assert new.exceptAll(final).count() == 0
-
-
-def test_cdc_streaming_apply_multi_diff_one_batch(spark, sf_dir, tmp_path):
-    """One availableNow drain that ingests TWO successive diffs must end
-    at the LAST snapshot even for keys changed in both diffs
-    (update->update, update->delete, insert->update): the fold collapses
-    the batch to the latest change per key by the export_diff file-name
-    sequence before applying, so duplicate key rows cannot survive.
-    Both diffs are pinned to the SAME mtime — the ordering must come
-    from the monotonic diff sequence, not from timestamps (mtime ticks
-    can be 1 s wide; two diffs in one tick are a real production case).
-    Adversarial twist: diff1's files sort lexicographically AFTER
-    diff0's only because of the numeric prefix — path-text ordering is
-    also exercised as the thing that must NOT be relied on (the d2
-    payload is what must win for overlapping keys)."""
-    from stonedb_spark.sources.cdc import (
-        diff_snapshots,
-        export_diff,
-        run_streaming_apply,
-    )
-
-    a = (
-        load_tables(spark, sf_dir)["orders"]
-        .select("o_orderkey", "o_orderstatus", "o_totalprice")
-        .filter(F.col("o_orderkey") <= 1000)
-    )
-    # B: bump price on %3 keys, insert key 900000001
-    b = a.withColumn(
-        "o_totalprice",
-        F.when(F.col("o_orderkey") % 3 == 0, F.col("o_totalprice") + 5.0).otherwise(
-            F.col("o_totalprice")
-        ),
-    ).unionByName(
-        spark.createDataFrame(
-            [(900000001, "O", 1.0)], "o_orderkey long, o_orderstatus string, o_totalprice double"
-        )
-    )
-    # C: bump %3 keys AGAIN (update->update), delete %21 keys (many of
-    # which were updated in d1: update->delete), re-update the inserted
-    # key (insert->update)
-    c = (
-        b.filter(F.col("o_orderkey") % 21 != 0)
-        .withColumn(
-            "o_totalprice",
-            F.when(F.col("o_orderkey") % 3 == 0, F.col("o_totalprice") + 7.0)
-            .when(F.col("o_orderkey") == 900000001, F.lit(2.0))
-            .otherwise(F.col("o_totalprice")),
-        )
-    )
-    d1 = diff_snapshots(a, b, "o_orderkey")
-    d2 = diff_snapshots(b, c, "o_orderkey")
-    assert d1.join(d2, "o_orderkey", "inner").count() > 0  # overlap is real
-
-    changes_dir = tmp_path / "changes"
-    assert export_diff(d1.coalesce(2), str(changes_dir)) == 0
-    assert export_diff(d2.coalesce(2), str(changes_dir)) == 1
-    # pin EVERY file to one identical mtime: sequence must decide
-    t0 = 1_700_000_000
-    for f in os.listdir(changes_dir):
-        os.utime(changes_dir / f, (t0, t0))
-
-    target = str(tmp_path / "table.parquet")
-    a.write.parquet(target)
-    schema = spark.read.parquet(str(changes_dir)).schema
-    run_streaming_apply(
-        spark, str(changes_dir), target, str(tmp_path / "ckpt"), schema, "o_orderkey"
-    )
-    final = spark.read.parquet(target)
-    assert final.groupBy("o_orderkey").count().filter("count > 1").count() == 0
-    assert final.exceptAll(c).count() == 0
-    assert c.exceptAll(final).count() == 0
-
-
-def test_streaming_anomaly_monitor_matches_batch(spark, sf_dir, tmp_path):
-    """Folding per-bucket counts incrementally (two chunked drains) must
-    yield the exact batch anomaly set: moments are additive, so the
-    streaming state converges bit-identically regardless of chunking."""
-    from stonedb_spark.queries import all_queries
-    from stonedb_spark.streaming.monitor import (
-        anomalies_from_state,
-        run_streaming_monitor,
-    )
-
-    e = load_tables(spark, sf_dir)["events"]
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    # two disjoint chunks, drained by two separate availableNow runs
-    e.filter(F.col("event_id") % 2 == 0).coalesce(2).write.parquet(
-        str(in_dir / "chunk0")
-    )
-    state = str(tmp_path / "state.parquet")
-    ckpt = str(tmp_path / "ckpt")
-    schema = e.schema
-    run_streaming_monitor(spark, str(in_dir / "chunk0"), state, ckpt + "0", schema)
-    e.filter(F.col("event_id") % 2 == 1).coalesce(3).write.parquet(
-        str(in_dir / "chunk1")
-    )
-    run_streaming_monitor(spark, str(in_dir / "chunk1"), state, ckpt + "1", schema)
-
-    got = anomalies_from_state(spark.read.parquet(state)).collect()
-    want = all_queries()["events_anomaly_zscore"].build(spark, sf_dir).collect()
-    assert [tuple(r) for r in got] == [tuple(r) for r in want]
-    assert len(want) > 0
-
-
-def test_streaming_cep_funnel_matches_batch(spark, sf_dir, tmp_path):
-    """Streaming view->click->purchase detection must reproduce the
-    batch funnel stage chain exactly: same completed-user set, same
-    (view, click, purchase) binding — fed as two event-time-ordered
-    chunks through two availableNow drains with state carried in the
-    checkpoint."""
-    from stonedb_spark.streaming.cep import detect_funnel_stream
-
-    e = load_tables(spark, sf_dir)["events"].select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    # batch expected: min-binding stage chain (same as Q(events_funnel))
-    v = e.filter(F.col("event_type") == "view").groupBy("user_id").agg(
-        F.min("ts").alias("view_ts")
-    )
-    c = (
-        e.filter(F.col("event_type") == "click")
-        .join(v, "user_id")
-        .filter(
-            (F.col("ts") >= F.col("view_ts"))
-            & (F.col("ts") <= F.col("view_ts") + F.expr("INTERVAL 2 hours"))
-        )
-        .groupBy("user_id", "view_ts")
-        .agg(F.min("ts").alias("click_ts"))
-    )
-    p = (
-        e.filter(F.col("event_type") == "purchase")
-        .join(c, "user_id")
-        .filter(
-            (F.col("ts") >= F.col("click_ts"))
-            & (F.col("ts") <= F.col("click_ts") + F.expr("INTERVAL 24 hours"))
-        )
-        .groupBy("user_id", "view_ts", "click_ts")
-        .agg(F.min("ts").alias("purchase_ts"))
-    )
-    want = {
-        r.user_id: (r.view_ts, r.click_ts, r.purchase_ts) for r in p.collect()
-    }
-    assert len(want) > 0
-
-    mid = e.selectExpr("timestamp_micros(CAST(percentile_disc(0.5) WITHIN GROUP (ORDER BY unix_micros(ts)) AS LONG)) AS m").collect()[0][0]
-    src = tmp_path / "cep_src"
-    src.mkdir()
-    e.filter(F.col("ts") <= mid).coalesce(2).write.parquet(str(src / "chunk0"))
-    e.filter(F.col("ts") > mid).coalesce(2).write.parquet(str(src / "chunk1"))
-    schema = spark.read.parquet(str(src / "chunk0")).schema
-    ckpt = str(tmp_path / "ckpt")
-    for chunk in ("chunk0", "chunk1"):
-        stream = spark.readStream.schema(schema).parquet(str(src / chunk))
-        q = (
-            detect_funnel_stream(stream)
-            .writeStream.format("parquet")
-            .option("path", str(tmp_path / "out"))
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "stream did not terminate"
-    got = {
-        r.user_id: (r.view_ts, r.click_ts, r.purchase_ts)
-        for r in spark.read.parquet(str(tmp_path / "out")).collect()
-    }
-    assert got == want
 
 
 def test_load_data_infile_skip_lines_collist_set(spark, tmp_path):
-    """issue1000.test distilled: IGNORE n LINES for n=0..4, (col_list)
-    load order, and SET col = expr override; issue1153/1209: quoting
-    off and custom line terminator."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from stonedb_spark.sources.csvload import load_data_infile
-
+    """issue1000.test distilled: IGNORE n LINES for n=0..4, a (col_list)
+    in file order, and ``(col, @var) SET col = expr``; issue1153/1209:
+    LINES TERMINATED BY with and without ENCLOSED BY."""
     f1 = tmp_path / "issue1000-1.txt"
     f1.write_text("1,one\n2,two\n3,three\n4,four\n")
-    sch = StructType(
-        [StructField("id", LongType()), StructField("name", StringType())]
-    )
-    for n in range(5):
-        good, bad = load_data_infile(spark, str(f1), sch, skip_lines=n)
-        assert bad.count() == 0
-        assert sorted(r["id"] for r in good.collect()) == list(range(n + 1, 5)), n
+    ld = f"load data infile '{f1}' into table"
+    script = "".join(
+        f"create table t{n} (id int, name varchar(10));\n"
+        f"{ld} t{n} fields terminated by ',' ignore {n} lines;\n"
+        for n in range(5)
+    ) + " union all ".join(f"select {n} as n, id from t{n}" for n in range(5))
+    rows = script_vs_oracle(spark, script + ";\n")
+    assert rows == [[n, i] for n in range(5) for i in range(n + 1, 5)]
 
-    # (col_list) with swapped file order: file holds (id2, id1)
+    # (col_list) with swapped file order: the file holds (id2, id1)
     f2 = tmp_path / "issue1000-2.txt"
     f2.write_text("hdr,hdr\n20,10\n40,30\n")
-    sch2 = StructType(
-        [StructField("id1", LongType()), StructField("id2", LongType())]
-    )
-    good, bad = load_data_infile(
-        spark, str(f2), sch2, skip_lines=1, columns=["id2", "id1"]
-    )
-    rows = {r["id1"]: r["id2"] for r in good.collect()}
-    assert rows == {10: 20, 30: 40} and bad.count() == 0
+    assert script_vs_oracle(
+        spark,
+        "create table t (id1 int, id2 int);\n"
+        f"load data infile '{f2}' into table t fields terminated by ',' "
+        "ignore 1 lines (id2, id1);\n"
+        "select id1, id2 from t;\n",
+    ) == [[10, 20], [30, 40]]
 
-    # SET a = @var/2 (issue1153): the SET value overrides the load
-    good, _ = load_data_infile(
-        spark, str(f1), sch, set_exprs={"id": F.lit(888) / 2}
-    )
-    assert {r["id"] for r in good.collect()} == {444}
+    # (col, @var) SET: the variable feeds an expression, and a SET on a
+    # column missing from the list fills it
+    assert script_vs_oracle(
+        spark,
+        "create table t (id int, name varchar(10), x int);\n"
+        f"{ld} t fields terminated by ',' (id, @nm) "
+        "set name = concat('n-', @nm), x = 888 / 2;\n"
+        "select id, name, x from t;\n",
+    ) == [[i, f"n-{w}", 444] for i, w in enumerate(["one", "two", "three", "four"], 1)]
 
-    # LINES TERMINATED BY ';' (issue1209) + quoting disabled (issue1153)
+    # LINES TERMINATED BY ';' (issue1209); without ENCLOSED BY the quotes
+    # are data (issue1153)
     f3 = tmp_path / "issue1209.txt"
     f3.write_text('1,"a",7;2,"b",8;')
-    sch3 = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("a", StringType()),
-            StructField("id2", LongType()),
-        ]
-    )
-    good, bad = load_data_infile(spark, str(f3), sch3, line_sep=";")
-    assert {(r["id"], r["a"], r["id2"]) for r in good.collect()} == {
-        (1, "a", 7),
-        (2, "b", 8),
-    }
-    # quoting off: the quotes become data (MySQL ENCLOSED BY '')
-    good, bad = load_data_infile(spark, str(f3), sch3, line_sep=";", quote="")
-    assert {r["a"] for r in good.collect() if r["a"]} == {'"a"', '"b"'}
+    for enclosed, a, b in (("enclosed by '\"'", "a", "b"), ("", '"a"', '"b"')):
+        assert script_vs_oracle(
+            spark,
+            "create table t (id int, a varchar(10), id2 int);\n"
+            f"load data infile '{f3}' into table t fields terminated by ',' "
+            f"{enclosed} lines terminated by ';';\n"
+            "select id, a, id2 from t;\n",
+        ) == [[1, a, 7], [2, b, 8]]
 
 
-def test_streaming_incremental_dedup_matches_batch(spark, sf_dir, tmp_path):
-    """The nightly-crawl shape: new-document files drained availableNow,
-    each micro-batch probing the frozen corpus LSH index.  Stream
-    verdicts must equal the batch operator's under multi-file chunking
-    (no cross-batch state by construction)."""
-    from stonedb_spark.operators.dedup import incremental_lsh_dedup
-    from stonedb_spark.streaming.dedup import (
-        build_corpus_index,
-        run_incremental_dedup_stream,
-    )
-
-    d = load_tables(spark, sf_dir)["documents"]
-    corpus = d.filter(F.col("doc_id") % 5 != 0)
-    batch = d.filter(F.col("doc_id") % 5 == 0)
-
-    batch_dir = str(tmp_path / "incoming")
-    batch.repartition(3).write.parquet(batch_dir)  # several files/batches
-    schema = spark.read.parquet(batch_dir).schema
-
-    build_corpus_index(corpus)  # exercised; fold uses the operator API
-    out = str(tmp_path / "verdicts")
-    run_incremental_dedup_stream(
-        spark, corpus, batch_dir, out, str(tmp_path / "ckpt"), schema
-    )
-    got = {
-        r["batch_id"]: (r["is_dup"], r["best_match"], r["best_jaccard"])
-        for r in spark.read.parquet(out).collect()
-    }
-    want = {
-        r["batch_id"]: (r["is_dup"], r["best_match"], r["best_jaccard"])
-        for r in incremental_lsh_dedup(corpus, batch).collect()
-    }
-    assert got == want
-    assert sum(1 for v in got.values() if v[0] == 1) > 0  # real dup signal
-
-
-def test_ivm_join_parity_stepwise(spark, sf_dir, tmp_path):
+def test_ivm_join_parity_stepwise(spark, sf_dir):
     """Delta-join IVM: after EVERY batch of deltas (either side), the
     maintained view must be row-identical (multiset) to the full join
     of the states applied so far — the algebra's disjointness claim,
     checked stepwise, interleaving both sides."""
-    from stonedb_spark.streaming.ivm_join import apply_join_delta
+    from stonedb_spark.operators.ivm import delta_join
 
     t = load_tables(spark, sf_dir)
     orders = (
@@ -813,7 +162,6 @@ def test_ivm_join_parity_stepwise(spark, sf_dir, tmp_path):
     cust = t["customer"].select(
         F.col("c_custkey").alias("custkey"), "c_name"
     )
-    wd = str(tmp_path / "ivm")
     a_parts = [orders.filter(F.col("o_orderkey") % 3 == i) for i in range(3)]
     b_parts = [cust.filter(F.col("custkey") % 2 == i) for i in range(2)]
     steps = [
@@ -823,57 +171,24 @@ def test_ivm_join_parity_stepwise(spark, sf_dir, tmp_path):
         (None, b_parts[1]),
         (a_parts[2], None),
     ]
-    applied_a, applied_b = None, None
+    cols = ["custkey", "o_orderkey", "o_totalprice", "c_name"]
+    a_state = b_state = view = None
     for da, db in steps:
-        apply_join_delta(spark, wd, "custkey", delta_a=da, delta_b=db)
+        nj = delta_join(a_state, b_state, da, db, "custkey")
+        if nj is not None:
+            view = nj if view is None else view.unionByName(nj)
         if da is not None:
-            applied_a = da if applied_a is None else applied_a.unionByName(da)
+            a_state = da if a_state is None else a_state.unionByName(da)
         if db is not None:
-            applied_b = db if applied_b is None else applied_b.unionByName(db)
-        import os
-
-        if not os.path.exists(wd + "/view"):
-            assert applied_a is None or applied_b is None
+            b_state = db if b_state is None else b_state.unionByName(db)
+        if view is None:
+            assert a_state is None or b_state is None
             continue
-        got = sorted(
-            tuple(r) for r in spark.read.parquet(wd + "/view")
-            .select("custkey", "o_orderkey", "o_totalprice", "c_name")
-            .collect()
-        )
+        got = sorted(tuple(r) for r in view.select(*cols).collect())
         expect = sorted(
-            tuple(r) for r in applied_a.join(applied_b, "custkey")
-            .select("custkey", "o_orderkey", "o_totalprice", "c_name")
-            .collect()
+            tuple(r) for r in a_state.join(b_state, "custkey").select(*cols).collect()
         )
         assert got == expect and len(got) > 0
-
-
-def test_ivm_join_streaming_left(spark, sf_dir, tmp_path):
-    """Streaming twin: right side preloaded as one delta, left deltas
-    drained as micro-batches (one file per trigger); final view equals
-    the batch join."""
-    from stonedb_spark.streaming.ivm_join import (
-        apply_join_delta,
-        run_streaming_left_ivm,
-    )
-
-    t = load_tables(spark, sf_dir)
-    orders = (
-        t["orders"]
-        .filter(F.col("o_orderkey") <= 400)
-        .select("o_orderkey", F.col("o_custkey").alias("custkey"))
-    )
-    cust = t["customer"].select(F.col("c_custkey").alias("custkey"), "c_name")
-    wd = str(tmp_path / "ivm")
-    apply_join_delta(spark, wd, "custkey", delta_b=cust)
-    src = str(tmp_path / "left_src")
-    orders.repartition(4).write.parquet(src)
-    run_streaming_left_ivm(
-        spark, src, orders.schema, wd, "custkey", str(tmp_path / "ckpt")
-    )
-    got = spark.read.parquet(wd + "/view").count()
-    expect = orders.join(cust, "custkey").count()
-    assert got == expect and got > 0
 
 
 def test_ivm_join_weighted_retraction(spark, sf_dir):
@@ -882,7 +197,7 @@ def test_ivm_join_weighted_retraction(spark, sf_dir):
     + insert new).  The consolidated view must equal the join of the
     NET states — deletes cancel every pair they produced, the update
     swaps the payload."""
-    from stonedb_spark.streaming.ivm_join import (
+    from stonedb_spark.operators.ivm import (
         consolidate,
         delta_join_weighted,
     )
@@ -939,7 +254,7 @@ def test_weighted_agg_matview_under_dml(spark, sf_dir):
     the view equal to the direct aggregate of the surviving rows, and
     a fully-deleted group must VANISH (net n == 0), not linger as a
     zero row."""
-    from stonedb_spark.streaming.matview import fold_weighted_agg
+    from stonedb_spark.operators.ivm import fold_weighted_agg
 
     ev = (
         load_tables(spark, sf_dir)["events"]
@@ -982,7 +297,7 @@ def test_ivm_left_join_view(spark, sf_dir):
     rows come from the consolidated inner view, unmatched left rows
     are null-extended — including rows that BECOME unmatched after
     their only right match is retracted."""
-    from stonedb_spark.streaming.ivm_join import (
+    from stonedb_spark.operators.ivm import (
         consolidate,
         delta_join_weighted,
         left_view,
@@ -1031,166 +346,89 @@ def test_ivm_left_join_view(spark, sf_dir):
     assert any(c % 6 == 0 and n is None for c, _, n, _ in got)
 
 
-def test_cdc_drives_weighted_agg_ivm(spark, sf_dir):
-    """End-to-end CDC -> IVM: diff two snapshots, convert the change
-    set to signed deltas (before-images fetched from the maintained
-    base), fold — the view must equal the new snapshot's aggregate
-    exactly (inserts add, deletes subtract, updates swap)."""
-    from stonedb_spark.sources.cdc import diff_snapshots
-    from stonedb_spark.streaming.ivm_join import weighted_deltas_from_cdc
-    from stonedb_spark.streaming.matview import fold_weighted_agg
-
-    ev = (
-        load_tables(spark, sf_dir)["events"]
-        .filter(F.col("event_id") <= 800)
-        .select("event_id", "event_type", "value")
-    )
-    v1 = ev.filter(F.col("event_id") % 5 != 4)          # v2 inserts the %5==4 rows
-    v2 = (
-        ev.filter(F.col("event_id") % 7 != 0)           # v2 deletes the %7==0 rows
-        .withColumn(                                     # v2 updates %11==0 values
-            "value",
-            F.when(F.col("event_id") % 11 == 0, F.col("value") * 2).otherwise(
-                F.col("value")
-            ),
-        )
-    )
-    state = fold_weighted_agg(None, v1.withColumn("_w", F.lit(1)))
-    changes = diff_snapshots(v1, v2, "event_id")
-    deltas = weighted_deltas_from_cdc(
-        v1.withColumn("_w", F.lit(1)), changes, "event_id"
-    )
-    state = fold_weighted_agg(state, deltas)
-
-    expect = {
-        r["event_type"]: (r["n"], r["total"])
-        for r in v2.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum(F.col("value").cast("decimal(38,10)")).alias("total"),
-        )
-        .collect()
-    }
-    got = {r["event_type"]: (r["n"], r["total"]) for r in state.collect()}
-    assert got == expect and len(got) > 0
-
-
 def test_load_doubled_quotes_multiline_and_odd_quote_reject(spark, tmp_path):
     """issue1263.test distilled: ENCLOSED BY '"' fields escape an
     embedded enclosure by DOUBLING it (`""` -> `"`), and enclosed
     fields may span physical lines (issue1263-2.txt embeds newlines
     mid-message).  An ODD quote run (issue1263-3.txt) mis-terminates
-    the field so the record cannot fill the column list — the
-    reference aborts with error 1261; here the parse leaves evidence
-    in the rejects frame, which a strict load checks and aborts on."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    the field, so the record cannot fill the column list: a strict load
+    aborts with error 1261 and loads nothing, a LOCAL load NULL-pads the
+    short row and keeps the clean record after the damage."""
+    table = "create table t (id int, msg varchar(100), flag varchar(1));\n"
+    opts = "into table t fields terminated by ',' enclosed by '\"'"
 
-    from stonedb_spark.sources.csvload import load_data_infile
-
-    sch = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("msg", StringType()),
-            StructField("flag", StringType()),
-        ]
-    )
-
-    # even (doubled) quotes + embedded newline: both rows parse clean
     f_even = tmp_path / "issue1263-2.txt"
     f_even.write_text(
         '"1","error at ""HOST.SVC"", line 49\n tail","Y"\n'
         '"2","plain","N"\n'
     )
-    good, bad = load_data_infile(
-        spark, str(f_even), sch, doubled_quotes=True, multiline=True
-    )
-    rows = {r["id"]: r for r in good.collect()}
-    assert bad.count() == 0
-    assert rows[1]["msg"] == 'error at "HOST.SVC", line 49\n tail'
-    assert rows[1]["flag"] == "Y" and rows[2]["msg"] == "plain"
+    assert script_vs_oracle(
+        spark,
+        table + f"load data infile '{f_even}' {opts};\n"
+        "select id, msg, flag from t;\n",
+    ) == [[1, 'error at "HOST.SVC", line 49\n tail', "Y"], [2, "plain", "N"]]
 
-    # odd (tripled) quotes: the field never closes where MySQL expects;
-    # the continuation line cannot fill the column list -> rejects
-    # non-empty is the strict-mode abort signal (error 1261 analog).
     f_odd = tmp_path / "issue1263-3.txt"
     f_odd.write_text(
         '"1","error at """HOST.SVC""", line 49\n tail","Y"\n'
         '"2","plain","N"\n'
     )
-    good2, bad2 = load_data_infile(
-        spark, str(f_odd), sch, doubled_quotes=True, multiline=True
+    strict = table + f"load data infile '{f_odd}' {opts};\nselect count(*) as n from t;\n"
+    with pytest.raises(ValueError, match="1261"):
+        run_script(spark, strict)
+    assert script_vs_oracle(spark, strict.replace("load data", "--error 1261\nload data")) == [[0]]
+
+    rows = script_vs_oracle(
+        spark,
+        table + f"load data local infile '{f_odd}' {opts};\n"
+        "select id, msg, flag from t;\n",
     )
-    assert bad2.count() > 0  # strict LOAD would raise here (1261)
-    # the clean record after the damage still parses
-    assert any(r["id"] == 2 and r["msg"] == "plain" for r in good2.collect())
+    assert [2, "plain", "N"] in rows
+    assert any(flag is None for _, _, flag in rows)  # the NULL-padded short row
 
 
 def test_outfile_enclosed_null_marker_roundtrip(spark, tmp_path):
     """issue1169.test distilled: SELECT ... INTO OUTFILE with FIELDS
-    ENCLOSED BY '"' writes every field wrapped (embedded quotes
-    doubled) and NULL as the unquoted \\N marker (@TIANMU_LOAD_NULL);
-    LOAD DATA back over the same options restores values AND nulls."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    ENCLOSED BY '"' wraps every non-NULL field and, with
+    @TIANMU_LOAD_NULL set, writes NULL as the unquoted \\N marker; LOAD
+    DATA back over the same options restores values AND NULLs, and an
+    enclosed empty string stays the empty string."""
+    out = tmp_path / "issue1169_out.txt"
+    export = (
+        "create table src (id int, name varchar(20), note varchar(30));\n"
+        "insert into src values (1, 'say \"hi\"', NULL), (2, 'plain', 'ok'),"
+        " (3, NULL, 'multi \"x\" note'), (4, '', NULL);\n"
+        "set @TIANMU_LOAD_NULL = 1;\n"
+        f"select id, name, note from src into outfile '{out}' "
+        "fields terminated by ',' enclosed by '\"';\n"
     )
-
-    from stonedb_spark.sources.csvload import load_data_infile
-    from stonedb_spark.sources.export import export_csv
-
-    sch = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("name", StringType()),
-            StructField("note", StringType()),
-        ]
-    )
-    src = spark.createDataFrame(
-        [
-            (1, 'say "hi"', None),
-            (2, "plain", "ok"),
-            (3, None, 'multi "x" note'),
-        ],
-        sch,
-    )
-    out = tmp_path / "outfile"
-    export_csv(src, str(out), header=False, quote_all=True)
-    raw = "".join(
-        p.read_text() for p in sorted(out.glob("*.csv"))
-    )
-    assert '"say ""hi"""' in raw  # doubling, not backslash-escaping
-    assert "\\N" in raw  # NULL marker, unquoted
-
-    good, bad = load_data_infile(
+    rows = script_vs_oracle(
         spark,
-        str(out) + "/*.csv",
-        sch,
-        doubled_quotes=True,
-        set_exprs={},
+        export
+        + "create table dst (id int, name varchar(20), note varchar(30));\n"
+        f"load data infile '{out}' into table dst "
+        "fields terminated by ',' enclosed by '\"';\n"
+        "select id, name, note from dst;\n",
     )
-    # \N arrives as the literal string; MySQL's NULLIF-style SET
-    # restores SQL NULL — apply it to the nullable string columns.
-    good = good.select(
-        "id",
-        *[
-            F.when(F.col(c) == "\\N", None).otherwise(F.col(c)).alias(c)
-            for c in ("name", "note")
-        ],
-    )
-    assert bad.count() == 0
-    got = {r["id"]: (r["name"], r["note"]) for r in good.collect()}
-    assert got == {
-        1: ('say "hi"', None),
-        2: ("plain", "ok"),
-        3: (None, 'multi "x" note'),
-    }
+    assert rows == [
+        [1, 'say "hi"', None], [2, "plain", "ok"],
+        [3, None, 'multi "x" note'], [4, "", None],
+    ]
+    # the file itself, reloaded one line per row with no field parsing:
+    # the enclosure inside a field is escaped with the escape character
+    # (MySQL's select_export), and NULL is the bare marker
+    lines = run_script(
+        spark,
+        export
+        + "create table raw_lines (line varchar(200));\n"
+        f"load data infile '{out}' into table raw_lines "
+        "fields terminated by '\\t' escaped by '';\n"
+        "select line from raw_lines;\n",
+    ).toPandas()["line"]
+    assert sorted(lines) == [
+        '"1","say \\"hi\\"",\\N', '"2","plain","ok"',
+        '"3",\\N,"multi \\"x\\" note"', '"4","",\\N',
+    ]
 
 
 def test_strict_bigint_sentinel_range(spark):
@@ -1248,42 +486,6 @@ def test_self_doubling_insert_select(spark, tmp_path):
         shift *= 2
 
 
-def test_staged_transaction_commit_rollback_visibility(spark, tmp_path):
-    """issues_tx417.test / issue1510.test: a committed INSERT is
-    visible, a rolled-back one is not, and in-flight (pre-commit) rows
-    are invisible to concurrent readers.  Staged files live under a
-    _staging_<txid> dir that parquet listings skip, so isolation needs
-    no reader coordination."""
-    import pytest as _pytest
-
-    from stonedb_spark.sources.txn import StagedTransaction
-
-    tbl = str(tmp_path / "t")
-    spark.createDataFrame([(1, "jack1")], "id long, name string").write.parquet(tbl)
-
-    # BEGIN; INSERT; (not yet committed) -> invisible
-    txn = StagedTransaction(tbl)
-    txn.write(spark.createDataFrame([(2, "tom")], "id long, name string"))
-    assert {r["id"] for r in spark.read.parquet(tbl).collect()} == {1}
-
-    # COMMIT -> visible
-    assert txn.commit() > 0
-    assert {r["id"] for r in spark.read.parquet(tbl).collect()} == {1, 2}
-
-    # BEGIN; INSERT; ROLLBACK -> still invisible, nothing on disk
-    txn2 = StagedTransaction(tbl)
-    txn2.write(spark.createDataFrame([(3, "jerry")], "id long, name string"))
-    txn2.rollback()
-    assert {r["id"] for r in spark.read.parquet(tbl).collect()} == {1, 2}
-    assert not any(p.startswith("_staging") for p in __import__("os").listdir(tbl))
-
-    # closed transactions refuse further work
-    with _pytest.raises(RuntimeError):
-        txn.write(spark.createDataFrame([(9, "x")], "id long, name string"))
-    with _pytest.raises(RuntimeError):
-        txn2.commit()
-
-
 def test_ivm_minmax_delete_extremum_repairs(spark):
     """fold_minmax_agg: deleting a group's max triggers the per-group
     rescan (B: 9 leaves, max repairs to 2); deleting ONE of a
@@ -1291,7 +493,7 @@ def test_ivm_minmax_delete_extremum_repairs(spark):
     (A: one of two 5s leaves, max stays 5)."""
     from pyspark.sql import functions as F
 
-    from stonedb_spark.streaming.matview import fold_minmax_agg
+    from stonedb_spark.operators.ivm import fold_minmax_agg
 
     def frame(rows, w):
         return spark.createDataFrame(
@@ -1319,46 +521,30 @@ def test_ivm_minmax_delete_extremum_repairs(spark):
 
 
 def test_load_data_skip_lines_with_custom_line_sep(spark, tmp_path):
-    """IGNORE n LINES where 'line' = LINES TERMINATED BY '|': the
-    pre-skip must index |-terminated records, not physical newlines
+    """IGNORE n LINES where 'line' = LINES TERMINATED BY '|': the skip
+    counts |-terminated records, not physical newlines
     (T/loader/parsing_strategy.h:28 semantics)."""
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    from stonedb_spark.sources.csvload import load_data_infile
-
-    sch = StructType([
-        StructField("a", IntegerType()),
-        StructField("s", StringType()),
-    ])
     f = tmp_path / "pipes.txt"
     f.write_text("hdr,skip me|1,x|2,y|3,z|")
-    good, bad = load_data_infile(
-        spark, str(f), sch, skip_lines=1, line_sep="|"
-    )
-    assert sorted((r["a"], r["s"]) for r in good.collect() if r["a"] is not None) == [
-        (1, "x"), (2, "y"), (3, "z"),
-    ]
-    assert bad.count() <= 1  # a trailing empty record may reject; no data rows do
+    assert script_vs_oracle(
+        spark,
+        "create table t (a int, s varchar(10));\n"
+        f"load data infile '{f}' into table t fields terminated by ',' "
+        "lines terminated by '|' ignore 1 lines;\n"
+        "select a, s from t;\n",
+    ) == [[1, "x"], [2, "y"], [3, "z"]]
 
 
 def test_load_data_skip_lines_with_multiline_fields(spark, tmp_path):
     """IGNORE n with multiline enclosed fields skips n quote-aware
     RECORDS — a physical-line skip would cut the embedded newline in
-    row 1 mid-field."""
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    from stonedb_spark.sources.csvload import load_data_infile
-
-    sch = StructType([
-        StructField("a", IntegerType()),
-        StructField("s", StringType()),
-    ])
+    the header record mid-field."""
     f = tmp_path / "multi.csv"
     f.write_text('0,"header\ncontinues"\n1,"line1\nline2"\n2,plain\n')
-    good, bad = load_data_infile(
-        spark, str(f), sch, skip_lines=1, multiline=True
-    )
-    assert sorted((r["a"], r["s"]) for r in good.collect()) == [
-        (1, "line1\nline2"), (2, "plain"),
-    ]
-    assert bad.count() == 0
+    assert script_vs_oracle(
+        spark,
+        "create table t (a int, s varchar(30));\n"
+        f"load data infile '{f}' into table t fields terminated by ',' "
+        "enclosed by '\"' ignore 1 lines;\n"
+        "select a, s from t;\n",
+    ) == [[1, "line1\nline2"], [2, "plain"]]
