@@ -10811,8 +10811,8 @@ def run_statement(run: MTRRun, stmt: str):
                     "INTO OUTFILE result exceeds the driver cap "
                     f"({cap} rows) and LINES TERMINATED BY is not "
                     "newline-terminated; raise "
-                    "SPARK_GRAFT_OUTFILE_DRIVER_MAX or export via "
-                    "stonedb_spark.sources.export"
+                    "SPARK_GRAFT_OUTFILE_DRIVER_MAX or end LINES "
+                    "TERMINATED BY with '\\n'"
                 )
             # the text writer adds the trailing '\n' itself
             _fmt, _nullm = dict(fmt), nullm

@@ -16,21 +16,8 @@ behavior for BIT(64).
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-_BIT_LIT = re.compile(r"^[bB]'([01]*)'$")
-
-
-def parse_bit_literal(text: str) -> int:
-    """MySQL b'1010' literal → int (bit_type.test INSERT leg)."""
-    m = _BIT_LIT.match(text)
-    if not m:
-        raise ValueError(f"not a BIT literal: {text!r}")
-    return int(m.group(1) or "0", 2)
-
 
 def bit_cast(col: Column, n: int, mode: str = "clamp") -> Column:
     """Ingest an integer expression into BIT(n).

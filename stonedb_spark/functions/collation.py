@@ -6,63 +6,24 @@ GROUP BY and ORDER BY — mysql-test/suite/tianmu/t/different_charsets_a
 the PAD SPACE rule every MySQL 5.7 collation applies to CHAR/VARCHAR
 comparisons (trailing spaces are insignificant).
 
-Two complementary mappings, used together:
-
-* ``collated(col, mysql_collation)`` — the Spark-NATIVE path: Spark 4's
-  ICU collation support (``F.collate``).  Comparisons, GROUP BY,
-  ORDER BY and DISTINCT on a collated column are collation-aware inside
-  whole-stage codegen, which is the idiomatic 100-TB answer: the
-  collation travels with the column type, no expression rewriting, and
-  shuffles hash the collation key.  MySQL→ICU name mapping below is a
-  documented approximation (MySQL's utf8_general_ci is a home-grown
-  per-character weight table; ICU UNICODE_CI_AI folds case+accents the
-  same way for the Latin range the MTR tests exercise).
-
-* ``collation_key(col, mysql_collation)`` — an engine-PORTABLE
-  normalization key (rtrim → accent translate → lower), expressible
-  identically in any SQL dialect.  This is what the DuckDB oracle runs,
-  and what a migration can use on engines without collation support.
-  Keys are also the explicit GROUP BY/ORDER BY handle (deterministic
-  representative, unlike "whichever group member came first").
-
-GBK ingest: a gbk-charset column arrives as raw bytes; Spark's
-``decode`` builtin does not ship the GBK codec, so ``decode_charset``
-falls back to an Arrow-batched pandas projection (Python's gbk codec)
-— batch-vectorized, never per-row Python.
+``collation_key(col, mysql_collation)`` is an engine-PORTABLE
+normalization key (rtrim → accent translate → lower), expressible
+identically in any SQL dialect.  This is what the DuckDB oracle runs,
+and what a migration can use on engines without collation support.
+Keys are also the explicit GROUP BY/ORDER BY handle (deterministic
+representative, unlike "whichever group member came first").
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# MySQL collation → Spark ICU collation (Spark 4 COLLATE).
-_TO_ICU = {
-    "utf8mb4_bin": "UTF8_BINARY",
-    "utf8_bin": "UTF8_BINARY",
-    "utf8mb4_general_ci": "UNICODE_CI_AI",
-    "utf8_general_ci": "UNICODE_CI_AI",
-    "utf8mb4_unicode_ci": "UNICODE_CI",
-    "utf8mb4_0900_ai_ci": "UNICODE_CI_AI",
-    # GBK orders by GBK code points ~ pinyin for common hanzi; ICU's
-    # zh collation is the closest portable analog.
-    "gbk_chinese_ci": "zh",
-}
 
 # One-to-one accent fold for the Latin-1 letters the MTR corpus uses;
 # identical literal on the oracle side (translate is 1-char→1-char in
 # both engines).  ß→s matches utf8_general_ci's single-char weight.
 ACCENT_SRC = "ÁÀÂÃÄÅáàâãäåÉÈÊËéèêëÍÌÎÏíìîïÓÒÔÕÖóòôõöÚÙÛÜúùûüÇçÑñÝýÿß"
 ACCENT_DST = "AAAAAAaaaaaaEEEEeeeeIIIIiiiiOOOOOoooooUUUUuuuuCcNnYyys"
-
-
-def collated(col: Column | str, mysql_collation: str) -> Column:
-    """Spark-native collated column: comparisons/sorts/groupings on the
-    result follow the collation (ICU), staying in codegen."""
-    icu = _TO_ICU[mysql_collation]
-    c = F.col(col) if isinstance(col, str) else col
-    return F.collate(c, icu)
 
 
 def collation_key(col: Column | str, mysql_collation: str = "utf8mb4_general_ci") -> Column:
@@ -104,36 +65,3 @@ def coll_eq(a: Column, b: Column, mysql_collation: str = "utf8mb4_general_ci") -
     """collation-aware equality via portable keys (PAD SPACE included)."""
     return collation_key(a, mysql_collation) == collation_key(b, mysql_collation)
 
-
-def decode_charset(df: DataFrame, src_col: str, charset: str, out_col: str | None = None) -> DataFrame:
-    """Decode a binary column in a non-JVM charset (gbk, big5, …) to a
-    UTF-8 string column — the ingest half of different_charsets_*.test.
-
-    Tries Spark's builtin ``decode`` first (JVM-side); charsets outside
-    Spark's supported set use an Arrow-batched pandas_udf over Python's
-    codec registry.  Either way the decode is a map-only projection:
-    no shuffle, linear at any scale."""
-    out_col = out_col or src_col
-    try:
-        probe = df.sparkSession.createDataFrame([(b"",)], f"{src_col} binary")
-        probe.select(F.decode(F.col(src_col), charset)).collect()
-        return df.withColumn(out_col, F.decode(F.col(src_col), charset))
-    except Exception:
-        from pyspark.sql.functions import pandas_udf
-
-        @pandas_udf("string")
-        def _dec(s: pd.Series) -> pd.Series:
-            return s.map(lambda b: None if b is None else bytes(b).decode(charset))
-
-        return df.withColumn(out_col, _dec(F.col(src_col)))
-
-
-def varchar_cast(col: Column | str, n: int) -> Column:
-    """CHAR(n)/VARCHAR(n) ingest-length enforcement in CHARACTERS (not
-    bytes) — different_charsets_a/_b.test's column-length leg: MySQL
-    non-strict truncates an over-long value to n characters whatever
-    the charset (a 240-char utf8 CHAR holds 240 hanzi, not 80).
-    Spark strings are UTF-8 code-point sequences, so substring counts
-    characters and is charset-correct for free."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.substring(c, 1, n)

@@ -307,12 +307,6 @@ def datediff(a: Column | str, b: Column | str) -> Column:
     return F.datediff(a, b)
 
 
-def timestampdiff_day(a: Column, b: Column) -> Column:
-    """MySQL TIMESTAMPDIFF(DAY, a, b) — COMPLETE days from a to b,
-    truncated toward zero (an 18-hour gap is 0 days, −18 h is 0 too)."""
-    return ((b.cast("long") - a.cast("long")) / F.lit(86400)).cast("long")
-
-
 def time_to_sec(t: Column) -> Column:
     """MySQL TIME_TO_SEC('[-]HHH:MM:SS') — inverse of sec_to_time."""
     sign = F.when(t.startswith("-"), F.lit(-1)).otherwise(F.lit(1))
@@ -376,31 +370,11 @@ def ci(s: Column | str) -> Column:
     return F.collate(c, "UTF8_LCASE")
 
 
-def pad_eq(a: Column | str, b: Column | str) -> Column:
-    """PAD SPACE equality: trailing spaces ignored, as MySQL CHAR compare."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    return F.rtrim(ca) == F.rtrim(cb)
-
-
 def ci_eq(a: Column | str, b: Column | str) -> Column:
     """utf8_general_ci + PAD SPACE equality — MySQL's default = on CHAR."""
     ca = F.col(a) if isinstance(a, str) else a
     cb = F.col(b) if isinstance(b, str) else b
     return ci(F.rtrim(ca)) == ci(F.rtrim(cb))
-
-
-# ---------------------------------------------------------------------------
-# Zero dates.  MySQL's '0000-00-00' is a real value in the reference
-# (DATE is the int 0 — storage/tianmu/common/common_definitions.h:53;
-# docs data-types.md) but has no Gregorian meaning; the engine's policy
-# is zero-date → NULL at the ingestion boundary (documented compat shim).
-
-
-def mysql_date(s: Column | str) -> Column:
-    """Cast a MySQL date string to DateType; zero dates become NULL."""
-    c = F.col(s) if isinstance(s, str) else s
-    return F.when(c.startswith("0000-00-00"), F.lit(None)).otherwise(c).cast("date")
 
 
 # ---------------------------------------------------------------------------
@@ -529,19 +503,6 @@ def cot(col: Column | str) -> Column:
     """MySQL COT(x) = 1/TAN(x)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.lit(1.0) / F.tan(c)
-
-
-def decimal_div(a: Column, b: Column, src_scale: int = 0, inc: int = 4) -> Column:
-    """MySQL decimal division scale rule: the result scale of
-    DECIMAL(p,s) / divisor is s + div_precision_increment (default 4),
-    rounded HALF_UP at that scale — SELECT 1/3 = 0.3333, 7.5/2 = 3.75000
-    (MySQL 5.7 ref §12.6.1; the reference delegates to this Item
-    arithmetic).  b=0 → NULL.  ``src_scale`` is the dividend's declared
-    scale s."""
-    scale = min(src_scale + inc, 30)
-    bd = b.cast("decimal(38,10)")
-    q = a.cast("decimal(38,10)") / F.nullif(bd, F.lit(0).cast("decimal(38,10)"))
-    return q.cast(f"decimal(38,{scale})")
 
 
 # ---------------------------------------------------------------------------
@@ -721,29 +682,3 @@ def inet_ntoa(n: Column) -> Column:
     quad = F.concat_ws(".", *[p.cast("string") for p in parts])
     return F.when((x >= 0) & (x <= 4294967295), quad)
 
-
-def tianmu_int_check(df, col: str, dtype: str = "bigint"):
-    """STRICT-mode range validation for an ingest column (MySQL error
-    1264 "Out of range value" analog, issue1361.test): values outside
-    the reference's sentinel-adjusted range for ``dtype`` ABORT the
-    ingest instead of clamping — notably -9223372036854775807 and
-    -9223372036854775808 are rejected for BIGINT even though they fit
-    two's-complement int64, because the reference reserves them as its
-    NULL/minus-inf encodings (common_definitions.h:128-137).  Returns
-    the input frame unchanged when clean; one bounded 1-row aggregate
-    decides (no per-row driver loop)."""
-    from pyspark.sql import functions as F  # local: keep module header slim
-
-    lo, hi = TIANMU_INT_RANGES[dtype]
-    c = F.col(col).cast("decimal(38,0)")
-    bad = df.agg(
-        F.sum(
-            F.when((c < F.lit(lo)) | (c > F.lit(hi)), 1).otherwise(0)
-        ).alias("n")
-    ).collect()[0]["n"]
-    if bad:
-        raise ValueError(
-            f"Out of range value for column '{col}' ({dtype}): {bad} row(s) "
-            f"outside [{lo}, {hi}] (MySQL strict error 1264 analog)"
-        )
-    return df

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from stonedb_spark.functions.text import shingles
+from stonedb_spark.plans.metrics import observed
 from stonedb_spark.reuse import materialize
 
 # MinHash configuration shared with the DuckDB oracle SQL (pipeline.py).
@@ -295,17 +296,14 @@ def connected_components(
     map-side-combinable min aggregation per round, both shuffling on
     node id only (never materializing paths).  Rounds needed = graph
     diameter; near-dup clusters are near-cliques (diameter ≲ 3), so
-    this converges in a handful of rounds.  For adversarial
-    long-chain graphs the large-star/small-star variant (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14)
-    halves diameter per round; the propagation loop below is the
-    simpler plan with identical output.
+    this converges in a handful of rounds.
 
-    Each round ends with ``materialize`` — an iterative DataFrame loop
-    otherwise accretes one join per round into a plan Catalyst
-    re-optimizes (and re-executes) from scratch.  The convergence test
-    is an exact DECIMAL(38,0) label-sum aggregate over the frame each
-    round materializes anyway (see ``_label_sum`` below).
+    Each round ends with an eager ``materialize`` — an iterative
+    DataFrame loop otherwise accretes one join per round into a plan
+    Catalyst re-optimizes (and re-executes) from scratch.  The
+    convergence test is an exact DECIMAL(38,0) label sum, observed
+    (``plans.metrics.observed``) on that checkpoint job itself: no
+    extra job per round (see ``_checkpoint`` below).
 
     Round 1 is FOLDED into initialization: on identity labels the
     first propagation is exactly ``least(src, min(dst))`` per source —
@@ -337,7 +335,27 @@ def connected_components(
         )
         .select("_e.src", "_e.dst")
     )
-    labels = materialize(
+
+    # Convergence test: labels are elementwise monotone NON-INCREASING,
+    # so the label SUM is strictly decreasing until the fixed point —
+    # "sum unchanged" ⇔ "no label changed".  The sum is a df.observe
+    # counter on the eager checkpoint job that stores the round's
+    # labels: no collect, no self-join of old vs new labels.
+    # DECIMAL(38,0) keeps the sum exact at any node-id magnitude/count.
+    def _checkpoint(lbl) -> tuple[DataFrame, int]:
+        lbl, obs = observed(
+            lbl,
+            {
+                "s": F.coalesce(
+                    F.sum(F.col("comp").cast("decimal(38,0)")),
+                    F.lit(0).cast("decimal(38,0)"),
+                )
+            },
+        )
+        lbl = materialize(lbl, eager=True)
+        return lbl, int(obs.get["s"])
+
+    labels, prev_sum = _checkpoint(
         edges.groupBy("src")
         .agg(F.least(F.col("src"), F.min("dst")).alias("comp"))
         .select(F.col("src").alias("node"), "comp")
@@ -361,26 +379,9 @@ def connected_components(
             ).alias("comp"),
         )
 
-    # Convergence test: labels are elementwise monotone NON-INCREASING,
-    # so the label SUM is strictly decreasing until the fixed point —
-    # "sum unchanged" ⇔ "no label changed".  One map-side-combinable
-    # aggregate on the frame each round materializes anyway, with no
-    # self-join of old vs new labels (an extra shuffle join per round).
-    # DECIMAL(38,0) keeps the sum exact at any node-id magnitude/count.
-    def _label_sum(lbl) -> int:
-        row = lbl.agg(
-            F.coalesce(
-                F.sum(F.col("comp").cast("decimal(38,0)")),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("s")
-        ).collect()
-        return int(row[0]["s"])
-
-    prev_sum = _label_sum(labels)
     # the folded initialization IS round 1; one round per check
     for _ in range(max_iter - 1):
-        labels = materialize(one_round(labels))
-        new_sum = _label_sum(labels)
+        labels, new_sum = _checkpoint(one_round(labels))
         if new_sum == prev_sum:
             return labels
         prev_sum = new_sum
@@ -410,86 +411,6 @@ def dedup_clusters(
         F.col("comp").alias("component"),
         F.count(F.lit(1)).over(w).alias("cluster_size"),
         (F.col("node") == F.col("comp")).alias("is_keeper"),
-    )
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    left: str = "d1",
-    right: str = "d2",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris
-    et al., "Connected Components in MapReduce and Beyond", SoCC'14) —
-    the scale path for graphs whose diameter is NOT small: each round
-    at least halves tree heights, so convergence is O(log n) rounds
-    regardless of chain length, where plain min-label propagation
-    (``connected_components``) needs diameter rounds.
-
-    large-star: every node points its LARGER neighbors at the minimum
-    of its closed neighborhood; small-star: its smaller-or-equal
-    neighbors likewise.  Both are one groupBy-min + one join per round
-    (shuffle on node id).  Stable edge set = star forest: every node
-    holds an edge to its component's minimum id.
-
-    Same output contract as connected_components: (node, comp), and
-    the same ``RuntimeError`` when the edge set is still changing after
-    ``max_iter`` rounds.
-    """
-    e = materialize(
-        pairs.select(
-            F.least(F.col(left), F.col(right)).alias("a"),
-            F.greatest(F.col(left), F.col(right)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct(),
-        eager=True,
-    )
-
-    def _bidirect(edges):
-        return edges.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-            edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
-
-    for _ in range(max_iter):
-        bid = _bidirect(e)
-        # large-star: (v, m) for v > u, m = min(N(u) ∪ {u})
-        mins = bid.groupBy("u").agg(F.min("v").alias("mn"))
-        mins = mins.select("u", F.least("mn", F.col("u")).alias("m"))
-        large = (
-            _bidirect(e)
-            .join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.least("v", "m").alias("a"), F.greatest("v", "m").alias("b"))
-        )
-        # small-star over directed edges v <= u: (v, m) plus (u, m)
-        small_dir = bid.filter(F.col("v") <= F.col("u"))
-        smins = small_dir.groupBy("u").agg(F.min("v").alias("mn"))
-        smins = smins.select("u", F.least("mn", F.col("u")).alias("m"))
-        sd = small_dir.join(smins, "u")
-        small = (
-            sd.select(F.col("v").alias("x"), F.col("m"))
-            .union(sd.select(F.col("u").alias("x"), F.col("m")))
-            .filter(F.col("x") != F.col("m"))
-            .select(F.least("x", "m").alias("a"), F.greatest("x", "m").alias("b"))
-        )
-        new_e = materialize(large.union(small).distinct(), eager=True)
-        changed = (
-            new_e.exceptAll(e).limit(1).count() + e.exceptAll(new_e).limit(1).count()
-        )
-        e = new_e
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components_star: edges still changing after "
-            f"max_iter={max_iter} rounds"
-        )
-    # stable star forest: b's component is a; roots map to themselves
-    nodes = _bidirect(e).select(F.col("u").alias("node")).distinct()
-    roots = e.groupBy(F.col("b").alias("node")).agg(F.min("a").alias("comp"))
-    return nodes.join(roots, "node", "left").select(
-        "node", F.coalesce("comp", F.col("node")).alias("comp")
     )
 
 

@@ -110,35 +110,6 @@ def ivf_assign(
     return best
 
 
-def ivf_refine_centroids(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """One spherical-k-means (Lloyd) refinement of the coarse quantizer,
-    fully distributed: assign each vector to its nearest centroid, then
-    replace every centroid with its cell's mean UNIT vector (the
-    direction maximizing within-cell cosine, so the k-means objective is
-    monotone — raw means lose that guarantee when norms vary).
-
-    posexplode shuffles n·d (cid, pos, x) rows but the per-(cid, pos)
-    AVG combines map-side, so the exchange carries nlist·d partials per
-    task; output is nlist rows.  Iterating this a fixed small number of
-    times is the standard IVF build; each pass is the same plan shape."""
-    assign = ivf_assign(embeddings, centroids, vec_col, id_col)
-    exploded = (
-        embeddings.join(assign, id_col)
-        .select("cid", F.posexplode(unit_vec(F.col(vec_col))).alias("pos", "x"))
-    )
-    dims = exploded.groupBy("cid", "pos").agg(F.avg("x").alias("m"))
-    return (
-        dims.groupBy("cid")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-        .select("cid", F.transform("pm", lambda s: s["m"]).alias("cvec"))
-    )
-
-
 # ---------------------------------------------------------------------------
 def ivf_index(
     embeddings: DataFrame,

@@ -31,10 +31,3 @@ def observed(
         aggs.append(col.alias(name))
     return df.observe(obs, *aggs), obs
 
-
-def ingest_quality_counters(cols: list[str]) -> dict[str, F.Column]:
-    """Standard load-audit counters: per-column null counts + a total."""
-    out: dict[str, F.Column] = {}
-    for c in cols:
-        out[f"nulls_{c}"] = F.count_if(F.col(c).isNull())
-    return out

@@ -1084,9 +1084,7 @@ def agg_exact_percentiles(spark, sf_dir):
 # exact and order-independent; see agg_stats).  The final combine runs
 # in DOUBLE with the same expression shape on both sides — IEEE ops on
 # identical inputs are bit-deterministic, so no ROUND (which is itself
-# the half-way trap) is needed.  operators/pca.py holds
-# the einsum/mapInPandas fast path that a 100 TB run would use — this
-# query is its engine-portable witness.
+# the half-way trap) is needed.
 @register(
     "emb_pca_covariance",
     oracle="""

@@ -122,8 +122,7 @@ def pred_mysql_collation(spark, sf_dir):
 # SPACE only).  Variants are synthesized deterministically from
 # customer keys with chr() so both engines build identical data, and
 # collation-aware ORDER BY runs on the portable collation key (see
-# functions/collation.py; the Spark-native F.collate path is exercised
-# by tests/test_collation.py — ICU sort order is not oracle-portable).
+# functions/collation.py; ICU sort order is not oracle-portable).
 def _collation_battery_oracle() -> str:
     from stonedb_spark.functions.collation import collation_key_sql as K
 

@@ -42,8 +42,10 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
       the rest.
     * ``eager=True`` also runs that final stage, as its own job, before
       returning — one job more than the lazy form.  Use it when the
-      source is about to be overwritten (staged DML rewrites) or when
-      the frame must be fixed before a side effect reads it.
+      source is about to be overwritten (staged DML rewrites), when
+      the frame must be fixed before a side effect reads it, or when a
+      ``df.observe`` counter on the frame is read before any consumer
+      runs (connected components' convergence sum).
 
     The blocks live on the executors that computed them, so losing an
     executor fails the consumer instead of recomputing.  A cluster

@@ -122,36 +122,3 @@ def ensure_sql_confs(spark: SparkSession) -> None:
             except Exception:
                 pass  # conf became static in some deployment — keep going
 
-
-def scale_conf(
-    input_bytes: int,
-    executors: int,
-    cores_per_executor: int = 4,
-    target_partition_bytes: int = 256 * 1024 * 1024,
-    mem_per_core_bytes: int = 4 * 1024 * 1024 * 1024,
-) -> dict[str, str]:
-    """Cluster-sizing rule of thumb as executable configuration — the
-    knobs that change between local[32]/sf0.1 and 1000 executors/100 TB
-    (query code changes NOTHING; SCALING.md documents why per operator).
-
-    * shuffle partitions: enough that a average post-shuffle partition
-      is ~target_partition_bytes AND at least 2x total cores (so one
-      wave of stragglers cannot idle the cluster), capped at 200k.
-    * maxPartitionBytes: scan splits sized to the same target so map
-      tasks and reduce tasks see comparable work.
-    * AQE advisory size: aligned with the target so coalescing does not
-      undo the sizing; skew thresholds at 4x the target.
-    * A partition must comfortably fit in executor memory per core —
-      if target > 1/4 of per-core memory the target is shrunk.
-    """
-    total_cores = max(1, executors * cores_per_executor)
-    target = min(target_partition_bytes, mem_per_core_bytes // 4)
-    by_size = -(-input_bytes // target)  # ceil
-    shuffle = int(min(max(by_size, 2 * total_cores), 200_000))
-    return {
-        "spark.sql.shuffle.partitions": str(shuffle),
-        "spark.sql.files.maxPartitionBytes": str(target),
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": str(target),
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": str(4 * target),
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    }

@@ -29,39 +29,29 @@ def read_csv_with_rejects(
     spark: SparkSession,
     path: str,
     schema: StructType,
-    sep: str = ",",
-    header: bool = False,
-    null_value: str | None = None,
-    quote: str = '"',
-    escape: str = "\\",
-    line_sep: str | None = None,
-    encoding: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Return (good_rows, rejected_rows).
 
     good_rows has exactly ``schema``; rejected_rows has one string column
     ``raw`` holding the original malformed line (Rejecter parity).
 
-    The option surface mirrors the reference's IOParameters
-    (storage/tianmu/loader/parsing_strategy.h:28): FIELDS TERMINATED BY
-    → ``sep``, ENCLOSED BY → ``quote``, ESCAPED BY → ``escape``, LINES
-    TERMINATED BY → ``line_sep``, CHARACTER SET → ``encoding``.
+    The file is the reference's default IOParameters
+    (storage/tianmu/loader/parsing_strategy.h:28) in CSV form: comma
+    fields, no header, '"' enclosure, backslash escapes.  MySQL
+    ``LOAD DATA`` statements with other FIELDS/LINES options run
+    through the dialect (``stonedb_spark.dialect``).
     """
     full_schema = StructType(list(schema.fields) + [StructField(CORRUPT_COL, StringType())])
     reader = (
         spark.read.schema(full_schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("sep", sep)
-        .option("header", str(header).lower())
-        .option("nullValue", null_value)
-        .option("quote", quote)
-        .option("escape", escape)
+        .option("sep", ",")
+        .option("header", "false")
+        .option("nullValue", None)
+        .option("quote", '"')
+        .option("escape", "\\")
     )
-    if line_sep is not None:
-        reader = reader.option("lineSep", line_sep)
-    if encoding is not None:
-        reader = reader.option("encoding", encoding)
     df = materialize(reader.csv(path))  # one parse, two consumers (good + reject split)
     good = df.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.filter(F.col(CORRUPT_COL).isNotNull()).select(
@@ -70,15 +60,10 @@ def read_csv_with_rejects(
     return good, bad
 
 
-def append_load(
-    good: DataFrame, target_path: str, partition_by: list[str] | None = None
-) -> None:
+def append_load(good: DataFrame, target_path: str) -> None:
     """Append the accepted rows to the columnar store (bulk-load commit).
 
     Row-group sizing ≈ the reference's 64K-row packs (SURVEY §1.1): with
     default parquet.block.size Spark writes row groups in that regime.
     """
-    writer = good.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(target_path)
+    good.write.mode("append").parquet(target_path)

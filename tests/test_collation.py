@@ -1,127 +1,11 @@
 """Charset/collation semantics (different_charsets_a.test / _b.test).
 
-The oracle-portable collation-key path is driver-checked via
-pred_collation_battery / agg_collation_group; here we exercise the
-Spark-NATIVE ICU path (F.collate) and the GBK ingest decode, which have
-no DuckDB equivalent.
+The portable collation-key path is oracle-checked by
+pred_collation_battery / agg_collation_group / pred_charset_matrix;
+here we check that the four collation classes stay apart.
 """
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-from stonedb_spark.functions import collation as C
-
-
-def _df(spark, rows):
-    return spark.createDataFrame([(r,) for r in rows], "s string")
-
-
-def test_native_collate_matches_key_semantics(spark):
-    """ICU UNICODE_CI_AI equality agrees with the portable _ci key on
-    the Latin range the MTR corpus uses (case + accent folding)."""
-    pairs = [
-        ("Müller", "MULLER", True),
-        ("café  ", "CAFE", False),  # native collate is NO PAD — spaces differ
-        ("café", "CAFE", True),
-        ("Ångström", "angstrom", True),
-        ("naïve", "NAIVE", True),
-        ("abc", "abd", False),
-        ("señor", "senor", True),
-    ]
-    df = spark.createDataFrame(pairs, "a string, b string, _want boolean")
-    got = df.select(
-        "a",
-        "b",
-        "_want",
-        (C.collated(F.col("a"), "utf8mb4_general_ci")
-         == C.collated(F.col("b"), "utf8mb4_general_ci")).alias("native_eq"),
-        C.coll_eq(F.rtrim("a"), F.rtrim("b"), "utf8mb4_general_ci").alias("key_eq"),
-    ).collect()
-    for r in got:
-        assert r["native_eq"] == r["_want"], r
-        # key path PAD-trims, so compare it on rtrimmed input
-        assert r["key_eq"] == r["_want"] or r["a"].endswith(" "), r
-
-
-def test_native_collate_group_and_distinct(spark):
-    """GROUP BY / DISTINCT on a collated column collapse ci-equal
-    spellings — collation travels with the column type (Spark 4)."""
-    df = _df(spark, ["Apple", "APPLE", "apple", "Äpple", "pear", "PEAR"])
-    g = (
-        df.groupBy(C.collated(F.col("s"), "utf8mb4_general_ci").alias("k"))
-        .agg(F.count(F.lit(1)).alias("n"), F.min("s").alias("rep"))
-        .orderBy(F.min("s"))
-        .collect()
-    )
-    assert [r["n"] for r in g] == [4, 2]
-    n_distinct = df.select(
-        C.collated(F.col("s"), "utf8mb4_general_ci").alias("k")
-    ).distinct().count()
-    assert n_distinct == 2
-
-
-def test_native_collate_order_by(spark):
-    """ORDER BY a collated column interleaves case/accent variants the
-    way MySQL's ci collations do (binary order would put 'PEAR' first)."""
-    rows = ["pear", "Apple", "äpple", "Pear", "apple"]
-    got = [
-        r["s"]
-        for r in _df(spark, rows)
-        .orderBy(C.collated(F.col("s"), "utf8mb4_general_ci"), F.col("s"))
-        .collect()
-    ]
-    assert [s.lower().replace("ä", "a") for s in got] == [
-        "apple", "apple", "apple", "pear", "pear"
-    ]
-
-
-def test_bin_collation_is_binary(spark):
-    df = _df(spark, ["abc"])
-    r = df.select(
-        (C.collated(F.lit("abc"), "utf8mb4_bin") == C.collated(F.lit("ABC"), "utf8mb4_bin")).alias("e")
-    ).collect()[0]
-    assert r["e"] is False
-
-
-def test_unknown_collation_raises():
-    with pytest.raises(KeyError):
-        C.collated(F.lit("x"), "latin1_swedish_ci")
-
-
-def test_gbk_decode_roundtrip(spark):
-    """different_charsets ingest leg: gbk-encoded bytes decode to the
-    same UTF-8 strings Python's codec produces, via the Arrow-batched
-    fallback (Spark's builtin decode has no GBK)."""
-    texts = ["中文测试", "石数据库", "hello", "混合 mixed 文本", ""]
-    rows = [(t.encode("gbk"),) for t in texts] + [(None,)]
-    df = spark.createDataFrame(rows, "raw binary")
-    out = C.decode_charset(df, "raw", "gbk", "txt").select("txt").collect()
-    assert sorted(r["txt"] or "" for r in out) == sorted(texts + [""])
-
-
-def test_gbk_chinese_ci_order_is_stable(spark):
-    """gbk_chinese_ci maps to ICU zh: assert the sort is deterministic
-    and groups identical hanzi — exact GBK-codepoint order parity is
-    documented as an approximation (functions/collation.py)."""
-    rows = ["北京", "上海", "北京", "广州"]
-    got = [
-        r["s"]
-        for r in _df(spark, rows)
-        .orderBy(C.collated(F.col("s"), "gbk_chinese_ci"), F.col("s"))
-        .collect()
-    ]
-    assert len(got) == 4 and got[0] == got[1] or got.count("北京") == 2
-    assert sorted(got) == sorted(rows)
-
-
-def test_varchar_cast_counts_characters_not_bytes(spark):
-    rows = [("abcdef",), ("中文测试超长字符串",), ("naïve-résumé",), (None,)]
-    df = spark.createDataFrame(rows, "s string")
-    got = [r["t"] for r in df.select(C.varchar_cast("s", 4).alias("t")).collect()]
-    assert sorted(x for x in got if x is not None) == sorted(["abcd", "中文测试", "naïv"])
-    assert None in got
 
 
 def test_charset_matrix_classes_diverge(spark, sf_dir):

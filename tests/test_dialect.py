@@ -748,7 +748,10 @@ def test_outfile_driver_cap_distributed_fallback(spark, monkeypatch):
     exceeds SPARK_GRAFT_OUTFILE_DRIVER_MAX must NOT be collected on
     the driver — it lands as a part-file directory written by the
     executors, with the SAME tianmu cell encoding per line.  Under the
-    cap the single-file path (byte-parity tested above) is unchanged."""
+    cap the single-file path (byte-parity tested above) is unchanged.
+    An over-cap export whose LINES TERMINATED BY does not end in a
+    newline cannot use the line-oriented writer: it raises, naming only
+    remedies that exist."""
     import os
     import tempfile
 
@@ -784,6 +787,17 @@ def test_outfile_driver_cap_distributed_fallback(spark, monkeypatch):
         assert open(small).read() == "".join(
             f"{i};r{i}\n" for i in range(5)
         )
+        with pytest.raises(ValueError) as err:
+            run_statement(
+                run,
+                "SELECT a, b FROM ofcap ORDER BY a INTO OUTFILE "
+                "'/tmp/ofcap_bar.txt' LINES TERMINATED BY '|'",
+            )
+        msg = str(err.value)
+        assert "exceeds the driver cap (10 rows)" in msg, msg
+        assert "SPARK_GRAFT_OUTFILE_DRIVER_MAX" in msg, msg
+        assert "end LINES TERMINATED BY with '\\n'" in msg, msg
+        assert "stonedb_spark.sources" not in msg, msg
     finally:
         for name in list(run.tables):
             spark.sql(f"DROP TABLE IF EXISTS `{name}`")

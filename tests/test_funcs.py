@@ -28,28 +28,15 @@ def test_mysql_format_translation():
 
 
 def test_mysql_collation_and_pad_semantics(spark):
-    """ci_eq/pad_eq reproduce MySQL utf8_general_ci + PAD SPACE compare;
-    mysql_date maps zero dates to NULL (common_definitions.h:53 policy)."""
-    from pyspark.sql import functions as F
-
+    """ci_eq reproduces MySQL utf8_general_ci + PAD SPACE compare."""
     from stonedb_spark.functions import mysql as M
 
     df = spark.createDataFrame(
         [("abc", "ABC  "), ("abc ", "abc"), ("abc", "abd"), ("Straße", "STRASSE")],
         ["a", "b"],
     )
-    got = df.select(
-        M.ci_eq("a", "b").alias("ci"), M.pad_eq("a", "b").alias("pad")
-    ).collect()
+    got = df.select(M.ci_eq("a", "b").alias("ci")).collect()
     assert [r["ci"] for r in got] == [True, True, False, False]
-    assert [r["pad"] for r in got] == [False, True, False, False]
-
-    d = spark.createDataFrame(
-        [("0000-00-00",), ("1997-03-04",), (None,)], ["s"]
-    ).select(M.mysql_date("s").alias("d"))
-    vals = [r["d"] for r in d.collect()]
-    assert vals[0] is None and vals[2] is None
-    assert str(vals[1]) == "1997-03-04"
 
 
 def test_session_variables_user_var_analog(spark):
@@ -189,11 +176,6 @@ def test_shim_semantics_on_edge_grid(spark):
             M.period_diff(F.col("p1"), F.col("p2")).alias("pd"),
             M.truncate(F.col("x"), 2).alias("tr2"),
             M.time_to_sec(M.sec_to_time(F.col("s"))).alias("rt"),
-            M.timestampdiff_day(
-                F.lit("2000-01-01 00:00:00").cast("timestamp"),
-                (F.lit("2000-01-01 00:00:00").cast("timestamp").cast("long") + F.col("s"))
-                .cast("timestamp"),
-            ).alias("dd"),
         )
         .collect()
     )
@@ -210,8 +192,6 @@ def test_shim_semantics_on_edge_grid(spark):
         assert r["tr2"] == math.trunc(round(r["x"] * 100, 4)) / 100.0, (r["x"], r["tr2"])
         # TIME_TO_SEC round-trips SEC_TO_TIME at the clamped magnitude
         assert r["rt"] == (1 if r["s"] >= 0 else -1) * s, r
-        # TIMESTAMPDIFF(DAY) truncates toward zero
-        assert r["dd"] == int(r["s"] / 86400), r
 
 
 def test_div_truncate_exact_past_double_mantissa(spark):
@@ -262,19 +242,13 @@ def test_div_truncate_exact_past_double_mantissa(spark):
 
 
 def test_bit_type_shims(spark):
-    """BIT(n) literal parse, clamp/null ingest modes and display
-    (alter_bit.test analog)."""
+    """BIT(n) clamp/null ingest modes and display (alter_bit.test
+    analog)."""
     from pyspark.sql import functions as F
 
     from stonedb_spark.functions import bittype as BT
 
-    assert BT.parse_bit_literal("b'1010'") == 10
-    assert BT.parse_bit_literal("B''") == 0
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        BT.parse_bit_literal("b'102'")
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         BT.bit_cast(F.lit(1), 65)
 
     df = spark.createDataFrame([(x,) for x in (-3, 0, 5, 7, 8, 300)], "x long")
@@ -300,29 +274,6 @@ def test_bit_type_query_matches_oracle(spark, oracle, sf_dir):
     q = all_queries()["func_bit_type"]
     problems = check_query(spark, oracle, q, sf_dir)
     assert not problems, problems
-
-
-def test_decimal_div_scale_rule(spark):
-    """MySQL div_precision_increment: result scale = dividend scale + 4,
-    HALF_UP — the documented 1/3 = 0.3333 and 7.5/2 = 3.75000 cases plus
-    rounding and zero-divisor behavior."""
-    import decimal as D
-
-    from pyspark.sql import functions as F
-
-    from stonedb_spark.functions import mysql as M
-
-    df = spark.createDataFrame([(1,)], "x int")
-    got = df.select(
-        M.decimal_div(F.lit(1), F.lit(3)).alias("a"),
-        M.decimal_div(F.lit(2), F.lit(3)).alias("b"),
-        M.decimal_div(F.lit(7.5).cast("decimal(10,1)"), F.lit(2), src_scale=1).alias("c"),
-        M.decimal_div(F.lit(1), F.lit(0)).alias("z"),
-    ).collect()[0]
-    assert got["a"] == D.Decimal("0.3333")
-    assert got["b"] == D.Decimal("0.6667")  # HALF_UP at scale 4
-    assert got["c"] == D.Decimal("3.75000")  # scale 1+4
-    assert got["z"] is None
 
 
 def test_string_shim_grid_vs_python_model(spark):

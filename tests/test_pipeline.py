@@ -38,154 +38,55 @@ def test_minhash_lsh_recall_vs_groundtruth(spark, sf_dir):
     assert lsh >= 0.7 * truth, f"LSH recall too low: {lsh}/{truth}"
 
 
-def test_ivf_refinement_improves_quantizer(spark, sf_dir):
-    """One spherical-k-means pass must not decrease the average cosine
-    of vectors to their assigned centroid (Lloyd monotonicity), and the
-    refined quantizer keeps nlist cells of the right dimension."""
-    from pyspark.sql import functions as F
-
+def test_connected_components_chain_and_clique(spark, sf_dir):
+    """Min-label propagation finds components on a diameter-40 chain
+    (40 rounds, past the default cap, so max_iter=50), a 4-clique and a
+    pair, and leaves singleton-free output (only nodes that appear in a
+    pair are labeled).  On the real near-dup pair graph every label is
+    the minimum node of its component, and every pair shares a label."""
     from stonedb_spark.catalog import load_tables
-    from stonedb_spark.operators.similarity import (
-        EMB_DIM,
-        IVF_NLIST,
-        cosine,
-        ivf_assign,
-        ivf_centroids,
-        ivf_refine_centroids,
-    )
+    from stonedb_spark.operators.dedup import connected_components, jaccard_pairs
 
-    e = load_tables(spark, sf_dir)["embeddings"]
-
-    def avg_best_cos(cents):
-        scored = e.crossJoin(F.broadcast(cents)).select(
-            "vec_id", cosine(F.col("embedding"), F.col("cvec")).alias("sim")
-        )
-        best = scored.groupBy("vec_id").agg(F.max("sim").alias("best"))
-        return best.agg(F.avg("best")).collect()[0][0]
-
-    seed = ivf_centroids(e)
-    refined = ivf_refine_centroids(e, seed)
-    rows = refined.collect()
-    assert len(rows) <= IVF_NLIST and all(len(r["cvec"]) == EMB_DIM for r in rows)
-    before, after = avg_best_cos(seed), avg_best_cos(refined)
-    assert after >= before - 1e-9, (before, after)
-    # assignment over the refined quantizer still covers every vector
-    assert ivf_assign(e, refined).count() == e.count()
-
-
-def test_connected_components_chain_and_clique(spark):
-    """Min-label propagation finds components on a diameter-5 chain
-    (multiple rounds needed), a triangle, and leaves singleton-free
-    output (only nodes that appear in a pair are labeled)."""
-    from stonedb_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        # chain 10-11-12-13-14-15, triangle 20-21-22, pair 30-31
-        [(10, 11), (11, 12), (12, 13), (13, 14), (14, 15),
-         (20, 21), (21, 22), (20, 22), (30, 31)],
-        ["d1", "d2"],
-    )
+    chain = [(i, i + 1) for i in range(100, 140)]
+    clique = [(200 + i, 200 + j) for i in range(4) for j in range(i + 1, 4)]
+    pairs = spark.createDataFrame(chain + clique + [(300, 301)], ["d1", "d2"])
     got = {
-        r["node"]: r["comp"] for r in connected_components(pairs).collect()
+        r["node"]: r["comp"]
+        for r in connected_components(pairs, max_iter=50).collect()
     }
     assert got == {
-        10: 10, 11: 10, 12: 10, 13: 10, 14: 10, 15: 10,
-        20: 20, 21: 20, 22: 20,
-        30: 30, 31: 30,
+        **{n: 100 for n in range(100, 141)},
+        **{n: 200 for n in range(200, 204)},
+        300: 300, 301: 300,
     }
+
+    real = jaccard_pairs(
+        load_tables(spark, sf_dir)["documents"], threshold=0.5, max_df=100
+    )
+    edges = [(r["d1"], r["d2"]) for r in real.collect()]
+    labels = {
+        r["node"]: r["comp"]
+        for r in connected_components(
+            spark.createDataFrame(edges, "d1 long, d2 long")
+        ).collect()
+    }
+    assert edges and set(labels) == {n for e in edges for n in e}
+    assert all(labels[a] == labels[b] for a, b in edges)
+    members: dict[int, list[int]] = {}
+    for node, comp in labels.items():
+        members.setdefault(comp, []).append(node)
+    assert all(min(ns) == comp for comp, ns in members.items())
 
 
 def test_connected_components_raise_at_round_cap(spark):
     """A 60-edge chain needs 60 propagation rounds, past the default
     cap of 25: the operator raises instead of returning the unconverged
-    labels (36 components where the answer is 1).  The star variant
-    raises the same way when its own cap ends the loop."""
-    from stonedb_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    labels (36 components where the answer is 1)."""
+    from stonedb_spark.operators.dedup import connected_components
 
     chain = spark.createDataFrame([(i, i + 1) for i in range(60)], ["d1", "d2"])
     with pytest.raises(RuntimeError, match="max_iter=25"):
         connected_components(chain)
-    with pytest.raises(RuntimeError, match="max_iter=1"):
-        connected_components_star(chain, max_iter=1)
-
-
-def test_pca_components_and_projection(spark, sf_dir):
-    """Driver eigh on mapInPandas moment partials must reproduce numpy
-    PCA on the collected corpus: orthonormal components, matching
-    eigenvalues, and the expression-based projection must equal the
-    numpy projection."""
-    import numpy as np
-
-    from stonedb_spark.catalog import load_tables
-    from stonedb_spark.operators.pca import (
-        covariance_matrix,
-        pca_components,
-        project,
-    )
-
-    e = load_tables(spark, sf_dir)["embeddings"]
-    local = np.stack([r["embedding"] for r in e.select("embedding").collect()])
-
-    cov, mean, n = covariance_matrix(e)
-    assert n == local.shape[0]
-    np.testing.assert_allclose(mean, local.mean(axis=0), rtol=1e-7, atol=1e-10)
-    np.testing.assert_allclose(
-        cov, np.cov(local, rowvar=False, bias=True), rtol=1e-6, atol=1e-9
-    )
-
-    comps, eigvals, mean2 = pca_components(e, k=4)
-    assert comps.shape == (4, local.shape[1])
-    np.testing.assert_allclose(comps @ comps.T, np.eye(4), atol=1e-8)
-    w = np.linalg.eigvalsh(np.cov(local, rowvar=False, bias=True))
-    np.testing.assert_allclose(sorted(eigvals), sorted(w[-4:]), rtol=1e-7)
-
-    got = (
-        project(e, comps, mean2)
-        .select("vec_id", "pc0", "pc1", "pc2", "pc3")
-        .orderBy("vec_id")
-        .toPandas()
-    )
-    ids = [r["vec_id"] for r in e.select("vec_id").orderBy("vec_id").collect()]
-    order = np.argsort(ids)
-    expect = (local - mean2) @ comps.T
-    np.testing.assert_allclose(
-        got[["pc0", "pc1", "pc2", "pc3"]].to_numpy(),
-        expect,
-        rtol=1e-7,
-        atol=1e-9,
-    )
-    # projected variance along pc0 is the top eigenvalue
-    np.testing.assert_allclose(
-        got["pc0"].to_numpy().var(), eigvals[0], rtol=1e-6
-    )
-
-
-def test_connected_components_star_equivalence(spark, sf_dir):
-    """Large-star/small-star must produce the identical labeling as
-    min-label propagation — on a long chain (the case it exists for),
-    a clique, and the real LSH near-dup pair graph."""
-    from stonedb_spark.catalog import load_tables
-    from stonedb_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-        jaccard_pairs,
-    )
-
-    chain = [(i, i + 1) for i in range(100, 140)]          # diameter 40
-    clique = [(200 + i, 200 + j) for i in range(4) for j in range(i + 1, 4)]
-    toy = spark.createDataFrame(chain + clique + [(300, 301)], ["d1", "d2"])
-    a = {r["node"]: r["comp"] for r in connected_components(toy, max_iter=50).collect()}
-    b = {r["node"]: r["comp"] for r in connected_components_star(toy).collect()}
-    assert a == b
-    assert b[139] == 100 and b[203] == 200 and b[301] == 300
-
-    real = jaccard_pairs(load_tables(spark, sf_dir)["documents"], threshold=0.5, max_df=100)
-    ra = {r["node"]: r["comp"] for r in connected_components(real).collect()}
-    rb = {r["node"]: r["comp"] for r in connected_components_star(real).collect()}
-    assert ra == rb and len(ra) > 0
 
 
 def test_operator_edge_cases_empty_inputs(spark):
@@ -197,10 +98,7 @@ def test_operator_edge_cases_empty_inputs(spark):
     )
 
     from stonedb_spark.operators.asofjoin import asof_join
-    from stonedb_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    from stonedb_spark.operators.dedup import connected_components
     from pyspark.sql import functions as F
 
     from stonedb_spark.operators.sampling import weighted_sample
@@ -209,7 +107,6 @@ def test_operator_edge_cases_empty_inputs(spark):
         [], StructType([StructField("d1", LongType()), StructField("d2", LongType())])
     )
     assert connected_components(empty_pairs).count() == 0
-    assert connected_components_star(empty_pairs).count() == 0
 
     import datetime as dt
     left = spark.createDataFrame(

@@ -592,12 +592,15 @@ def test_observed_metrics_single_pass(spark, sf_dir):
     (zero extra scans) and they must equal a separately-computed
     aggregation."""
     from stonedb_spark.catalog import load_tables
-    from stonedb_spark.plans.metrics import ingest_quality_counters, observed
+    from stonedb_spark.plans.metrics import observed
 
     o = load_tables(spark, sf_dir)["orders"]
-    counters = ingest_quality_counters(["o_custkey", "o_orderdate"])
-    counters["max_price"] = F.max("o_totalprice")
-    counters["n_urgent"] = F.count_if(F.col("o_orderpriority") == "1-URGENT")
+    counters = {
+        "nulls_o_custkey": F.count_if(F.col("o_custkey").isNull()),
+        "nulls_o_orderdate": F.count_if(F.col("o_orderdate").isNull()),
+        "max_price": F.max("o_totalprice"),
+        "n_urgent": F.count_if(F.col("o_orderpriority") == "1-URGENT"),
+    }
     df, obs = observed(o.filter(F.col("o_orderkey") <= 5000), counters)
     result_rows = df.groupBy("o_orderstatus").count().collect()  # the real query
     m = obs.get
@@ -606,6 +609,7 @@ def test_observed_metrics_single_pass(spark, sf_dir):
     assert m["n_urgent"] == base.filter(F.col("o_orderpriority") == "1-URGENT").count()
     assert m["max_price"] == base.agg(F.max("o_totalprice")).collect()[0][0]
     assert m["nulls_o_custkey"] == base.filter(F.col("o_custkey").isNull()).count()
+    assert m["nulls_o_orderdate"] == base.filter(F.col("o_orderdate").isNull()).count()
 
 
 def test_q18_scans_lineitem_once(spark, sf_dir):
@@ -660,28 +664,6 @@ def test_q17_avg_computed_over_pruned_lineitem(spark, sf_dir):
     # the filtered part (2 joins for 2 scans).
     assert plan.count("lineitem.parquet") == 2, plan[:1500]
     assert plan.count("BroadcastHashJoin") >= 2, plan[:1500]
-
-
-def test_scale_conf_sizing_rules():
-    """The 100 TB sizing helper: partitions track data size, never drop
-    below 2x cluster cores, stay within per-core memory, and cap."""
-    from stonedb_spark.session import scale_conf
-
-    tb = 1024**4
-    # 100 TB on 1000 executors x 4 cores
-    c = scale_conf(100 * tb, 1000)
-    assert int(c["spark.sql.shuffle.partitions"]) == 200_000  # capped
-    assert int(c["spark.sql.files.maxPartitionBytes"]) == 256 * 1024**2
-    # 1 TB on 50 executors: sized by data (ceil(1TB/256MB)=4096 > 2*200)
-    c = scale_conf(tb, 50)
-    assert int(c["spark.sql.shuffle.partitions"]) == 4096
-    # tiny data on a big cluster: floor at 2x cores keeps all cores busy
-    c = scale_conf(10 * 1024**2, 1000)
-    assert int(c["spark.sql.shuffle.partitions"]) == 8000
-    # memory-constrained executors shrink the partition target
-    c = scale_conf(tb, 50, mem_per_core_bytes=512 * 1024**2)
-    assert int(c["spark.sql.files.maxPartitionBytes"]) == 128 * 1024**2
-    assert int(c["spark.sql.adaptive.advisoryPartitionSizeInBytes"]) == 128 * 1024**2
 
 
 def test_incremental_dedup_probe_is_equi_join(spark, sf_dir):

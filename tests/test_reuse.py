@@ -61,23 +61,6 @@ TEST_ONLY_ALLOWED = {
     "optimize_zorder": "item 1",
     "write_with_bloom": "item 1",
     "write_bucketed": "item 1",
-    "connected_components_star": "item 3",
-    "collated": "item 5, open",
-    "decode_charset": "item 5, open",
-    "varchar_cast": "item 5, open",
-    "decimal_div": "item 5, open",
-    "mysql_date": "item 5, open",
-    "pad_eq": "item 5, open",
-    "tianmu_int_check": "item 5, open",
-    "timestampdiff_day": "item 5, open",
-    "parse_bit_literal": "item 5, open",
-    "covariance_matrix": "item 5, open",
-    "pca_components": "item 5, open",
-    "project": "item 5, open",
-    "ivf_refine_centroids": "item 5, open",
-    "observed": "item 5, open",
-    "ingest_quality_counters": "item 5, open",
-    "scale_conf": "item 5, open",
 }
 # Modules that hold test helpers by design.
 TEST_HELPER_MODULES = {PKG / "plans" / "inspect.py", PKG / "testing.py"}

@@ -54,27 +54,6 @@ def test_dml_queries(spark, oracle, sf_dir):
         assert q.build(spark, sf_dir).count() > 0
 
 
-def test_csv_load_quote_escape_linesep(spark, tmp_path):
-    """IOParameters parity: ENCLOSED BY / ESCAPED BY / LINES TERMINATED
-    BY / CHARACTER SET reach the distributed CSV parse."""
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    from stonedb_spark.sources.csvload import read_csv_with_rejects
-
-    p = tmp_path / "in.csv"
-    # | line sep, ; field sep, '…' enclosed, backslash-escaped quote
-    p.write_bytes(b"1;'a;b'|2;'it\\'s'|3;plain|x;broken_int|")
-    schema = StructType(
-        [StructField("id", IntegerType()), StructField("s", StringType())]
-    )
-    good, bad = read_csv_with_rejects(
-        spark, str(p), schema, sep=";", quote="'", escape="\\", line_sep="|"
-    )
-    rows = {r["id"]: r["s"] for r in good.collect()}
-    assert rows == {1: "a;b", 2: "it's", 3: "plain"}
-    assert bad.count() == 1 and "broken_int" in bad.collect()[0]["raw"]
-
-
 def test_csv_load_column_subset_with_defaults(spark, tmp_path):
     """issue1865.test: LOAD DATA ... (a, c) into an (a, b, c) table —
     the missing column takes its DEFAULT, and changing the default
@@ -429,35 +408,6 @@ def test_outfile_enclosed_null_marker_roundtrip(spark, tmp_path):
         '"1","say \\"hi\\"",\\N', '"2","plain","ok"',
         '"3",\\N,"multi \\"x\\" note"', '"4","",\\N',
     ]
-
-
-def test_strict_bigint_sentinel_range(spark):
-    """issue1361.test: the reference reserves -2^63 and -2^63+1 as its
-    NULL/minus-inf encodings (common_definitions.h:128-137), so a
-    strict INSERT of those values aborts with error 1264 even though
-    they fit two's-complement int64; -9223372036854775806 is the
-    smallest accepted BIGINT.  issue1363/1369/1362: large in-range
-    values (including a 0xFFFFFFFFFFFFFF hex literal) load fine."""
-    import pytest as _pytest
-
-    from stonedb_spark.functions.mysql import tianmu_int_check
-
-    ok = spark.createDataFrame(
-        [
-            (-9223372036854775806,),
-            (9223372036854775806,),
-            (1234,),
-            (97716021308405775,),
-            (0xFFFFFFFFFFFFFF,),
-        ],
-        "q1 long",
-    )
-    assert tianmu_int_check(ok, "q1", "bigint") is ok
-
-    for v in (-9223372036854775807, -9223372036854775808):
-        bad = spark.createDataFrame([(v,), (5,)], "q1 long")
-        with _pytest.raises(ValueError, match="1264"):
-            tianmu_int_check(bad, "q1", "bigint")
 
 
 def test_self_doubling_insert_select(spark, tmp_path):
