@@ -38,27 +38,67 @@ def test_minhash_lsh_recall_vs_groundtruth(spark, sf_dir):
     assert lsh >= 0.7 * truth, f"LSH recall too low: {lsh}/{truth}"
 
 
-def test_connected_components_chain_and_clique(spark, sf_dir):
-    """Min-label propagation finds components on a diameter-40 chain
-    (40 rounds, past the default cap, so max_iter=50), a 4-clique and a
-    pair, and leaves singleton-free output (only nodes that appear in a
-    pair are labeled).  On the real near-dup pair graph every label is
-    the minimum node of its component, and every pair shares a label."""
+def test_connected_components_chain_and_clique(spark):
+    """Min-label propagation finds components on a diameter-5 chain
+    (multiple rounds needed), a triangle, and leaves singleton-free
+    output (only nodes that appear in a pair are labeled)."""
+    from stonedb_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(
+        # chain 10-11-12-13-14-15, triangle 20-21-22, pair 30-31
+        [(10, 11), (11, 12), (12, 13), (13, 14), (14, 15),
+         (20, 21), (21, 22), (20, 22), (30, 31)],
+        ["d1", "d2"],
+    )
+    got = {
+        r["node"]: r["comp"] for r in connected_components(pairs).collect()
+    }
+    assert got == {
+        10: 10, 11: 10, 12: 10, 13: 10, 14: 10, 15: 10,
+        20: 20, 21: 20, 22: 20,
+        30: 30, 31: 30,
+    }
+
+
+def _union_find_labels(edges):
+    """Reference labeling: each node maps to the minimum node of its
+    component, computed by a driver-side union-find."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def test_connected_components_star_equivalence(spark, sf_dir):
+    """Min-label propagation must produce the identical labeling as a
+    union-find reference (every node labeled with its component's
+    minimum id) on a long chain (diameter 40, past the default round
+    cap, so max_iter=50), a 4-clique, a pair, and the real near-dup
+    pair graph, where every pair also shares a label."""
     from stonedb_spark.catalog import load_tables
     from stonedb_spark.operators.dedup import connected_components, jaccard_pairs
 
     chain = [(i, i + 1) for i in range(100, 140)]
     clique = [(200 + i, 200 + j) for i in range(4) for j in range(i + 1, 4)]
-    pairs = spark.createDataFrame(chain + clique + [(300, 301)], ["d1", "d2"])
+    toy_edges = chain + clique + [(300, 301)]
+    toy = spark.createDataFrame(toy_edges, ["d1", "d2"])
     got = {
         r["node"]: r["comp"]
-        for r in connected_components(pairs, max_iter=50).collect()
+        for r in connected_components(toy, max_iter=50).collect()
     }
-    assert got == {
-        **{n: 100 for n in range(100, 141)},
-        **{n: 200 for n in range(200, 204)},
-        300: 300, 301: 300,
-    }
+    assert got == _union_find_labels(toy_edges)
+    assert got[140] == 100 and got[203] == 200 and got[301] == 300
 
     real = jaccard_pairs(
         load_tables(spark, sf_dir)["documents"], threshold=0.5, max_df=100
@@ -70,12 +110,8 @@ def test_connected_components_chain_and_clique(spark, sf_dir):
             spark.createDataFrame(edges, "d1 long, d2 long")
         ).collect()
     }
-    assert edges and set(labels) == {n for e in edges for n in e}
+    assert edges and labels == _union_find_labels(edges)
     assert all(labels[a] == labels[b] for a, b in edges)
-    members: dict[int, list[int]] = {}
-    for node, comp in labels.items():
-        members.setdefault(comp, []).append(node)
-    assert all(min(ns) == comp for comp, ns in members.items())
 
 
 def test_connected_components_raise_at_round_cap(spark):
