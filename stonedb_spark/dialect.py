@@ -52,6 +52,97 @@ from pyspark.sql import functions as F
 from stonedb_spark.reuse import materialize
 
 # ---------------------------------------------------------------------------
+# Lexical scan: the one definition of a string literal
+#
+# MySQL's one lexer decides what a string literal is for every
+# statement; so does this section.  A literal is what ``_ANY_STRLIT``
+# matches (a backslash escape and a doubled quote both stay inside), a
+# `…` identifier is opaque, and a quote left open runs to the end of the
+# text.  Every scan "outside literals, at paren depth d" walks
+# ``_scan``, and every mask-and-restore goes through ``_mask_strlits``.
+
+_ANY_STRLIT = re.compile(r"'((?:[^'\\]|\\.|'')*)'|\"((?:[^\"\\]|\\.|\"\")*)\"")
+_LEX = re.compile(
+    rf"(?P<lit>{_ANY_STRLIT.pattern})|(?P<ident>`[^`]*`)"
+    r"|(?P<open>['\"`][\s\S]*)|[()]|[^'\"`()]+"
+)
+_COMMA = re.compile(",")
+
+
+def _scan(sql: str, start: int = 0, depth: int = 0):
+    """Walk ``sql`` from ``start``, at paren depth ``depth`` there,
+    outside string literals and backtick identifiers.  Yields ``(i, j,
+    d)`` for each run ``sql[i:j]`` of other text at paren depth ``d``; a
+    parenthesis is a run of its own, at the depth of the group it opens
+    or closes."""
+    for m in _LEX.finditer(sql, start):
+        if m.lastgroup:
+            continue
+        i = m.start()
+        if sql[i] == "(":
+            depth += 1
+        yield i, m.end(), depth
+        if sql[i] == ")":
+            depth -= 1
+
+
+def _top_matches(sql: str, pat: re.Pattern, start: int = 0, depth: int = 0):
+    """Matches of ``pat`` outside literals at paren depth ``depth``,
+    from ``start`` until the ``)`` that closes that depth (which sits at
+    ``depth`` itself, so ``pat`` may match it)."""
+    for i, j, d in _scan(sql, start, depth):
+        if d < depth:
+            return
+        if d == depth:
+            yield from pat.finditer(sql, i, j)
+
+
+def _close_paren(sql: str, i: int) -> int:
+    """Index of the ``)`` closing the group that opens just before
+    ``i``; ``len(sql)`` when it never closes."""
+    return next(
+        (a for a, _, d in _scan(sql, i, 1) if d == 1 and sql[a] == ")"),
+        len(sql))
+
+
+def _open_quote(text: str) -> int:
+    """Start of the literal or backtick identifier left open at the end
+    of ``text``; -1 when every quote closes."""
+    m = None
+    for m in _LEX.finditer(text):
+        pass
+    return m.start() if m and m.lastgroup == "open" else -1
+
+
+def _split_top_commas(text: str) -> list[str]:
+    parts, last = [], 0
+    for m in _top_matches(text, _COMMA):
+        parts.append(text[last:m.start()].strip())
+        last = m.end()
+    tail = text[last:].strip()
+    return parts + [tail] if tail else parts
+
+
+def _mask_strlits(sql: str):
+    """``sql`` with each string literal replaced by a numbered hole
+    ``\\x01n\\x01`` (distinct from the ``\\x00H`` / ``\\x00W`` holes),
+    and the function that puts the literals back into a text made from
+    the masked one."""
+    lits: list[str] = []
+
+    def hole(m: re.Match) -> str:
+        if m.lastgroup != "lit":
+            return m.group(0)
+        lits.append(m.group(0))
+        return f"\x01{len(lits) - 1}\x01"
+
+    def restore(text: str) -> str:
+        return re.sub(r"\x01(\d+)\x01", lambda m: lits[int(m.group(1))],
+                      text)
+
+    return _LEX.sub(hole, sql), restore
+
+# ---------------------------------------------------------------------------
 # MTR script → statements
 
 
@@ -62,25 +153,16 @@ class Statement:
 
 
 def _strip_block_comments(script: str) -> str:
-    out, i, in_str = [], 0, None
-    while i < len(script):
-        ch = script[i]
-        if in_str:
-            out.append(ch)
-            if ch == in_str:
-                in_str = None
-            i += 1
-        elif ch in ("'", '"'):
-            in_str = ch
-            out.append(ch)
-            i += 1
-        elif script.startswith("/*", i):
-            end = script.find("*/", i + 2)
-            i = len(script) if end < 0 else end + 2
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out)
+    out, pos = [], 0
+    while True:
+        ks = (script.find("/*", i, j) for i, j, _ in _scan(script, pos))
+        k = next((k for k in ks if k >= 0), -1)
+        if k < 0:
+            out.append(script[pos:])
+            return "".join(out)
+        out.append(script[pos:k])
+        end = script.find("*/", k + 2)
+        pos = len(script) if end < 0 else end + 2
 
 
 def split_mtr(script: str) -> list[Statement]:
@@ -100,13 +182,13 @@ def split_mtr(script: str) -> list[Statement]:
     stmts: list[Statement] = []
     buf: list[str] = []
     expect_error = False
-    in_str: str | None = None
+    open_lit = ""  # a literal still open at the end of the last line
     delim = ";"  # mysqltest DELIMITER command can change this
     for rawline in script.splitlines():
         line = rawline.strip()
-        if in_str is None and (not line or line.startswith("#")):
+        if not open_lit and (not line or line.startswith("#")):
             continue
-        if in_str is None and line.startswith("--"):
+        if not open_lit and line.startswith("--"):
             # '--error 1064' and the spaced '-- error 1064' form both
             # mark the next statement expect-to-fail
             if re.match(r"--\s*error\b", line, re.I):
@@ -126,7 +208,7 @@ def split_mtr(script: str) -> list[Statement]:
             continue
         dm = (
             re.match(r"^DELIMITER\s+(\S+)\s*$", line, re.I)
-            if in_str is None and not buf
+            if not open_lit and not buf
             else None
         )
         if dm:
@@ -138,43 +220,28 @@ def split_mtr(script: str) -> list[Statement]:
                 tok = tok[: -len(delim)]
             delim = tok or ";"
             continue
-        # scan for the statement terminator outside string literals
-        piece: list[str] = []
-        i = 0
-        while i < len(rawline):
-            ch = rawline[i]
-            if in_str:
-                piece.append(ch)
-                if ch == in_str:
-                    # doubled quote stays inside the literal
-                    if i + 1 < len(rawline) and rawline[i + 1] == in_str:
-                        piece.append(rawline[i + 1])
-                        i += 1
-                    else:
-                        in_str = None
-                elif ch == "\\" and i + 1 < len(rawline):
-                    piece.append(rawline[i + 1])
-                    i += 1
-            elif ch == "#":
-                break  # unquoted '#': comment to end of line (mysql CLI)
-            elif ch in ("'", '"', "`"):
-                # backticks quote identifiers that may CONTAIN '#'
-                # (issue487's `#mysql50#q.q`)
-                in_str = ch
-                piece.append(ch)
-            elif rawline.startswith(delim, i):
-                buf.append("".join(piece))
-                text = _norm_eval("\n".join(buf).strip())
-                if text:
-                    stmts.append(Statement(text, expect_error))
-                    expect_error = False
-                buf, piece = [], []
-                i += len(delim) - 1
-            else:
-                piece.append(ch)
-            i += 1
-        if piece or in_str:
-            buf.append("".join(piece))
+        # scan for the statement terminator outside string literals and
+        # backtick identifiers (which may CONTAIN '#': issue487's
+        # `#mysql50#q.q`); an unquoted '#' comments out the rest of the
+        # line (mysql CLI)
+        text = open_lit + rawline
+        last, cut = len(open_lit), len(text)
+        stop = re.compile("#|" + re.escape(delim))
+        for m in (m for i, j, _ in _scan(text)
+                  for m in stop.finditer(text, i, j)):
+            if m.group(0) == "#":
+                cut = m.start()
+                break
+            buf.append(text[last:m.start()])
+            stmt = _norm_eval("\n".join(buf).strip())
+            if stmt:
+                stmts.append(Statement(stmt, expect_error))
+                expect_error = False
+            buf, last = [], m.end()
+        k = _open_quote(text) if cut == len(text) else -1
+        open_lit = text[k:] + "\n" if k >= 0 else ""
+        if last < cut or open_lit:
+            buf.append(text[last:cut])
     tail = _norm_eval("\n".join(buf).strip())
     if tail:
         stmts.append(Statement(tail, expect_error))
@@ -459,17 +526,16 @@ def _expand_var_recurrences(stmts: list) -> list:
         # A site qualifies when its nearest enclosing paren level IS a
         # SELECT (statement or derived table) and the preceding token
         # at that level is SELECT[/DISTINCT] or a list comma.
-        _pmask = _ANY_STRLIT.sub(
-            lambda sm: "'" + " " * (len(sm.group(0)) - 2) + "'", text)
+        masked, restore = _mask_strlits(text)
 
         def _at_select_list(pos: int) -> bool:
             stack = []
-            for i, ch in enumerate(_pmask[:pos]):
+            for i, ch in enumerate(masked[:pos]):
                 if ch == "(":
                     stack.append(i)
                 elif ch == ")" and stack:
                     stack.pop()
-            seg = _pmask[(stack[-1] + 1 if stack else 0): pos]
+            seg = masked[(stack[-1] + 1 if stack else 0): pos]
             tok = seg.rstrip()
             if not (tok.endswith(",") or re.search(
                     r"(?is)\bSELECT\s*(?:DISTINCT\s*)?$", tok)):
@@ -481,15 +547,15 @@ def _expand_var_recurrences(stmts: list) -> list:
             return bool(re.match(r"\s*\(?\s*SELECT\b", seg, re.I))
 
         _pieces, _last = [], 0
-        for pm in _PREVCOL_IDIOM.finditer(_pmask):
+        for pm in _PREVCOL_IDIOM.finditer(masked):
             if not _at_select_list(pm.start()):
                 continue
-            _pieces.append(text[_last:pm.start()])
-            _pieces.append(_prev_fn(
-                _PREVCOL_IDIOM.match(text, pm.start()) or pm))
+            _pieces.append(masked[_last:pm.start()])
+            _pieces.append(_prev_fn(pm))
             _last = pm.end()
-        _pieces.append(text[_last:])
-        text = "".join(_pieces)
+        _pieces.append(masked[_last:])
+        text = restore("".join(_pieces))
+
 
         if re.search(r"@\w+\s*:=", _ANY_STRLIT.sub("''", text)):
             out.append(st)  # a site survived: unsupported shape
@@ -1706,33 +1772,6 @@ _CONSTRAINT_PREFIX = re.compile(
 )
 
 
-def _split_top_commas(text: str) -> list[str]:
-    parts, depth, buf, in_str = [], 0, [], None
-    for ch in text:
-        if in_str:
-            buf.append(ch)
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-            buf.append(ch)
-        elif ch == "(":
-            depth += 1
-            buf.append(ch)
-        elif ch == ")":
-            depth -= 1
-            buf.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-    last = "".join(buf).strip()
-    if last:
-        parts.append(last)
-    return parts
-
-
 def _unquote_ident(tok: str) -> str:
     tok = tok.strip()
     if tok.startswith("`") and tok.endswith("`"):
@@ -2117,21 +2156,8 @@ def _rewrite_group_concat(sql: str, engine: str) -> str:
             out.append(sql[i:])
             break
         out.append(sql[i : m.start()])
-        # find matching close paren
-        depth, j, in_str = 1, m.end(), None
-        while j < len(sql) and depth:
-            ch = sql[j]
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
-        inner = sql[m.end() : j - 1]
+        j = _close_paren(sql, m.end())
+        inner = sql[m.end() : j]
         sep = ","
         sm = re.search(r"\s+SEPARATOR\s+('(?:[^']|'')*'|\"(?:[^\"]|\"\")*\")\s*$",
                        inner, re.I)
@@ -2169,7 +2195,7 @@ def _rewrite_group_concat(sql: str, engine: str) -> str:
             else:
                 call = f"string_agg({distinct}{inner}, '{sep}')"
         out.append(call)
-        i = j
+        i = j + 1
     return "".join(out)
 
 
@@ -2279,21 +2305,7 @@ def _decorrelate_on_subqueries(sql: str) -> str:
                 if not sm:
                     break
                 a0 = i2 + sm.start()
-                depth, j2, in_str = 0, a0, None
-                while j2 < len(newcond):
-                    ch = newcond[j2]
-                    if in_str:
-                        if ch == in_str:
-                            in_str = None
-                    elif ch in ("'", '"'):
-                        in_str = ch
-                    elif ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                        if depth == 0:
-                            break
-                    j2 += 1
+                j2 = _close_paren(newcond, a0 + 1)
                 sub = newcond[a0:j2 + 1]
                 quals = {
                     q.lower() for q in re.findall(
@@ -2340,44 +2352,17 @@ def _peel_join_operand_parens(sql: str) -> str:
         m = pat.search(sql, i)
         if not m:
             return sql
-        depth, j, in_str = 1, m.end(), None
-        while j < len(sql) and depth:
-            ch = sql[j]
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
-        inner = sql[m.end():j - 1].strip()
+        j = _close_paren(sql, m.end())
+        inner = sql[m.end():j].strip()
         im = re.fullmatch(
             r"(\((?:.|\n)*\))\s+(?:AS\s+)?(`[^`]+`|\w+)", inner, re.I)
         if im:
-            # the captured group must itself be balanced (greedy
-            # capture could otherwise split a paren pair)
+            # the captured group must be ONE paren pair (greedy capture
+            # could otherwise span two)
             grp = im.group(1)
-            bal, ins = 0, None
-            ok = True
-            for k2, ch in enumerate(grp):
-                if ins:
-                    if ch == ins:
-                        ins = None
-                elif ch in ("'", '"'):
-                    ins = ch
-                elif ch == "(":
-                    bal += 1
-                elif ch == ")":
-                    bal -= 1
-                    if bal == 0 and k2 != len(grp) - 1:
-                        ok = False
-                        break
-            if ok and bal == 0:
+            if _close_paren(grp, 1) == len(grp) - 1:
                 sql = (sql[:m.end() - 1] + grp + " AS "
-                       + im.group(2) + sql[j:])
+                       + im.group(2) + sql[j + 1:])
                 i = m.end()
                 continue
         i = m.end()
@@ -2405,20 +2390,9 @@ def _rewrite_between_mix_duck(sql: str) -> str:
             continue
         hm = re.match(r"[\w.`]+\s*\(", sql[j:])
         if hm:
-            depth, k, in_str = 1, j + hm.end(), None
-            while k < len(sql) and depth:
-                ch = sql[k]
-                if in_str:
-                    if ch == in_str:
-                        in_str = None
-                elif ch in ("'", '"'):
-                    in_str = ch
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                k += 1
+            k = _close_paren(sql, j + hm.end()) + 1
             high = sql[j:k]
+
         else:
             hm2 = re.match(r"[\w.`]+", sql[j:])
             if not hm2:
@@ -2460,45 +2434,19 @@ def _rewrite_str_num_compare(sql: str) -> str:
 
 
 def _rewrite_date_format(sql: str, engine: str) -> str:
-    pat = re.compile(r"\bDATE_FORMAT\s*\(", re.I)
-    out, i = [], 0
-    while True:
-        m = pat.search(sql, i)
-        if not m:
-            out.append(sql[i:])
-            break
-        out.append(sql[i : m.start()])
-        depth, j, in_str = 1, m.end(), None
-        while j < len(sql) and depth:
-            ch = sql[j]
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
-        inner = sql[m.end() : j - 1]
+    def call(inner: str) -> str:
         parts = _split_top_commas(inner)
         if len(parts) != 2:
             raise ValueError(f"DATE_FORMAT needs 2 args: {inner!r}")
         expr, fmt = parts
         flit = fmt.strip().strip("'\"")
         if engine == "spark":
-            out.append(
-                f"date_format(CAST({expr} AS TIMESTAMP), "
-                f"'{_mysql_datefmt_to_java(flit)}')"
-            )
-        else:
-            out.append(
-                f"strftime(CAST({expr} AS TIMESTAMP), "
-                f"'{_mysql_datefmt_to_strftime(flit)}')"
-            )
-        i = j
-    return "".join(out)
+            return (f"date_format(CAST({expr} AS TIMESTAMP), "
+                    f"'{_mysql_datefmt_to_java(flit)}')")
+        return (f"strftime(CAST({expr} AS TIMESTAMP), "
+                f"'{_mysql_datefmt_to_strftime(flit)}')")
+
+    return _wrap_calls(sql, "DATE_FORMAT", call)
 
 
 # MySQL DATE_FORMAT codes whose C-strftime spelling DIFFERS — the rest
@@ -2546,20 +2494,8 @@ def _rewrite_date_arith(sql: str, engine: str) -> str:
             out.append(sql[i:])
             break
         out.append(sql[i : m.start()])
-        depth, j, in_str = 1, m.end(), None
-        while j < len(sql) and depth:
-            ch = sql[j]
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
-        inner = sql[m.end() : j - 1]
+        j = _close_paren(sql, m.end())
+        inner = sql[m.end() : j]
         parts = _split_top_commas(inner)
         if len(parts) != 2:
             raise ValueError(f"DATE_{m.group(1)} needs 2 args: {inner!r}")
@@ -2613,7 +2549,7 @@ def _rewrite_date_arith(sql: str, engine: str) -> str:
             )
         else:
             out.append(f"(TRY_CAST({expr} AS TIMESTAMP) {shift})")
-        i = j
+        i = j + 1
     return "".join(out)
 
 
@@ -2770,6 +2706,9 @@ def _cast_mysql(inner: str, engine: str) -> str:
     return f"CAST({expr} AS {ttext})"
 
 
+_ORDER_KEYS_END = re.compile(r"(?i)\)|(?<![^\W_])(?:LIMIT|OFFSET|FOR)\b")
+
+
 def _duck_order_nulls(sql: str) -> str:
     """MySQL (and Spark) sort NULLs FIRST on ASC and LAST on DESC;
     DuckDB defaults to NULLS LAST everywhere.  Spell the MySQL rule
@@ -2782,26 +2721,9 @@ def _duck_order_nulls(sql: str) -> str:
             out.append(sql[i:])
             break
         out.append(sql[i : m.end()])
-        # scan the key list to its end (LIMIT/OFFSET/closing paren/EOS)
-        j, depth, in_str = m.end(), 0, None
-        while j < len(sql):
-            ch = sql[j]
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and re.match(
-                r"(LIMIT|OFFSET|FOR)\b", sql[j:], re.I
-            ) and (j == 0 or not sql[j - 1].isalnum()):
-                break
-            j += 1
+        # the key list ends at LIMIT/OFFSET/FOR, a closing paren or EOS
+        end = next(_top_matches(sql, _ORDER_KEYS_END, m.end()), None)
+        j = end.start() if end else len(sql)
         keys = _split_top_commas(sql[m.end() : j])
         fixed = []
         for k in keys:
@@ -2819,29 +2741,11 @@ def _duck_order_nulls(sql: str) -> str:
 
 def _replace_outside_strings(sql: str, pairs: list[tuple[str, str]]) -> str:
     """Literal token replacement that never touches string literals."""
-    out, i, in_str = [], 0, None
-    while i < len(sql):
-        ch = sql[i]
-        if in_str:
-            out.append(ch)
-            if ch == in_str:
-                in_str = None
-            i += 1
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-            out.append(ch)
-            i += 1
-            continue
-        for old, new in pairs:
-            if sql.startswith(old, i):
-                out.append(new)
-                i += len(old)
-                break
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out)
+    new = dict(pairs)
+    return _sub_outside_strings(
+        sql, re.compile("|".join(re.escape(old) for old, _ in pairs)),
+        lambda m: new[m.group(0)])
+
 
 
 def _rewrite_logical_ops(sql: str) -> str:
@@ -3130,31 +3034,15 @@ def _scan_token(sql: str, start: int, depth0: int, words: tuple) -> int:
     """Index of the first occurrence of any ``words`` token at paren
     depth ``depth0`` scanning from ``start`` (strings skipped); -1 when
     the depth drops below depth0 or the string ends first."""
-    i, depth, in_str, n = start, depth0, None, len(sql)
-    while i < n:
-        ch = sql[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-            i += 1
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < depth0:
-                return -1
-        elif depth == depth0 and (ch.isalpha() or ch == "_"):
-            m = re.match(r"[A-Za-z_]\w*", sql[i:])
-            tok = m.group(0).upper()
-            if tok in words:
-                return i
-            i += len(m.group(0))
-            continue
-        i += 1
-    return -1
+    pat = re.compile(r"(?i)\b(?:" + "|".join(words) + r")\b")
+    m = next(_top_matches(sql, pat, start, depth0), None)
+    return m.start() if m else -1
+
+
+_SELECT_KW = re.compile(r"(?i)\bSELECT\b")
+_GROUP_KEYS_END = re.compile(
+
+    r"(?i)\)|\b(?:HAVING|ORDER|LIMIT|UNION|EXCEPT|INTERSECT)\b")
 
 
 def _wrap_nongrouped_any_value(
@@ -3173,24 +3061,11 @@ def _wrap_nongrouped_any_value(
     derived tables) is handled; blocks whose GROUP BY keys aren't
     simple identifiers, or whose select list uses * or DISTINCT, are
     left alone."""
-    positions = [
-        m.start() for m in re.finditer(r"\bSELECT\b", sql, re.I)
+    selects = [
+        (m.start(), d) for i, j, d in _scan(sql)
+        for m in _SELECT_KW.finditer(sql, i, j)
     ]
-    for p in reversed(positions):  # innermost-safe: rewrite right-first
-        # depth of this SELECT
-        depth0, in_str = 0, None
-        for ch in sql[:p]:
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth0 += 1
-            elif ch == ")":
-                depth0 -= 1
-        if in_str:
-            continue  # 'SELECT' inside a string literal
+    for p, depth0 in reversed(selects):  # innermost-safe: right-first
         list_start = p + len("SELECT")
         from_i = _scan_token(sql, list_start, depth0, ("FROM",))
         if from_i < 0:
@@ -3212,28 +3087,11 @@ def _wrap_nongrouped_any_value(
             keys_start = gb_i + len(
                 re.match(r"GROUP\s+BY", sql[gb_i:], re.I).group(0)
             )
-        keys_end = keys_start if keys_start == from_i else _scan_token(
-            sql, keys_start, depth0,
-            ("HAVING", "ORDER", "LIMIT", "UNION", "EXCEPT", "INTERSECT"),
-        )
-        if keys_end < 0:
-            # ended by depth drop or EOS: recompute the span end
-            i, depth, in_str2 = keys_start, depth0, None
-            while i < len(sql):
-                ch = sql[i]
-                if in_str2:
-                    if ch == in_str2:
-                        in_str2 = None
-                elif ch in ("'", '"'):
-                    in_str2 = ch
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth < depth0:
-                        break
-                i += 1
-            keys_end = i
+        # the keys end at the next clause, the enclosing ')' or EOS
+        end = next(_top_matches(sql, _GROUP_KEYS_END, keys_start, depth0),
+                   None)
+        keys_end = (keys_start if keys_start == from_i
+                    else end.start() if end else len(sql))
         keys = []
         simple = True
         for k in _split_top_commas(sql[keys_start:keys_end]):
@@ -3409,12 +3267,9 @@ def _const_tokens(expr: str) -> list:
         elif ch in "()+-*/%,":
             toks.append(ch)
             i += 1
-        elif ch in ("'", '"'):
-            j = i + 1
-            while j < n and expr[j] != ch:
-                j += 2 if expr[j] == "\\" else 1
-            toks.append(("str", expr[i + 1 : j]))
-            i = j + 1
+        elif m := _ANY_STRLIT.match(expr, i):
+            toks.append(("str", m.group(0)[1:-1]))
+            i = m.end()
         elif ch.isdigit() or (ch == "." and i + 1 < n and expr[i + 1].isdigit()):
             m = re.match(r"\d*\.?\d+([eE][+-]?\d+)?", expr[i:])
             toks.append(("num", m.group(0)))
@@ -3808,25 +3663,10 @@ def _check_insert_shape(s: str) -> None:
     ]
     if m.group(3).upper().startswith("VALUE"):
         vm = re.search(r"\bVALUES?\s*\(", s, re.I)
-        # balanced-paren extraction of the FIRST tuple (nested calls,
-        # quoted commas)
-        depth, i, in_str = 1, vm.end(), None
-        start = vm.end()
-        while i < len(s) and depth:
-            ch = s[i]
-            if in_str:
-                if ch == "\\":
-                    i += 1
-                elif ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        arity = len(_split_top_commas(s[start : i - 1]))
+        # the FIRST tuple (nested calls, quoted commas)
+        tup = s[vm.end():_close_paren(s, vm.end())]
+        arity = len(_split_top_commas(tup))
+
         if arity != len(cols):
             raise ValueError(
                 "Column count doesn't match value count "
@@ -4397,45 +4237,25 @@ def _xor_to_neq(cond: str) -> str:
 
 
 _CLAUSE_KW = re.compile(r"(?i)\b(WHERE|HAVING)\b")
-_CLAUSE_END = re.compile(
-    r"(?i)\bGROUP\s+BY\b|\bORDER\s+BY\b|\bLIMIT\b|\bHAVING\b|\bUNION\b"
+_CLAUSE_END = re.compile(  # or the enclosing subquery's ')'
+    r"(?i)\)|\bGROUP\s+BY\b|\bORDER\s+BY\b|\bLIMIT\b|\bHAVING\b|\bUNION\b"
 )
 
 
 def _truthy_bool_clauses(sql: str) -> str:
     """Apply the truthy-leaf / XOR normalizations to WHERE and HAVING
-    clause bodies.  Matching runs on a string-literal-masked copy so a
+    clause bodies.  Keywords match outside string literals only, so a
     WHERE inside a literal never starts a rewrite, and the body is
     bounded at the SAME paren depth as the clause keyword so an inner
     subquery's GROUP BY/ORDER BY never truncates it."""
-    mask = _ANY_STRLIT.sub(lambda m: "\x00" * len(m.group(0)), sql)
     out, pos = [], 0
-    for m in _CLAUSE_KW.finditer(mask):
+    kws = [m for i, j, _ in _scan(sql)
+           for m in _CLAUSE_KW.finditer(sql, i, j)]
+    for m in kws:
         if m.start() < pos:
             continue  # keyword inside an already-consumed body
-        i, end = m.end(), len(mask)
-        while i < end:
-            ch = mask[i]
-            if ch == "(":  # skip a whole balanced subexpression
-                depth = 1
-                j = i + 1
-                while j < end and depth:
-                    if mask[j] == "(":
-                        depth += 1
-                    elif mask[j] == ")":
-                        depth -= 1
-                    j += 1
-                if depth:  # unbalanced tail: clause owns the rest
-                    i = end
-                    break
-                i = j
-                continue
-            if ch == ")":
-                break  # clause's enclosing subquery closes
-            km = _CLAUSE_END.match(mask, i)
-            if km:
-                break
-            i += 1
+        end = next(_top_matches(sql, _CLAUSE_END, m.end()), None)
+        i = end.start() if end else len(sql)
         out.append(sql[pos:m.start()])
         body = _xor_to_neq(_wrap_truthy_leaves(sql[m.end():i]))
         out.append(f"{m.group(1)} {body.strip()} ")
@@ -4458,49 +4278,27 @@ def _charset_introspect(inner: str, which: str) -> str:
     raise ValueError(f"CHARSET()/COLLATION() over unsupported arg: {inner!r}")
 
 
+_TOP_BOOL = re.compile(
+    r"(?i)\b(?:CASE|END|IS|LIKE|BETWEEN|EXISTS)\b|[=<>]|!=")
+
+
 def _is_toplevel_bool(expr: str) -> bool:
     """True when an aggregate argument is boolean-valued at its top
     level — a comparison, IS [NOT] NULL, LIKE, or BETWEEN outside any
     parentheses, string, or CASE…END (whose internal comparisons
     don't make the CASE boolean).  Drives MySQL's bool→0/1 coercion
-    under SUM/AVG (insert_into_select.test's SUM(a IS NULL))."""
-    depth = case_depth = 0
-    in_str = None
-    i, n = 0, len(expr)
-    while i < n:
-        ch = expr[i]
-        if in_str:
-            if ch == "\\":
-                i += 1
-            elif ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch.isalpha():
-            m = re.match(r"[A-Za-z_]\w*", expr[i:])
-            word = m.group(0).upper()
-            if word == "CASE":
-                case_depth += 1
-            elif word == "END" and case_depth:
-                case_depth -= 1
-            elif case_depth == 0 and word in (
-                "IS", "LIKE", "BETWEEN", "EXISTS",
-            ):
-                # EXISTS(SELECT …) is boolean at its top level —
-                # trigger-fold guards wrap it in IF(…)
-                return True
-            i += len(word)
-            continue
-        elif depth == 0 and case_depth == 0 and ch in "=<>":
+    under SUM/AVG (insert_into_select.test's SUM(a IS NULL)).
+    EXISTS(SELECT …) is boolean at its top level too — trigger-fold
+    guards wrap it in IF(…)."""
+    case_depth = 0
+    for m in _top_matches(expr, _TOP_BOOL):
+        word = m.group(0).upper()
+        if word == "CASE":
+            case_depth += 1
+        elif word == "END":
+            case_depth = max(case_depth - 1, 0)
+        elif not case_depth:
             return True
-        elif depth == 0 and case_depth == 0 and ch == "!" and \
-                i + 1 < n and expr[i + 1] == "=":
-            return True
-        i += 1
     return False
 
 
@@ -5426,8 +5224,6 @@ def _engine_str_encode(s: str, engine: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
-_ANY_STRLIT = re.compile(r"'((?:[^'\\]|\\.|'')*)'|\"((?:[^\"\\]|\\.|\"\")*)\"")
-
 # string functions whose literal arguments are NOT temporal values:
 # the short-year pad pass must not rewrite inside them
 _DATEPAD_STRFNS = (
@@ -5587,24 +5383,7 @@ _CMP_TOP = re.compile(
 
 
 def _has_top_cmp(expr: str) -> bool:
-    depth, in_str, i = 0, None, 0
-    while i < len(expr):
-        ch = expr[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = _CMP_TOP.match(expr, i)
-            if m:
-                return True
-        i += 1
-    return False
+    return next(_top_matches(expr, _CMP_TOP), None) is not None
 
 
 _CASE_KW = re.compile(r"\b(CASE|WHEN|THEN|ELSE|END)\b", re.I)
@@ -5618,25 +5397,10 @@ def _rewrite_simple_case_bool(sql: str) -> str:
     SIMPLE (operand-carrying) CASEs in CAST(… AS INT).  Searched CASEs
     are untouched."""
     # Collect keyword occurrences outside string literals.
-    kws: list[tuple[int, int, str]] = []  # (start, end, upper-kw)
-    in_str, i = None, 0
-    while i < len(sql):
-        ch = sql[i]
-        if in_str:
-            if ch == in_str:
-                in_str = None
-            i += 1
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-            i += 1
-            continue
-        m = _CASE_KW.match(sql, i)
-        if m:
-            kws.append((m.start(), m.end(), m.group(1).upper()))
-            i = m.end()
-        else:
-            i += 1
+    kws = [  # (start, end, upper-kw)
+        (m.start(), m.end(), m.group(1).upper())
+        for i, j, _ in _scan(sql) for m in _CASE_KW.finditer(sql, i, j)
+    ]
     if not kws:
         return sql
     # Pair CASE..END by depth; record simple-case WHEN expression spans.
@@ -6306,24 +6070,12 @@ def _wrap_calls(sql: str, fname: str, wrap) -> str:
             out.append(sql[i:])
             break
         out.append(sql[i : m.start()])
-        depth, j, in_str = 1, m.end(), None
-        while j < len(sql) and depth:
-            ch = sql[j]
-            if in_str:
-                if ch == in_str:
-                    in_str = None
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
-        inner = sql[m.end() : j - 1]
+        j = _close_paren(sql, m.end())
+        inner = sql[m.end() : j]
         if pat.search(inner):
             inner = _wrap_calls(inner, fname, wrap)
         out.append(wrap(inner))
-        i = j
+        i = j + 1
     return "".join(out)
 
 
@@ -6369,8 +6121,8 @@ _SP_WS = re.compile(r"\s+")
 _SP_OPEN = re.compile(r"(?is)(?:(\w+)\s*:\s*)?(BEGIN|LOOP|REPEAT)\b")
 _SP_ELSE = re.compile(r"(?is)ELSE\b")
 _SP_HEAD = re.compile(r"(?is)(?:\w+\s*:\s*)?(IF|ELSEIF|CASE|WHEN|WHILE)\b")
-_SP_THEN = re.compile(r"(?i)THEN\b")
-_SP_DO = re.compile(r"(?i)DO\b")
+_SP_THEN = re.compile(r"(?i)(?<!\w)THEN\b")
+_SP_DO = re.compile(r"(?i)(?<!\w)DO\b")
 _SP_CLOSER = re.compile(r"(?is)(END|ELSE|ELSEIF|WHEN|UNTIL)\b")
 _SP_END = re.compile(
     r"(?is)END(?:\s+(IF|CASE|WHILE|LOOP|REPEAT)\b)?(?:\s+\w+)?")
@@ -6386,34 +6138,22 @@ def _sp_scan(text: str, i: int, kw: re.Pattern | None = None) -> int:
     literals, or with ``kw`` the end of that keyword outside literals
     and parentheses (a THEN inside ``RETURN (CASE … END)`` is part of
     an expression)."""
-    depth, quote, j = 0, None, i
-    while j < len(text):
-        ch = text[j]
-        if quote:
-            if ch == "\\":
-                j += 1
-            elif ch == quote:
-                quote = None
-        elif ch in "'\"`":
-            quote = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == ";":
-            if kw is not None:
-                break
-            return j
-        elif (kw is not None and depth == 0 and j > i
-              and not (text[j - 1].isalnum() or text[j - 1] == "_")):
-            m = kw.match(text, j)
-            if m:
-                return m.end()
-        j += 1
-    if kw is not None:
-        raise ValueError(
-            f"stored program: unterminated block header {text[i:j][:60]!r}")
-    return j
+    for a, b, d in _scan(text, i):
+        semi = text.find(";", a, b)
+        m = kw and d == 0 and kw.search(
+            text, max(a, i + 1), b if semi < 0 else semi)
+        if m:
+            return m.end()
+        if semi >= 0:
+            break
+    else:
+        semi = len(text)
+    if kw is None:
+        return semi
+    raise ValueError(
+        f"stored program: unterminated block header {text[i:semi][:60]!r}")
+
+
 
 
 def _sp_units(text: str) -> list[str]:
@@ -7370,13 +7110,7 @@ def _backtick_dollar_idents(s: str) -> str:
     statement entry so every downstream parser sees the quoted form."""
     if "$" not in s:
         return s
-    lits: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"\x03{len(lits) - 1}\x03"
-
-    t = _ANY_STRLIT.sub(_mask, s)
+    t, restore = _mask_strlits(s)
     t = re.sub(
         # '@' in the lookbehind: user/system variables (@v$x) are not
         # identifiers — backticking them breaks @-substitution
@@ -7385,9 +7119,7 @@ def _backtick_dollar_idents(s: str) -> str:
         m.group(0),
         t,
     )
-    for i, lit in enumerate(lits):
-        t = t.replace(f"\x03{i}\x03", lit)
-    return t
+    return restore(t)
 
 
 def _normalize_create_index(s: str) -> str:
@@ -7447,21 +7179,7 @@ def _split_create_select(s: str):
     m = re.match(r"^\s*CREATE\s+TABLE\s+(`[^`]+`|\w+)\s*\(", s, re.I)
     if not m:
         return None
-    depth, i, in_str = 1, m.end(), None
-    while i < len(s) and depth:
-        ch = s[i]
-        if in_str:
-            if ch == "\\":
-                i += 1
-            elif ch == in_str:
-                in_str = None
-        elif ch in ("'", '"', "`"):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        i += 1
+    i = _close_paren(s, m.end()) + 1
     rest = s[i:]
     rm = re.search(r"\bSELECT\b", rest, re.I)
     if not rm:
@@ -7596,22 +7314,14 @@ def _map_physnames(sql: str, tables: dict) -> str:
     ]
     if not weird:
         return sql
-    lits: list[str] = []
-
-    def _mask(m):
-        lits.append(m.group(0))
-        return f"\x00L{len(lits) - 1}\x00"
-
-    sql = _ANY_STRLIT.sub(_mask, sql)
+    sql, restore = _mask_strlits(sql)
     for nm in weird:
         phys = _physname(nm)
         sql = sql.replace(f"`{nm}`", f"`{phys}`")
         sql = re.sub(
             rf"(?<![\w`]){re.escape(nm)}(?![\w`])", f"`{phys}`", sql
         )
-    return re.sub(
-        r"\x00L(\d+)\x00", lambda m: lits[int(m.group(1))], sql
-    )
+    return restore(sql)
 
 
 def _parked_name(name: str) -> str:
@@ -8054,20 +7764,13 @@ def _qualify_tbl_cols(expr: str, td: TableDef, tname: str,
     """Qualify bare references to the table's own columns with the
     table alias — the _hit_join FROM exposes the same columns twice
     (target + _h), so an unqualified ``j + 10`` is ambiguous."""
-    lits: list[str] = []
-
-    def _mask(m):
-        lits.append(m.group(0))
-        return f"\x05{len(lits) - 1}\x05"
-
-    t = _ANY_STRLIT.sub(_mask, expr)
+    t, restore = _mask_strlits(expr)
     for c in td.columns:
         t = re.sub(
             rf"(?i)(?<![\w`.$]){re.escape(c.name)}(?![\w`$(])",
             f"{q}{tname}{q}.{q}{c.name}{q}", t,
         )
-    return re.sub(r"\x05(\d+)\x05",
-                  lambda m: lits[int(m.group(1))], t)
+    return restore(t)
 
 
 def _multi_update_sql(
@@ -8408,7 +8111,7 @@ _BW_ATOM = (
     r"(?:\x00W\d+\x00"                                 # consumed fragment
     rf"|\w+\s*{_BW_PAREN2}"                            # call (CAST(CAST(…)))
     # [qual.]ident — but not the b/x of a b'…'/x'…' literal introducer
-    # (\x01 = a masked string literal; see _apply_bitwise_mysql)
+    # (\x01 = a string literal masked by _mask_strlits)
     r"|(?:\w+|`[^`]+`)(?:\s*\.\s*(?:\w+|`[^`]+`))?(?!['\x01])"
     r"|\d+(?:\.\d+)?(?:[eE][+-]?\d+)?"                 # numeric literal
     rf"|{_BW_PAREN2})"                                 # paren group
@@ -8620,15 +8323,6 @@ def _apply_bitwise_mysql(
             )
         return hide(f"TRY_CAST({core} AS DECIMAL(20,0))")
 
-    # mask string literals IN PLACE (not the _sub_outside_strings
-    # split, which would put a b'1111' introducer's ident at a segment
-    # end where the (?!') lookahead can't see the quote)
-    lits: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"\x01{len(lits) - 1}\x01"
-
     def rep_not(m: re.Match) -> str:
         # unary ~x = u64 NOT (other_bit: ~18446744073709551615 = 0)
         raw = m.group(1)
@@ -8637,7 +8331,10 @@ def _apply_bitwise_mysql(
             return hide(unsigned_render_spark(f"(~{s64(nk)})"))
         return hide(f"TRY_CAST((~{u64(nk)}) AS DECIMAL(20,0))")
 
-    sql = _ANY_STRLIT.sub(_mask, sql)
+    # mask string literals IN PLACE (not the _sub_outside_strings
+    # split, which would put a b'1111' introducer's ident at a segment
+    # end where the (?!') lookahead can't see the quote)
+    sql, restore = _mask_strlits(sql)
     for _ in range(8):  # chains: leftmost pair first, then re-scan
         new = _BW_NOT_RX.sub(rep_not, sql)
         new = _BW_RX.sub(rep, new)
@@ -8655,9 +8352,8 @@ def _apply_bitwise_mysql(
     while "\x00W" in sql:  # nested holes restore inner-out
         for i, h in enumerate(holes):
             sql = sql.replace(f"\x00W{i}\x00", h)
-    for i, lit in enumerate(lits):
-        sql = sql.replace(f"\x01{i}\x01", lit)
-    return sql
+    return restore(sql)
+
 
 
 _ON_BARE_ATOM = re.compile(
@@ -9020,6 +8716,9 @@ def _check_nzd_dml(
             )
 
 
+_WHERE_KW = re.compile(r"(?i)\bWHERE\b")
+
+
 def _normalize_dml_where(
     s: str, tables: dict[str, TableDef], engine: str
 ) -> str:
@@ -9031,25 +8730,17 @@ def _normalize_dml_where(
     Table refs are collected from the statement HEAD (UPDATE target,
     FROM, JOIN) and prepended as a synthetic FROM/JOIN stub so the
     passes' column collection still sees them."""
-    masked = _ANY_STRLIT.sub(
-        lambda m: "'" + " " * (len(m.group(0)) - 2) + "'", s)
-    pos = None
-    depth = 0
-    for m in re.finditer(r"[()]|\bWHERE\b", masked, re.I):
-        if m.group(0) == "(":
-            depth += 1
-        elif m.group(0) == ")":
-            depth -= 1
-        elif depth == 0:
-            pos = m.start()
-    if pos is None:
+    wheres = [m.start() for m in _top_matches(s, _WHERE_KW)]
+    if not wheres:
         return s
+    pos = wheres[-1]
     refs = [
         _unquote_ident(r) for r in re.findall(
             r"(?is)\b(?:UPDATE|FROM|JOIN)\s+(?:IGNORE\s+)?"
-            r"(`[^`]+`|\w+)", masked[:pos])
+            r"(`[^`]+`|\w+)", _ANY_STRLIT.sub("''", s[:pos]))
         if _unquote_ident(r).lower() in tables
     ]
+
     if not refs:
         return s
     stub = "FROM `x` " + "".join(f"JOIN `{r}` " for r in refs)
@@ -9064,36 +8755,17 @@ def _normalize_dml_where(
     return s[:pos] + tail[len(stub):]
 
 
+_UNION_KW = re.compile(r"(?i)(?<!\w)UNION(\s+(ALL|DISTINCT))?\b")
+
+
 def _split_top_unions(sql: str) -> list[str]:
     """Split a statement on top-level UNION [ALL|DISTINCT] keywords
     (outside parens and strings); returns [sql] when none."""
-    parts, depth, in_str = [], 0, None
-    i = last = 0
-    n = len(sql)
-    out = []
-    while i < n:
-        ch = sql[i]
-        if in_str:
-            if ch == "\\":
-                i += 1
-            elif ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "uU" and re.match(
-            r"UNION(\s+(ALL|DISTINCT))?\b", sql[i:], re.I
-        ) and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")):
-            m = re.match(r"UNION(\s+(ALL|DISTINCT))?\b", sql[i:], re.I)
-            out.append(sql[last:i])
-            parts.append(m.group(0))
-            last = i + m.end()
-            i = last
-            continue
-        i += 1
+    out, parts, last = [], [], 0
+    for m in _top_matches(sql, _UNION_KW):
+        out.append(sql[last:m.start()])
+        parts.append(m.group(0))
+        last = m.end()
     out.append(sql[last:])
     return (out, parts) if len(out) > 1 else ([sql], [])
 
@@ -9425,30 +9097,11 @@ def _parse_insert_values(
     )
     rows_text = m.group(4).strip()
     # split tuples at top level: (..),(..)
-    tuples = []
-    depth, buf, in_str = 0, [], None
-    for ch in rows_text:
-        if in_str:
-            buf.append(ch)
-            if ch == in_str:
-                in_str = None
-        elif ch in ("'", '"'):
-            in_str = ch
-            buf.append(ch)
-        elif ch == "(":
-            if depth == 0:
-                buf = []
-            else:
-                buf.append(ch)
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                tuples.append("".join(buf))
-            else:
-                buf.append(ch)
-        elif depth > 0:
-            buf.append(ch)
+    tuples = [
+        rows_text[i + 1:_close_paren(rows_text, i + 1)]
+        for i, _, d in _scan(rows_text) if d == 1 and rows_text[i] == "("
+    ]
+
     rows: list[list[str]] = []
     by_name = {c.name.lower(): c for c in td.columns}
     for tup in tuples:

@@ -9,16 +9,25 @@ collisions across table incarnations)."""
 
 from __future__ import annotations
 
+import ast
+import re
+from pathlib import Path
+
 import duckdb
 import pytest
 
+from stonedb_spark import dialect
 from stonedb_spark.dialect import (
+    _close_paren,
     _duck_order_nulls,
     _parse_insert_values,
     _rewrite_div,
     _rewrite_limit_comma,
     _rewrite_quoted_alias,
     _rewrite_str_num_compare,
+    _split_top_commas,
+    _split_top_unions,
+    _wrap_calls,
     build_oracle_sql,
     parse_create_table,
     rewrite_expr,
@@ -44,6 +53,75 @@ def test_split_mtr_semicolon_in_string():
     stmts = split_mtr("SELECT 'a;b';\nSELECT 2;")
     assert len(stmts) == 2
     assert stmts[0].text == "SELECT 'a;b'"
+
+
+# (argument text, its top-level comma split); each argument list is also
+# probed as a call F(...) ahead of a top-level UNION
+SCAN_CASES = [
+    ("'a\\'b,c', d", ["'a\\'b,c'", "d"]),             # escaped quote
+    ("'a'',b)', c", ["'a'',b)'", "c"]),                # doubled quote
+    ('"x),y", z', ['"x),y"', "z"]),                    # ) and , in "…"
+    ("`a(,b`, c", ["`a(,b`", "c"]),                    # backtick ident
+    ("g(a, (b, c)), d", ["g(a, (b, c))", "d"]),        # nested parens
+]
+
+
+@pytest.mark.parametrize("args,parts", SCAN_CASES)
+def test_scanner_literals_and_parens(args, parts):
+    assert _split_top_commas(args) == parts
+    sql = f"SELECT F({args}) UNION SELECT 1"
+    assert _close_paren(sql, len("SELECT F(")) == len("SELECT F(") + len(args)
+    assert _split_top_unions(sql) == (
+        [f"SELECT F({args}) ", " SELECT 1"], ["UNION"])
+    assert _wrap_calls(sql, "F", lambda inner: f"<{inner}>") == (
+        f"SELECT <{args}> UNION SELECT 1")
+
+
+def test_scanner_unclosed_paren():
+    sql = "SELECT F(a, (b, c) UNION SELECT 1"
+    assert _close_paren(sql, len("SELECT F(")) == len(sql)
+    assert _split_top_commas("f(a, b") == ["f(a, b"]
+    assert _split_top_unions(sql) == ([sql], [])
+
+
+SCRIPT_ESCAPED_CALL_ARGS = r"""
+SELECT LEFT('it\'s (x', 4) AS l, ROUND(LENGTH('a\')b'), 0) AS r,
+  DATE_ADD('2020-01-01', INTERVAL LENGTH('a\'(') DAY) AS d;
+"""
+
+
+def test_escaped_quote_in_rewritten_call_args(spark):
+    """A rewritten call's argument holding an escaped quote and a paren
+    keeps the rest of the statement (an alias was swallowed when the
+    call's close paren was searched with \\' ending the literal)."""
+    import datetime
+
+    assert script_vs_oracle(spark, SCRIPT_ESCAPED_CALL_ARGS) == [
+        ["it's", 4, datetime.date(2020, 1, 4)]
+    ]
+
+
+# A quote-state toggle or a mask over _ANY_STRLIT outside the scanner
+# section is a second definition of a string literal.
+SCANNER = {"_scan", "_open_quote", "_mask_strlits"}
+QUOTE_STATE = re.compile(
+    r"""\bin_str\b|\bquote = ch\b|\bch in \("'", '"'|\bch in "'\\"|"""
+    r"""_ANY_STRLIT\.sub\((?!"''")""")
+
+
+def test_scanner_is_the_only_literal_scan():
+    src = Path(dialect.__file__).read_text()
+    owner = {}
+    for node in ast.parse(src).body:
+        if isinstance(node, ast.FunctionDef):
+            for ln in range(node.lineno, node.end_lineno + 1):
+                owner[ln] = node.name
+    hits = [
+        f"dialect.py:{i} {owner.get(i, '<module>')}: {line.strip()}"
+        for i, line in enumerate(src.splitlines(), 1)
+        if QUOTE_STATE.search(line) and owner.get(i) not in SCANNER
+    ]
+    assert not hits, "\n".join(hits)
 
 
 def test_parse_create_table_mysql_decorations():
