@@ -3935,6 +3935,15 @@ _TRUTHY_ITEM = re.compile(
 _TRUTHY_SPLIT = re.compile(r"\s+(AND|OR|XOR)\s+", re.I)
 
 
+_ZERO_DIVISOR = re.compile(r"/\s*(0+(?:\.0*)?)(?![\w.])")
+
+
+def _nullif_zero_divisor(sql: str) -> str:
+    """MySQL x/0 is NULL; Spark ANSI throws DIVIDE_BY_ZERO — NULLIF
+    each literal zero divisor outside string literals."""
+    return _sub_outside_strings(sql, _ZERO_DIVISOR, r"/ NULLIF(\1, 0)")
+
+
 def _truthy_term(term: str) -> str:
     """One operand of a numeric logical op → boolean with MySQL
     truthiness (nonzero = true, NULL = unknown)."""
@@ -3949,10 +3958,8 @@ def _truthy_term(term: str) -> str:
     if t.upper() == "NULL":
         b = "CAST(NULL AS BOOLEAN)"
     else:
-        # MySQL x/0 is NULL; Spark ANSI throws — NULLIF the zero
-        # divisor (insert.test's ``where 1/0 or 1``)
-        t = re.sub(r"/\s*(0+(?:\.0*)?)(?![\w.])", r"/ NULLIF(\1, 0)", t)
-        b = f"(({t}) <> 0)"
+        # insert.test's ``where 1/0 or 1``
+        b = f"(({_nullif_zero_divisor(t)}) <> 0)"
     for _ in range(nots):
         b = f"(NOT {b})"
     return b
@@ -4480,6 +4487,11 @@ def _rewrite_expr(sql: str, engine: str, _nus: bool,
         # correlated scalar subqueries in JOIN ON positions
         # pre-materialize as projected columns (issue538)
         sql = _decorrelate_on_subqueries(sql)
+        if re.match(r"(?i)[\s(]*SELECT\b", sql):
+            # a SELECT's x/0 is NULL (an INSERT's literal x/0 is error
+            # 1365 or NULL by sql_mode, decided before this rewrite)
+            sql = _nullif_zero_divisor(sql)
+
     # MySQL ROUND(DECIMAL(p,s) expr, n) yields scale-n DECIMAL (renders
     # trailing zeros — tohanzi's ROUND(money, 2) = '123123.00'); both
     # engines keep the input scale.  Narrow pattern: an explicit

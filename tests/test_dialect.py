@@ -101,6 +101,15 @@ def test_escaped_quote_in_rewritten_call_args(spark):
     ]
 
 
+def test_select_constant_division_by_zero_is_null(spark):
+    """MySQL (and the DuckDB oracle) read a SELECT's x/0 as NULL; Spark's
+    ANSI mode would raise DIVIDE_BY_ZERO."""
+    [[a, c, z]] = script_vs_oracle(
+        spark, "SELECT 1/3 AS a, 7.5/2 AS c, 1/0 AS z;")
+    assert (round(a, 4), float(c)) == (0.3333, 3.75)
+    assert z != z or z is None  # NULL reads NaN in a double column
+
+
 # A quote-state toggle or a mask over _ANY_STRLIT outside the scanner
 # section is a second definition of a string literal.
 SCANNER = {"_scan", "_open_quote", "_mask_strlits"}
