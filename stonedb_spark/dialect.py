@@ -556,7 +556,6 @@ def _expand_var_recurrences(stmts: list) -> list:
         _pieces.append(masked[_last:])
         text = restore("".join(_pieces))
 
-
         if re.search(r"@\w+\s*:=", _ANY_STRLIT.sub("''", text)):
             out.append(st)  # a site survived: unsupported shape
         else:
@@ -2392,7 +2391,6 @@ def _rewrite_between_mix_duck(sql: str) -> str:
         if hm:
             k = _close_paren(sql, j + hm.end()) + 1
             high = sql[j:k]
-
         else:
             hm2 = re.match(r"[\w.`]+", sql[j:])
             if not hm2:
@@ -2747,7 +2745,6 @@ def _replace_outside_strings(sql: str, pairs: list[tuple[str, str]]) -> str:
         lambda m: new[m.group(0)])
 
 
-
 def _rewrite_logical_ops(sql: str) -> str:
     """MySQL's default sql_mode reads ``||`` as OR and ``&&`` as AND
     (PIPES_AS_CONCAT off); both engines read ``||`` as concat."""
@@ -3041,7 +3038,6 @@ def _scan_token(sql: str, start: int, depth0: int, words: tuple) -> int:
 
 _SELECT_KW = re.compile(r"(?i)\bSELECT\b")
 _GROUP_KEYS_END = re.compile(
-
     r"(?i)\)|\b(?:HAVING|ORDER|LIMIT|UNION|EXCEPT|INTERSECT)\b")
 
 
@@ -3666,7 +3662,6 @@ def _check_insert_shape(s: str) -> None:
         # the FIRST tuple (nested calls, quoted commas)
         tup = s[vm.end():_close_paren(s, vm.end())]
         arity = len(_split_top_commas(tup))
-
         if arity != len(cols):
             raise ValueError(
                 "Column count doesn't match value count "
@@ -6166,8 +6161,6 @@ def _sp_scan(text: str, i: int, kw: re.Pattern | None = None) -> int:
         f"stored program: unterminated block header {text[i:semi][:60]!r}")
 
 
-
-
 def _sp_units(text: str) -> list[str]:
     """Split a body into units: one per statement, and each block
     header ([label:] BEGIN / LOOP / REPEAT, ELSE, IF … THEN, ELSEIF …
@@ -8367,7 +8360,6 @@ def _apply_bitwise_mysql(
     return restore(sql)
 
 
-
 _ON_BARE_ATOM = re.compile(
     r"(?is)(\bON\s+)"
     r"((?:`[^`]+`|\w+)(?:\s*\.\s*(?:`[^`]+`|\w+))?)"
@@ -8752,7 +8744,6 @@ def _normalize_dml_where(
             r"(`[^`]+`|\w+)", _ANY_STRLIT.sub("''", s[:pos]))
         if _unquote_ident(r).lower() in tables
     ]
-
     if not refs:
         return s
     stub = "FROM `x` " + "".join(f"JOIN `{r}` " for r in refs)
